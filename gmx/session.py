@@ -13,9 +13,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+def usable_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the number of cores this process
+    may run on."""
+
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def app_scoped(spark: SparkSession, name: str) -> tuple[str, str]:
+    """Key for a process-lifetime memo of session-bound handles (tables,
+    persisted DataFrames): scoped to the live SparkContext's application,
+    so an entry made under an earlier, stopped session is never reused."""
+
+    return spark.sparkContext.applicationId, name
+
+
 def get_spark(app: str = "gmx", cpus: int | None = None, shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = usable_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus * 2, 8)
     # At full machine width every Arrow-stage task occupies a JVM thread AND

@@ -14,7 +14,7 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from gmx.session import get_spark
 
-    s = get_spark("gmx-tests", cpus=4, shuffle_partitions=8)
+    s = get_spark("gmx-tests", shuffle_partitions=8)  # width: SPARK_GRAFT_CPUS or nproc
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

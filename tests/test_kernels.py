@@ -353,6 +353,28 @@ def test_pruned_parse_selfclosing_straddle():
         assert pruned["standard"] == full["standard"] == "fgdc", pos
 
 
+def test_pruned_parse_quoted_gt_straddle():
+    """A '>' inside a quoted attribute value must not pass for the end of a
+    tag straddling the 512-byte feed boundary: a custom ``@attr`` property
+    on a self-closing section head (the extend_spec surface) then keeps the
+    full parse's value at every boundary position."""
+    from gmx.specs import SPECS
+    from gmx.specs.model import extend_spec
+
+    specs = {"fgdc": extend_spec(SPECS["fgdc"], simple={"my_code": ("idinfo/@code",)})}
+    tail = "<other>" + "z" * 300 + "</other>"
+    elem = '<idinfo code="a>b" pad="' + "w" * 24 + '"/>'
+    for pos in range(512 - len(elem) - 4, 516):
+        head = "<metadata><filler>"
+        body = "p" * (pos - len(head) - len("</filler>")) + "</filler>"
+        xml = head + body + elem + tail + "</metadata>"
+        assert xml.index("<idinfo") == pos
+        full = extract_record(xml, specs=specs)
+        pruned = extract_record(xml, props={"my_code"}, specs=specs)
+        assert full["my_code"] == "a>b"
+        assert pruned["my_code"] == full["my_code"], pos
+
+
 def test_pruned_parse_whitespace_close_tag():
     """A close tag with legal whitespace ("</idinfo >") must still anchor
     the cut — the section's values equal the full parse's."""

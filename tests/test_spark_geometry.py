@@ -6,6 +6,7 @@ from __future__ import annotations
 import itertools
 
 import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from gmx.corpus import bbox_halfdeg
 from gmx.geometry import (
@@ -77,14 +78,77 @@ def test_knn_exact(extents, boxes, points):
     assert got == want
 
 
-def test_knn_exact_with_forced_fallback(extents, boxes, points):
-    """Fine cells + small ring force the completeness-bound fallback path."""
+def test_knn_exact_wide_windows_level8(extents, boxes, points):
+    """Fine cells (level 8: 1.4 x 0.7 degrees) leave most cells empty, so
+    probe windows are many rings wide and the per-cell ring sizing, not
+    a dense neighbourhood, carries exactness."""
 
     pts, df = points
     want = knn_oracle(pts, boxes)
     got = {(r.point_id, r.rank, r.doc_id)
-           for r in knn_points(df, extents, level=8, ring=1).collect()}
+           for r in knn_points(df, extents, level=8).collect()}
     assert got == want
+
+
+# a coarse lattice with the poles and the antimeridian on it: equal
+# distances are common (exact in binary floating point), so the doc_id
+# tie-break decides ranks
+_LON = st.one_of(st.sampled_from([-180.0, 180.0]), st.integers(-36, 36).map(lambda v: v * 5.0))
+_LAT = st.one_of(st.sampled_from([-90.0, 90.0]), st.integers(-18, 18).map(lambda v: v * 5.0))
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    cents=st.lists(st.tuples(_LON, _LAT), max_size=12),
+    pts=st.lists(st.tuples(_LON, _LAT), min_size=1, max_size=6),
+    k=st.integers(1, 8),
+    level=st.sampled_from([1, 4, 8]),
+)
+@example(cents=[], pts=[(0.0, 0.0)], k=3, level=6)  # empty index
+@example(cents=[(10.0, 10.0)] * 3, pts=[(180.0, 90.0), (-180.0, -90.0)], k=5, level=6)
+@example(cents=[(0.0, 5.0), (5.0, 0.0), (0.0, -5.0), (-5.0, 0.0)], pts=[(0.0, 0.0)], k=2, level=4)
+# the nearest centroid sits two columns out while the point's own cell holds
+# a farther one: the probe must reach floor(D/cw)+1 columns, not floor(D/cw)
+@example(cents=[(44.5, 22.0), (-45.5, 0.0)], pts=[(0.0, 0.0)], k=1, level=3)
+def test_knn_matches_brute_force(spark, cents, pts, k, level):
+    """knn_points equals the brute-force oracle for any corpus: k above the
+    corpus size, an empty index, points on the poles and at +-180, and
+    equal-distance ties (broken by doc_id)."""
+
+    # doc ids in reverse insertion order, so the tie-break is not the
+    # order the rows happen to arrive in
+    boxes = {f"d{len(cents) - i:02d}": (x, y, x, y) for i, (x, y) in enumerate(cents)}
+    ext = spark.createDataFrame(
+        [(d, *b) for d, b in boxes.items()],
+        "doc_id string, west double, south double, east double, north double",
+    )
+    pts = [(i, x, y) for i, (x, y) in enumerate(pts)]
+    pdf = spark.createDataFrame(pts, "point_id long, lon double, lat double")
+    got = {(r.point_id, r.rank, r.doc_id)
+           for r in knn_points(pdf, ext, k=k, level=level).collect()}
+    assert got == knn_oracle(pts, boxes, k)
+
+
+def test_knn_plan_has_no_cross_join(spark, extents, points):
+    """The probe join is an equi-join at every density — dense, sparse
+    (3 docs, windows span most of the grid) and empty — so neither the
+    planned nor the final adaptive plan holds a cross product."""
+
+    _, df = points
+    sparse = spark.createDataFrame(
+        [("a", 170.0, 85.0, 170.0, 85.0), ("b", -170.0, -85.0, -170.0, -85.0),
+         ("c", 0.0, 0.0, 0.0, 0.0)],
+        "doc_id string, west double, south double, east double, north double",
+    )
+    for ext in (extents, sparse, sparse.limit(0)):
+        for level in (6, 8):
+            res = knn_points(df, ext, k=5, level=level)
+            planned = res._jdf.queryExecution().executedPlan().toString()
+            res.collect()
+            final = res._jdf.queryExecution().executedPlan().toString()
+            for plan in (planned, final):
+                assert "CartesianProduct" not in plan, plan[:3000]
+                assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
 
 
 def test_tile_join_exact(spark, extents, boxes):
@@ -585,7 +649,7 @@ def test_index_level_memoized(spark, extents, tmp_path, monkeypatch):
     # scoped to the current database so bare names cannot collide across
     # databases (r5 review)
     key = bucketed._memo_key(spark, table)
-    assert key.endswith("." + table)
+    assert key[1].endswith("." + table)
     invalidate_index_level(table)
     assert key not in bucketed._LEVEL_MEMO
     assert index_level(spark, table) == lvl
@@ -593,3 +657,21 @@ def test_index_level_memoized(spark, extents, tmp_path, monkeypatch):
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(f"DROP TABLE IF EXISTS {table}_large")
+
+
+def test_index_level_memo_scoped_to_application(spark, extents, tmp_path, monkeypatch):
+    """A level memoized under another (stopped) application is never
+    reused: the lookup re-reads the table property of the live catalog."""
+
+    from gmx.geometry import bucketed
+    from gmx.geometry.bucketed import index_level, write_centroid_index
+
+    table = "gmx_test_levelapp"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    write_centroid_index(extents, table, str(tmp_path / "lvlapp"), level=5)
+    key = bucketed._memo_key(spark, table)
+    assert key[0] == spark.sparkContext.applicationId
+    monkeypatch.setattr(bucketed, "_LEVEL_MEMO", {("local-stopped-app", key[1]): 9})
+    assert index_level(spark, table) == 5
+    assert bucketed._LEVEL_MEMO[key] == 5
+    spark.sql(f"DROP TABLE IF EXISTS {table}")

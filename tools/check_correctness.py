@@ -46,7 +46,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from gmx.session import get_spark
 
-    spark = get_spark("correctness", cpus=8)
+    spark = get_spark("correctness")  # width: SPARK_GRAFT_CPUS or nproc
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
