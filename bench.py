@@ -1,7 +1,8 @@
 """Bench harness: spatial-join + tile-assignment pipeline throughput.
 
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` (else the usable core count) and prints ONE
+JSON line:
   {"metric": ..., "value": spatial_pipeline_sec, "unit": "sec",
    "queries": {name: sec}, "sf": ..., "docs": N, "docs_per_sec": ...}
 
@@ -43,12 +44,6 @@ SPATIAL = (
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # default local[32] (the driver's config): width-32 thrash is fixed in
-    # gmx.session by spark.task.cpus=2 — each Arrow-stage task is a JVM
-    # thread + a Python worker, so 32 tasks on 32 cores ran 64 runnable
-    # threads and degenerated into kernel time (measured 44-68% sys CPU,
-    # 3-10x wall-time swings); 16 two-CPU task slots match local[16] timing
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     scale = int(os.environ.get("GMX_BENCH_SCALE", "40"))
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -63,9 +58,10 @@ def main() -> None:
         write_centroid_index,
     )
     from gmx.queries import _points, _tiles
-    from gmx.session import get_spark
+    from gmx.session import get_spark, usable_cpus
     from gmx.textops import cosine_topk, minhash_pairs
 
+    cpus = usable_cpus()  # SPARK_GRAFT_CPUS, else the usable core count
     spark = get_spark("gmx-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

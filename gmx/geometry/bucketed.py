@@ -7,6 +7,12 @@ bucketed and sorted by ``cell``; every later join keyed on ``cell`` between
 co-bucketed sides then runs with NO Exchange on the bucketed side(s) — the
 shuffle is paid once at write time, not per query.
 
+This module only stores and opens indexes: :func:`write_cell_index` writes
+the two frames of ``joins.CellIndex.build`` and :func:`open_cell_index`
+reads them back as the same ``CellIndex`` value, so every ``*_from_index``
+join is one call into the join body ``gmx.geometry.joins`` also runs on
+the fly.
+
 This is catalog-level metadata, so the index must be written with
 ``bucketBy(...).saveAsTable(...)`` (a path-only parquet write cannot carry
 bucketing info).  The tables are external (``option("path", ...)``) so the
@@ -14,7 +20,7 @@ data lives where the caller says; on a real deployment these are Iceberg
 tables with a bucket partition transform and the same join shape.
 
 The grid ``level`` the index was written at is persisted as a table
-property (``gmx.cell_level``) and read back by the join functions — a
+property (``gmx.cell_level``) and read back by :func:`open_cell_index` — a
 caller re-supplying a mismatched level would silently drop pairs (the
 reference-corner predicate compares level-tagged cell ids), so the table
 itself is the source of truth.
@@ -25,31 +31,43 @@ document at a time and has no joins).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from gmx.geometry.cellgrid import (
-    DEFAULT_LEVEL,
-    cell_id_expr,
-    cell_ix_expr,
-    cell_iy_expr,
-    point_cell_expr,
-)
+from gmx.geometry.cellgrid import DEFAULT_LEVEL
 from gmx.geometry.joins import (
     DEFAULT_LARGE_CAP,
     OVERFLOW_LEVEL,
     OVERFLOW_SALT,
+    CellIndex,
     _knn_probe,
-    _large_tier_pairs,
-    _ljoin_large,
-    _overflow_pairs,
-    _overlap,
-    _pip_overflow_hits,
-    _with_tier,
-    cover_cells,
-    tile_boxes,
-    tile_cell_hits,
+    _overlap_pairs,
+    _point_hits,
+    _small_pairs,
+    _tile_hits,
+    centroids,
 )
 from gmx.session import app_scoped
+
+
+def _write_bucketed(df: DataFrame, table: str, path: str, level: int, buckets: int) -> None:
+    """Write ``df`` as an external table bucketed and sorted by ``cell``,
+    recording the grid level and bucket count as table properties (and the
+    level in the process memo)."""
+
+    (
+        df.write.mode("overwrite")
+        .bucketBy(buckets, "cell")
+        .sortBy("cell")
+        .option("path", path)
+        .format("parquet")
+        .saveAsTable(table)
+    )
+    spark = df.sparkSession
+    spark.sql(
+        f"ALTER TABLE {table} SET TBLPROPERTIES "
+        f"('gmx.cell_level'='{level}', 'gmx.buckets'='{buckets}')"
+    )
+    _LEVEL_MEMO[_memo_key(spark, table)] = level
 
 
 def write_cell_index(
@@ -60,36 +78,16 @@ def write_cell_index(
     large_cap: int = DEFAULT_LARGE_CAP,
     buckets: int = 16,
 ) -> None:
-    """Materialize the small-tier covering index as a bucketed+sorted table.
-
-    Only the small tier is indexed (the large/split tier goes through the
-    broadcast path exactly as in the on-the-fly joins, and is stored
-    alongside as ``<table>_large`` — a tiny unbucketed table).  The grid
+    """Materialize ``CellIndex.build(extents, level, large_cap)``: the
+    small-tier covering as a bucketed+sorted table, the broadcast tier
+    alongside as ``<table>_large`` (a tiny unbucketed table).  The grid
     level and bucket count are recorded as table properties; at corpus
     scale pick buckets ~ O(cluster cores)."""
 
-    ext = _with_tier(extents, level, large_cap)
-    small = ext.filter(~F.col("is_large"))
-    idx = cover_cells(small, level)
-    spark = extents.sparkSession
+    ix = CellIndex.build(extents, level, large_cap)
+    _write_bucketed(ix.cells, table, path, level, buckets)
     (
-        idx.write.mode("overwrite")
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('gmx.cell_level'='{level}', 'gmx.buckets'='{buckets}')"
-    )
-    _LEVEL_MEMO[_memo_key(spark, table)] = level
-    large = ext.filter(F.col("is_large")).select(
-        "doc_id", "west", "south", "east", "north", "split"
-    )
-    (
-        large.write.mode("overwrite")
+        ix.large.write.mode("overwrite")
         .option("path", f"{path}_large")
         .format("parquet")
         .saveAsTable(f"{table}_large")
@@ -112,26 +110,7 @@ def write_centroid_index(
     workloads then read the centroid side of every probe join without an
     Exchange — only the (small) point stream shuffles."""
 
-    base_ext = extents.filter(F.col("part") == 0) if "part" in extents.columns else extents
-    cents = base_ext.select(
-        "doc_id",
-        ((F.col("west") + F.col("east")) / 2).alias("cx"),
-        ((F.col("south") + F.col("north")) / 2).alias("cy"),
-    ).withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
-    (
-        cents.write.mode("overwrite")
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    spark = extents.sparkSession
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('gmx.cell_level'='{level}', 'gmx.buckets'='{buckets}')"
-    )
-    _LEVEL_MEMO[_memo_key(spark, table)] = level
+    _write_bucketed(centroids(extents, level), table, path, level, buckets)
 
 
 def knn_from_index(
@@ -200,27 +179,21 @@ def index_level(spark: SparkSession, table: str) -> int:
     return level
 
 
+def open_cell_index(spark: SparkSession, table: str) -> CellIndex:
+    """The cell index :func:`write_cell_index` stored, as the value the
+    join bodies take: both tables are plain reads (the covering keeps its
+    bucket metadata) at the level recorded in the table property."""
+
+    return CellIndex(spark.table(table), spark.table(f"{table}_large"), index_level(spark, table))
+
+
 def index_self_join(spark: SparkSession, table: str) -> DataFrame:
     """The small x small overlap pairs from the bucketed index alone —
     both join inputs are bucketed scans of the same table, so the physical
     plan contains NO Exchange (asserted in tests): the per-query shuffle is
     gone."""
 
-    level = index_level(spark, table)
-    idx = spark.table(table)
-    a, b = idx.alias("a"), idx.alias("b")
-    corner_ix = cell_ix_expr(F.greatest("a.west", "b.west"), level)
-    corner_iy = cell_iy_expr(F.greatest("a.south", "b.south"), level)
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _overlap("a", "b")
-            & (F.col("a.cell") == cell_id_expr(level, corner_ix, corner_iy)),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-    )
+    return _small_pairs(open_cell_index(spark, table))
 
 
 def bbox_overlap_pairs_from_index(
@@ -230,50 +203,15 @@ def bbox_overlap_pairs_from_index(
     overflow_level: int = OVERFLOW_LEVEL,
     overflow_salt: int = OVERFLOW_SALT,
 ) -> DataFrame:
-    """Self-join the bucketed index on ``cell``: same semantics as
-    ``bbox_overlap_pairs`` (reference-point dedup, two-tier), but the
-    small x small join consumes bucket metadata — ``.explain`` shows no
-    Exchange under either join input (asserted in tests).  The shuffle was
-    paid once, at :func:`write_cell_index` time.  The large tier reuses the
-    SAME pair-assembly helpers as the on-the-fly join (_large_tier_pairs /
-    _overflow_pairs) so the dedup predicate cannot drift.
+    """``bbox_overlap_pairs`` over the stored index: the small x small join
+    consumes bucket metadata (no Exchange under either input, asserted in
+    tests) and the large tier's doc view is a filter over the index, so
+    the query pays no shuffle for the small tier.  Over ``large_budget``
+    the non-split large tier takes the salted coarse-cell join; its
+    ``limit(budget+1).count()`` probe scans the stored ``<table>_large``."""
 
-    ``large_budget`` mirrors ``bbox_overlap_pairs``: over budget the
-    non-split large tier routes through the salted coarse-cell equi-join
-    instead of a broadcast (the ``<table>_large`` side is a stored table,
-    so the ``limit(budget+1).count()`` probe is a cheap scan, not a
-    recomputation)."""
-
-    small_pairs = index_self_join(spark, table)
-
-    idx = spark.table(table)
-    large = spark.table(f"{table}_large")
-    l_ns = large.filter(~F.col("split"))
-    l_s = large.filter(F.col("split"))
-    overflow = (
-        large_budget is not None
-        and l_ns.limit(large_budget + 1).count() > large_budget
-    )
-    other_small = (
-        idx.select("doc_id", "west", "south", "east", "north")
-        .dropDuplicates(["doc_id"])  # small-tier docs carry one extent each
-        .withColumn("is_large", F.lit(False))
-        .withColumn("split", F.lit(False))
-    )
-    other = other_small.unionByName(
-        large.withColumn("is_large", F.lit(True)).select(
-            "doc_id", "west", "south", "east", "north", "is_large", "split"
-        )
-    ).withColumn(
-        "is_overflow", F.lit(overflow) & F.col("is_large") & ~F.col("split")
-    )
-    if overflow:
-        large_pairs = _overflow_pairs(
-            l_ns, other.filter(~F.col("split")), overflow_level, overflow_salt
-        )
-        split_pairs = _ljoin_large(other, l_s).dropDuplicates(["a_id", "b_id"])
-        return small_pairs.unionByName(large_pairs).unionByName(split_pairs)
-    return small_pairs.unionByName(_large_tier_pairs(other, l_ns, l_s))
+    ix = open_cell_index(spark, table)
+    return _overlap_pairs(ix, large_budget, overflow_level, overflow_salt)
 
 
 def point_in_bbox_from_index(
@@ -284,36 +222,12 @@ def point_in_bbox_from_index(
     overflow_level: int = OVERFLOW_LEVEL,
     overflow_salt: int = OVERFLOW_SALT,
 ) -> DataFrame:
-    """Points vs the bucketed index: the index side reads WITHOUT an
-    Exchange (bucket metadata); only the (small) point stream shuffles to
-    the index's bucketing.  Same semantics as ``point_in_bbox``, including
-    the count-budgeted overflow tier (``large_budget``): over budget the
-    ENTIRE stored large table probes through the shared salted coarse-cell
-    equi-join (joins._pip_overflow_hits) instead of a broadcast."""
+    """``point_in_bbox`` over the stored index: the index side reads WITHOUT
+    an Exchange (bucket metadata); only the (small) point stream shuffles
+    to the index's bucketing."""
 
-    level = index_level(spark, table)
-    idx = spark.table(table)
-    pts = points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), level))
-    contains = (
-        (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-        & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north"))
-    )
-    small_hits = pts.join(idx, on="cell").filter(contains).select("point_id", "doc_id")
-    large = spark.table(f"{table}_large")
-    if (
-        large_budget is not None
-        and large.limit(large_budget + 1).count() > large_budget
-    ):
-        large_hits = _pip_overflow_hits(points, large, overflow_level, overflow_salt)
-    else:
-        large_hits = (
-            points.join(
-                F.broadcast(large),
-                (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-                & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north")),
-            ).select("point_id", "doc_id")
-        )
-    return small_hits.unionByName(large_hits)
+    ix = open_cell_index(spark, table)
+    return _point_hits(points, ix, large_budget, overflow_level, overflow_salt)
 
 
 def tile_extent_join_from_index(
@@ -321,29 +235,8 @@ def tile_extent_join_from_index(
     tiles: DataFrame,
     table: str,
 ) -> DataFrame:
-    """Raster tiles vs the bucketed index: the (big) index side of the cell
-    equi-join reads WITHOUT an Exchange (bucket metadata); only the tiny
-    exploded tile stream shuffles.  Same semantics as ``tile_extent_join``
-    — the small tier reuses joins.tile_cell_hits (shared reference-point
-    dedup), the large tier mirrors the on-the-fly broadcast split handling
-    over ``<table>_large``."""
+    """``tile_extent_join`` over the stored index: the (big) index side of
+    the cell equi-join reads WITHOUT an Exchange (bucket metadata); only
+    the tiny exploded tile stream shuffles."""
 
-    level = index_level(spark, table)
-    tbox = tile_boxes(tiles)
-    small_hits = tile_cell_hits(tbox, spark.table(table), level)
-
-    large = spark.table(f"{table}_large")
-    large_hits = (
-        tbox.alias("t")
-        .join(F.broadcast(large.filter(~F.col("split")).alias("d")), _overlap("t", "d"))
-        .select("tile_id", "doc_id")
-    )
-    # a tile can overlap both parts of an antimeridian-crossing box: the
-    # split slice dedups separately, exactly as in tile_extent_join
-    split_hits = (
-        tbox.alias("t")
-        .join(F.broadcast(large.filter(F.col("split")).alias("d")), _overlap("t", "d"))
-        .select("tile_id", "doc_id")
-        .dropDuplicates(["tile_id", "doc_id"])
-    )
-    return small_hits.unionByName(large_hits).unionByName(split_hits)
+    return _tile_hits(tiles, open_cell_index(spark, table))

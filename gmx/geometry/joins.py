@@ -1,5 +1,12 @@
 """Spatial joins over the cell-grid index: filter-and-refine, skew-aware.
 
+Every cell join runs over one :class:`CellIndex` value — the exploded
+small-tier covering, the broadcast tier and the grid level — built from
+extents on the fly (:meth:`CellIndex.build`) or opened from the bucketed
+tables (``gmx.geometry.bucketed.open_cell_index``).  Each join (overlap,
+points, tiles) has ONE body over that value, so the tiering, salting and
+count-budgeted overflow below live in one place.
+
 All operators follow the same scale pattern (SURVEY.md §2.7):
 
 1. **Filter**: explode each extent's cell covering -> equi-join on cell id
@@ -26,6 +33,9 @@ hazard; the corpus plants one whole-world bbox per 97 docs):
 
 from __future__ import annotations
 
+import math
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -33,9 +43,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from gmx.geometry.cellgrid import (
     CELL_BASE,
     DEFAULT_LEVEL,
-    cell_id_expr,
-    cell_ix_expr,
-    cell_iy_expr,
     cells_for_ranges,
     covering_expr,
     covering_size_expr,
@@ -60,9 +67,11 @@ DEFAULT_LARGE_CAP = 64  # coverings above this many cells go to the broadcast ti
 OVERFLOW_LEVEL = 2
 OVERFLOW_SALT = 8
 
+_BOX = ["west", "south", "east", "north"]
+
 
 def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
-    size = covering_size_expr(F.col("west"), F.col("south"), F.col("east"), F.col("north"), level)
+    size = covering_size_expr(*map(F.col, _BOX), level)
     e = extents
     if "split" not in e.columns:  # extents not built by extents_df carry no parts
         e = e.withColumn("split", F.lit(False))
@@ -92,58 +101,134 @@ def tier_stats(
     )
 
 
-def _coarse_explode(df: DataFrame, level: int, extra: list[str] | None = None) -> DataFrame:
-    """Explode a bbox frame over its coarse-cell covering (overflow tier)."""
+def _explode_cover(df: DataFrame, level: int, name: str) -> DataFrame:
+    """Every row of a bbox frame, once per cell of its covering at ``level``."""
 
-    return df.select(
-        *(extra or df.columns),
-        F.explode(
-            covering_expr(F.col("west"), F.col("south"), F.col("east"), F.col("north"), level)
-        ).alias("ccell"),
-    )
+    return df.select("*", F.explode(covering_expr(*map(F.col, _BOX), level)).alias(name))
 
 
-def _salt_replicate(df: DataFrame, salt: int) -> DataFrame:
-    """Replicate index rows ``salt`` ways (fragment side of a
-    fragment-replicate join — probes route by hash, replicas by explode)."""
+def cover_cells(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
+    """Exploded (cell, doc) covering index — the tile-assignment operator.
+    ``part``/``split`` columns (antimeridian parts from extents_df) pass
+    through when present; the two parts of a crossing box cover disjoint
+    longitude ranges, so a (doc, cell) row never duplicates."""
 
-    return df.withColumn("osalt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
+    extra = [c for c in ("part", "split") if c in extents.columns]
+    return _explode_cover(extents.select("doc_id", *_BOX, *extra), level, "cell")
 
 
-def _overflow_pairs(
-    l_ns: DataFrame, others: DataFrame, overflow_level: int, salt: int
-) -> DataFrame:
-    """Coarse-cell equi-join replacing the broadcast for an over-budget
-    large tier: overflow extents (replicated ``salt`` ways) join counterpart
-    extents routed by doc-id hash; exact overlap refine + reference-point
-    dedup at the coarse level; overflow x overflow pairs emit from the
-    lexicographically-smaller side only.  ``others`` must carry
-    ``is_overflow`` marking rows that are ALSO in the overflow tier."""
+@dataclass(frozen=True)
+class CellIndex:
+    """The covering index every cell join runs over.
 
-    cols = ["doc_id", "west", "south", "east", "north"]
-    lidx = _salt_replicate(_coarse_explode(l_ns.select(*cols), overflow_level, cols), salt)
-    ridx = _coarse_explode(
-        others.select(*cols, "is_overflow"), overflow_level, cols + ["is_overflow"]
-    ).withColumn("osalt", F.pmod(F.hash("doc_id"), F.lit(salt)))
+    ``cells`` is the exploded small-tier covering (one row per doc and
+    cell); ``large`` is the broadcast tier (doc_id, west, south, east,
+    north, split): coverings above ``large_cap`` cells and every
+    antimeridian-split part; ``level`` is the grid level of ``cells``.
+    :meth:`build` computes both frames from extents;
+    ``gmx.geometry.bucketed.open_cell_index`` reads them back from the
+    tables ``write_cell_index`` stored."""
 
-    l, o = lidx.alias("l"), ridx.alias("o")
-    corner_ix = cell_ix_expr(F.greatest("l.west", "o.west"), overflow_level)
-    corner_iy = cell_iy_expr(F.greatest("l.south", "o.south"), overflow_level)
+    cells: DataFrame
+    large: DataFrame
+    level: int
+
+    @classmethod
+    def build(
+        cls, extents: DataFrame, level: int = DEFAULT_LEVEL, large_cap: int = DEFAULT_LARGE_CAP
+    ) -> CellIndex:
+        ext = _with_tier(extents, level, large_cap)
+        return cls(
+            cover_cells(ext.filter(~F.col("is_large")), level),
+            ext.filter(F.col("is_large")).select("doc_id", *_BOX, "split"),
+            level,
+        )
+
+    def docs(self) -> DataFrame:
+        """One row per extent: (doc_id, west, south, east, north, is_large,
+        split).  A small-tier doc's covering holds its (west, south) corner
+        cell exactly once, so keeping that row is a filter — no dedup
+        shuffle over the index; the large tier adds every row, both parts of
+        a split box included."""
+
+        corner = F.col("cell") == point_cell_expr(F.col("west"), F.col("south"), self.level)
+        small = self.cells.filter(corner).select(
+            "doc_id", *_BOX, F.lit(False).alias("is_large"), F.lit(False).alias("split")
+        )
+        return small.unionByName(
+            self.large.select("doc_id", *_BOX, F.lit(True).alias("is_large"), "split")
+        )
+
+
+def _overlap(a: str, b: str) -> Column:
     return (
-        l.join(
-            o,
-            (F.col("l.ccell") == F.col("o.ccell"))
-            & (F.col("l.osalt") == F.col("o.osalt"))
-            & (F.col("l.doc_id") != F.col("o.doc_id"))
-            & _overlap("l", "o")
-            & (F.col("l.ccell") == cell_id_expr(overflow_level, corner_ix, corner_iy))
-            & (~F.col("o.is_overflow") | (F.col("l.doc_id") < F.col("o.doc_id"))),
-        )
-        .select(
-            F.least("l.doc_id", "o.doc_id").alias("a_id"),
-            F.greatest("l.doc_id", "o.doc_id").alias("b_id"),
-        )
+        (F.col(f"{a}.west") <= F.col(f"{b}.east"))
+        & (F.col(f"{b}.west") <= F.col(f"{a}.east"))
+        & (F.col(f"{a}.south") <= F.col(f"{b}.north"))
+        & (F.col(f"{b}.south") <= F.col(f"{a}.north"))
     )
+
+
+def _contains() -> Column:
+    """Closed-interval point-in-box: ``lon``/``lat`` inside ``west..north``."""
+
+    return (
+        (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
+        & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north"))
+    )
+
+
+def _refine(a: str, b: str, cell: str, level: int) -> Column:
+    """Cell equi-join + exact overlap refine + reference-point dedup: an
+    overlapping pair is kept only in the ``cell`` holding its intersection's
+    (max-west, max-south) corner, so the pair stream needs no distinct."""
+
+    corner = point_cell_expr(
+        F.greatest(f"{a}.west", f"{b}.west"), F.greatest(f"{a}.south", f"{b}.south"), level
+    )
+    return (
+        (F.col(f"{a}.{cell}") == F.col(f"{b}.{cell}"))
+        & _overlap(a, b)
+        & (F.col(f"{a}.{cell}") == corner)
+    )
+
+
+def _pair(a: str, b: str) -> list[Column]:
+    return [F.least(f"{a}.doc_id", f"{b}.doc_id").alias("a_id"),
+            F.greatest(f"{a}.doc_id", f"{b}.doc_id").alias("b_id")]
+
+
+def _over_budget(tier: DataFrame, budget: int | None) -> bool:
+    """Whether ``tier`` holds more than ``budget`` rows: one
+    ``limit(budget+1).count()`` job, none when there is no budget."""
+
+    return budget is not None and tier.limit(budget + 1).count() > budget
+
+
+def _salt(index: DataFrame, probe: DataFrame, key: str, salt: int) -> tuple[DataFrame, DataFrame]:
+    """Fragment-replicate salting: ``index`` rows replicate ``salt`` ways,
+    each ``probe`` row routes to one replica by ``key`` hash; both sides
+    gain the ``osalt`` join key."""
+
+    return (
+        index.withColumn("osalt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))),
+        probe.withColumn("osalt", F.pmod(F.hash(key), F.lit(salt))),
+    )
+
+
+def _coarse_join(probe: DataFrame, key: str, large: DataFrame, level: int, salt: int) -> DataFrame:
+    """The over-budget stand-in for a large-tier broadcast: ``large``
+    explodes its coarse covering and replicates ``salt`` ways, ``probe``
+    boxes explode theirs and route by ``key`` hash, and overlapping boxes
+    meet in their coarse reference cell only.  Sides are aliased ``o``
+    (probe) and ``l`` (large)."""
+
+    lidx, oidx = _salt(
+        _explode_cover(large.select("doc_id", *_BOX), level, "ccell"),
+        _explode_cover(probe, level, "ccell"), key, salt,
+    )
+    l, o = lidx.alias("l"), oidx.alias("o")
+    return o.join(l, _refine("o", "l", "ccell", level) & (F.col("o.osalt") == F.col("l.osalt")))
 
 
 def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
@@ -151,42 +236,104 @@ def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
     the pair-dedup rules: large x large emits in one doc-id order only,
     EXCEPT counterparts living in the overflow tier (``is_overflow``), whose
     pairs with broadcast rows must emit regardless of order (the coarse
-    overflow join's right side excludes split rows).  Shared by the on-the-
-    fly joins and the bucketed-index variants so the dedup predicate cannot
-    drift between them."""
+    overflow join's probe side excludes split rows)."""
 
     o, l = o_side.alias("o"), l_side.alias("l")
+    return o.join(
+        F.broadcast(l),
+        _overlap("l", "o")
+        & (F.col("o.doc_id") != F.col("l.doc_id"))
+        & (
+            ~F.col("o.is_large")
+            | F.col("o.is_overflow")
+            | (F.col("o.doc_id") > F.col("l.doc_id"))
+        ),
+    ).select(*_pair("l", "o"))
+
+
+def _small_pairs(ix: CellIndex) -> DataFrame:
+    """small x small overlap pairs: the index self-join on ``cell``."""
+
+    a, b = ix.cells.alias("a"), ix.cells.alias("b")
+    return a.join(
+        b, _refine("a", "b", "cell", ix.level) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    ).select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+
+
+def _overlap_pairs(
+    ix: CellIndex, large_budget: int | None, overflow_level: int, overflow_salt: int
+) -> DataFrame:
+    """The overlap join body: small x small through :func:`_small_pairs`;
+    the large tier broadcast against :meth:`CellIndex.docs` (or, over
+    ``large_budget``, its non-split rows through :func:`_coarse_join`)."""
+
+    # Split-involved combinations are routed through SEPARATE (near-empty)
+    # joins and deduped there: a counterpart overlapping BOTH parts of a
+    # crossing box would otherwise emit the pair once per part combo.  The
+    # inputs are split BEFORE joining so the heavy non-split stream is joined
+    # exactly once with no dedup shuffle (filtering the join OUTPUT twice
+    # would re-execute the broadcast join per branch).
+    l_ns = ix.large.filter(~F.col("split"))
+    l_s = ix.large.filter(F.col("split"))
+    overflow = _over_budget(l_ns, large_budget)
+    # rows that live in the overflow tier (emitted there, so the split
+    # broadcast must emit their pairs with split rows regardless of doc-id
+    # order — the coarse join's probe side excludes split rows)
+    other = ix.docs().withColumn(
+        "is_overflow", F.lit(overflow) & F.col("is_large") & ~F.col("split")
+    )
+    if overflow:
+        large_pairs = (
+            _coarse_join(other.filter(~F.col("split")), "doc_id", l_ns, overflow_level, overflow_salt)
+            .filter(
+                (F.col("o.doc_id") != F.col("l.doc_id"))
+                & (~F.col("o.is_overflow") | (F.col("l.doc_id") < F.col("o.doc_id")))
+            )
+            .select(*_pair("l", "o"))
+        )
+        # split tier (still broadcast — bounded): pairs with EVERYTHING,
+        # including overflow rows in either doc-id order
+        split_pairs = _ljoin_large(other, l_s)
+    else:
+        large_pairs = _ljoin_large(other.filter(~F.col("split")), l_ns)
+        split_pairs = _ljoin_large(other.filter(F.col("split")), l_ns).unionByName(
+            _ljoin_large(other, l_s)
+        )
     return (
-        o.join(
-            F.broadcast(l),
-            _overlap("l", "o")
-            & (F.col("o.doc_id") != F.col("l.doc_id"))
-            & (
-                ~F.col("o.is_large")
-                | F.col("o.is_overflow")
-                | (F.col("o.doc_id") > F.col("l.doc_id"))
-            ),
-        )
-        .select(
-            F.least("l.doc_id", "o.doc_id").alias("a_id"),
-            F.greatest("l.doc_id", "o.doc_id").alias("b_id"),
-        )
+        _small_pairs(ix)
+        .unionByName(large_pairs)
+        .unionByName(split_pairs.dropDuplicates(["a_id", "b_id"]))
     )
 
 
-def _large_tier_pairs(other: DataFrame, l_ns: DataFrame, l_s: DataFrame) -> DataFrame:
-    """Standard (non-overflow) large-tier pair assembly: non-split large
-    rows join the non-split counterpart stream once (no dedup shuffle);
-    split-involved combinations route through separate near-empty joins and
-    dedup there."""
+def bbox_overlap_pairs(
+    extents: DataFrame,
+    level: int = DEFAULT_LEVEL,
+    large_cap: int = DEFAULT_LARGE_CAP,
+    large_budget: int | None = None,
+    overflow_level: int = OVERFLOW_LEVEL,
+    overflow_salt: int = OVERFLOW_SALT,
+) -> DataFrame:
+    """All distinct overlapping pairs (a_id < b_id) among extents.
 
-    large_pairs = _ljoin_large(other.filter(~F.col("split")), l_ns)
-    split_pairs = (
-        _ljoin_large(other.filter(F.col("split")), l_ns)
-        .unionByName(_ljoin_large(other, l_s))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    return large_pairs.unionByName(split_pairs)
+    small x small: cell equi-join + reference-point dedup (no distinct).
+    large x anything: broadcast nested-loop over the (tiny) large tier.
+
+    ``large_budget``: when set and the non-split large tier exceeds that many
+    rows, the tier is NOT broadcast — it routes through the salted
+    coarse-cell equi-join (:func:`_coarse_join`) so the broadcast size
+    stays bounded by the (rare) antimeridian-split rows alone.  Deciding
+    costs one ``limit(budget+1).count()`` job over the tier, so callers
+    should cache ``extents``; ``None`` (default) skips the probe.
+    """
+
+    ix = CellIndex.build(extents, level, large_cap)
+    return _overlap_pairs(ix, large_budget, overflow_level, overflow_salt)
+
+
+def _cell_salt(cells: DataFrame, rows_per_shard: int, max_salt: int = 32) -> int:
+    mx = cells.groupBy("cell").count().agg(F.max("count")).first()[0] or 0
+    return max(1, min(max_salt, math.ceil(mx / rows_per_shard)))
 
 
 def recommend_salt(
@@ -210,119 +357,47 @@ def recommend_salt(
     index build, not per query (it is one eager Spark job — cache
     ``extents``, like the ``large_budget`` probe)."""
 
-    import math
-
-    ext = _with_tier(extents, level, large_cap)
-    mx = (
-        cover_cells(ext.filter(~F.col("is_large")), level)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .first()["mx"]
-    ) or 0
-    return max(1, min(max_salt, math.ceil(mx / rows_per_shard)))
+    cells = CellIndex.build(extents, level, large_cap).cells
+    return _cell_salt(cells, rows_per_shard, max_salt)
 
 
-def cover_cells(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
-    """Exploded (cell, doc) covering index — the tile-assignment operator.
-    ``part``/``split`` columns (antimeridian parts from extents_df) pass
-    through when present; the two parts of a crossing box cover disjoint
-    longitude ranges, so a (doc, cell) row never duplicates."""
-
-    extra = [c for c in ("part", "split") if c in extents.columns]
-    return extents.select(
-        "doc_id", "west", "south", "east", "north", *extra,
-        F.explode(
-            covering_expr(F.col("west"), F.col("south"), F.col("east"), F.col("north"), level)
-        ).alias("cell"),
-    )
-
-
-def _overlap(a: str, b: str) -> Column:
-    return (
-        (F.col(f"{a}.west") <= F.col(f"{b}.east"))
-        & (F.col(f"{b}.west") <= F.col(f"{a}.east"))
-        & (F.col(f"{a}.south") <= F.col(f"{b}.north"))
-        & (F.col(f"{b}.south") <= F.col(f"{a}.north"))
-    )
-
-
-def bbox_overlap_pairs(
-    extents: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
+def _point_hits(
+    points: DataFrame,
+    ix: CellIndex,
+    large_budget: int | None,
+    overflow_level: int,
+    overflow_salt: int,
+    salt: int | str | None = None,
+    salt_rows_per_shard: int = 50_000,
 ) -> DataFrame:
-    """All distinct overlapping pairs (a_id < b_id) among extents.
+    """The point-in-bbox body: points probe the small tier on their one
+    cell (salted when ``salt`` > 1) and the large tier by broadcast — or,
+    over ``large_budget``, on their one coarse cell, so no dedup is needed
+    either way."""
 
-    small x small: cell equi-join + reference-point dedup (no distinct).
-    large x anything: broadcast nested-loop over the (tiny) large tier.
+    if salt == "auto":
+        salt = _cell_salt(ix.cells, salt_rows_per_shard)
+    idx = ix.cells
+    pts = points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), ix.level))
+    keys = ["cell"]
+    if salt and salt > 1:
+        idx, pts = _salt(idx, pts, "point_id", salt)
+        keys.append("osalt")
+    small_hits = pts.join(idx, on=keys).filter(_contains()).select("point_id", "doc_id")
 
-    ``large_budget``: when set and the non-split large tier exceeds that many
-    rows, the tier is NOT broadcast — it routes through the salted
-    coarse-cell equi-join (:func:`_overflow_pairs`) so the broadcast size
-    stays bounded by the (rare) antimeridian-split rows alone.  Deciding
-    costs one ``limit(budget+1).count()`` job over the tier, so callers
-    should cache ``extents``; ``None`` (default) skips the probe.
-    """
-
-    ext = _with_tier(extents, level, large_cap)
-    small = ext.filter(~F.col("is_large"))
-    large = ext.filter(F.col("is_large")).select(
-        "doc_id", "west", "south", "east", "north", "split"
-    )
-
-    idx = cover_cells(small, level)
-    a, b = idx.alias("a"), idx.alias("b")
-    corner_ix = cell_ix_expr(F.greatest("a.west", "b.west"), level)
-    corner_iy = cell_iy_expr(F.greatest("a.south", "b.south"), level)
-    small_pairs = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & _overlap("a", "b")
-            & (F.col("a.cell") == cell_id_expr(level, corner_ix, corner_iy)),
+    # split parts are plain rectangles for containment: no pair-dedup hazard
+    if _over_budget(ix.large, large_budget):
+        lidx, pts_c = _salt(
+            _explode_cover(ix.large.select("doc_id", *_BOX), overflow_level, "ccell"),
+            points.withColumn(
+                "ccell", point_cell_expr(F.col("lon"), F.col("lat"), overflow_level)
+            ),
+            "point_id", overflow_salt,
         )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-    )
-
-    # broadcast the (tiny) LARGE tier; the full extent stream stays distributed.
-    # Split-involved combinations are routed through SEPARATE (near-empty)
-    # joins and deduped there: a counterpart overlapping BOTH parts of a
-    # crossing box would otherwise emit the pair once per part combo.  The
-    # inputs are split BEFORE joining so the heavy non-split stream is joined
-    # exactly once with no dedup shuffle (filtering the join OUTPUT twice
-    # would re-execute the broadcast join per branch).
-    l_ns = large.filter(~F.col("split"))
-    l_s = large.filter(F.col("split"))
-    overflow = (
-        large_budget is not None
-        and l_ns.limit(large_budget + 1).count() > large_budget
-    )
-    other = ext.select(
-        "doc_id", "west", "south", "east", "north", "is_large", "split"
-    ).withColumn(
-        # rows that live in the overflow tier (emitted there, so the split
-        # broadcast must emit their pairs with split rows regardless of
-        # doc-id order — the coarse join's right side excludes split rows)
-        "is_overflow",
-        F.lit(overflow) & F.col("is_large") & ~F.col("split"),
-    )
-
-    if overflow:
-        # non-split large tier: salted coarse-cell join vs small + itself
-        large_pairs = _overflow_pairs(
-            l_ns, other.filter(~F.col("split")), overflow_level, overflow_salt
-        )
-        # split tier (still broadcast — bounded): pairs with EVERYTHING,
-        # including overflow rows in either doc-id order
-        split_pairs = _ljoin_large(other, l_s).dropDuplicates(["a_id", "b_id"])
-        return small_pairs.unionByName(large_pairs).unionByName(split_pairs)
-
-    return small_pairs.unionByName(_large_tier_pairs(other, l_ns, l_s))
+        large_hits = pts_c.join(lidx, on=["ccell", "osalt"]).filter(_contains())
+    else:
+        large_hits = points.join(F.broadcast(ix.large), _contains())
+    return small_hits.unionByName(large_hits.select("point_id", "doc_id"))
 
 
 def point_in_bbox(
@@ -349,70 +424,24 @@ def point_in_bbox(
     the salted coarse-cell equi-join instead of a broadcast: each point maps
     to exactly one coarse cell, so no dedup is needed."""
 
-    if salt == "auto":
-        s = recommend_salt(extents, level, large_cap, salt_rows_per_shard)
-        salt = s if s > 1 else None
-
-    ext = _with_tier(extents, level, large_cap)
-    small = ext.filter(~F.col("is_large"))
-    large = ext.filter(F.col("is_large")).select("doc_id", "west", "south", "east", "north")
-
-    idx = cover_cells(small, level)
-    pts = points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), level))
-
-    if salt:
-        idx = idx.withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        pts = pts.withColumn("salt", F.pmod(F.hash("point_id"), F.lit(salt)))
-        keys = ["cell", "salt"]
-    else:
-        keys = ["cell"]
-
-    contains = (
-        (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-        & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north"))
+    ix = CellIndex.build(extents, level, large_cap)
+    return _point_hits(
+        points, ix, large_budget, overflow_level, overflow_salt, salt, salt_rows_per_shard
     )
-    small_hits = (
-        pts.join(idx, on=keys).filter(contains).select("point_id", "doc_id")
-    )
-    if (
-        large_budget is not None
-        and large.limit(large_budget + 1).count() > large_budget
-    ):
-        large_hits = _pip_overflow_hits(points, large, overflow_level, overflow_salt)
-    else:
-        large_hits = (
-            points.join(
-                F.broadcast(large),
-                (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-                & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north")),
-            ).select("point_id", "doc_id")
-        )
-    return small_hits.unionByName(large_hits)
 
 
-def _pip_overflow_hits(
-    points: DataFrame, large: DataFrame, overflow_level: int, overflow_salt: int
-) -> DataFrame:
-    """Over-budget large-tier containment: points route to their single
-    coarse cell (no dedup needed), the large extents explode + salt-replicate
-    — shared by the on-the-fly and bucketed-index PIP joins."""
+def centroids(extents: DataFrame, level: int) -> DataFrame:
+    """The kNN centroid index (doc_id, cx, cy, cell), one row per doc: an
+    antimeridian-crossing box is represented by its eastern-hemisphere part
+    (part 0, [west, 180]) — deterministic and single-rowed, so a doc can
+    never appear twice in one point's top k."""
 
-    contains = (
-        (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-        & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north"))
-    )
-    cols = ["doc_id", "west", "south", "east", "north"]
-    lidx = _salt_replicate(
-        _coarse_explode(large.select(*cols), overflow_level, cols), overflow_salt
-    )
-    pts_c = points.withColumn(
-        "ccell", point_cell_expr(F.col("lon"), F.col("lat"), overflow_level)
-    ).withColumn("osalt", F.pmod(F.hash("point_id"), F.lit(overflow_salt)))
-    return (
-        pts_c.join(lidx, on=["ccell", "osalt"])
-        .filter(contains)
-        .select("point_id", "doc_id")
-    )
+    base_ext = extents.filter(F.col("part") == 0) if "part" in extents.columns else extents
+    return base_ext.select(
+        "doc_id",
+        ((F.col("west") + F.col("east")) / 2).alias("cx"),
+        ((F.col("south") + F.col("north")) / 2).alias("cy"),
+    ).withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
 
 
 def knn_points(
@@ -436,16 +465,7 @@ def knn_points(
     Returns (point_id, rank, doc_id, dist_sq).
     """
 
-    # one centroid per doc: an antimeridian-crossing box is represented by
-    # its eastern-hemisphere part (part 0, [west,180]) — deterministic and
-    # single-rowed, so a doc can never appear twice in one point's top-k
-    base_ext = extents.filter(F.col("part") == 0) if "part" in extents.columns else extents
-    cent_idx = base_ext.select(
-        "doc_id",
-        ((F.col("west") + F.col("east")) / 2).alias("cx"),
-        ((F.col("south") + F.col("north")) / 2).alias("cy"),
-    ).withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
-    return _knn_probe(points, cent_idx, k, level)
+    return _knn_probe(points, centroids(extents, level), k, level)
 
 
 def release_knn_caches() -> None:
@@ -553,9 +573,7 @@ def _knn_probe(points: DataFrame, cent_idx: DataFrame, k: int, level: int) -> Da
 
 def tile_boxes(tiles: DataFrame) -> DataFrame:
     """(tile_id, z, x, y) -> (tile_id, west, south, east, north): the
-    closed-form footprint of an equirectangular raster tile.  Shared by the
-    on-the-fly tile join and the bucketed-index variant so the tile
-    geometry cannot drift between them."""
+    closed-form footprint of an equirectangular raster tile."""
 
     tz = F.pow(F.lit(2.0), F.col("z"))
     return tiles.select(
@@ -567,31 +585,41 @@ def tile_boxes(tiles: DataFrame) -> DataFrame:
     )
 
 
-def tile_cell_hits(tbox: DataFrame, idx: DataFrame, level: int) -> DataFrame:
-    """Small-tier tile↔extent pairs over an exploded (cell, doc) covering
-    index: cell equi-join + exact overlap refine + reference-point dedup.
-    Shared by :func:`tile_extent_join` and the bucketed-index variant."""
+def _tile_hits(
+    tiles: DataFrame,
+    ix: CellIndex,
+    large_budget: int | None = None,
+    overflow_level: int = OVERFLOW_LEVEL,
+    overflow_salt: int = OVERFLOW_SALT,
+) -> DataFrame:
+    """The raster-tile join body: tile coverings join the small tier with
+    reference-point dedup, the non-split large tier by broadcast (or, over
+    ``large_budget``, through :func:`_coarse_join`)."""
 
-    t = (
-        tbox.withColumn(
-            "cells",
-            covering_expr(F.col("west"), F.col("south"), F.col("east"), F.col("north"), level),
+    tbox = tile_boxes(tiles)
+    t, d = _explode_cover(tbox, ix.level, "cell").alias("t"), ix.cells.alias("d")
+    small_hits = t.join(d, _refine("t", "d", "cell", ix.level)).select("tile_id", "doc_id")
+    l_ns = ix.large.filter(~F.col("split"))
+    if _over_budget(l_ns, large_budget):
+        large_hits = _coarse_join(tbox, "tile_id", l_ns, overflow_level, overflow_salt).select(
+            "o.tile_id", "l.doc_id"
         )
-        .select("tile_id", "west", "south", "east", "north", F.explode("cells").alias("cell"))
-        .alias("t")
-    )
-    d = idx.alias("d")
-    corner_ix = cell_ix_expr(F.greatest("t.west", "d.west"), level)
-    corner_iy = cell_iy_expr(F.greatest("t.south", "d.south"), level)
-    return (
-        t.join(
-            d,
-            (F.col("t.cell") == F.col("d.cell"))
-            & _overlap("t", "d")
-            & (F.col("t.cell") == cell_id_expr(level, corner_ix, corner_iy)),
+    else:
+        large_hits = (
+            tbox.alias("t")
+            .join(F.broadcast(l_ns.alias("d")), _overlap("t", "d"))
+            .select("tile_id", "doc_id")
         )
+    # a tile can overlap both parts of an antimeridian-crossing box; the
+    # split slice joins separately (near-empty input) and dedups there, so
+    # the non-split broadcast join runs once with no dedup shuffle
+    split_hits = (
+        tbox.alias("t")
+        .join(F.broadcast(ix.large.filter(F.col("split")).alias("d")), _overlap("t", "d"))
         .select("tile_id", "doc_id")
+        .dropDuplicates(["tile_id", "doc_id"])
     )
+    return small_hits.unionByName(large_hits).unionByName(split_hits)
 
 
 def tile_extent_join(
@@ -611,55 +639,5 @@ def tile_extent_join(
     through the salted coarse-cell equi-join with reference-point dedup
     (split parts stay broadcast — bounded by crossing-box rarity)."""
 
-    tbox = tile_boxes(tiles)
-
-    ext = _with_tier(extents, level, large_cap)
-    small = ext.filter(~F.col("is_large"))
-    large = ext.filter(F.col("is_large")).select(
-        "doc_id", "west", "south", "east", "north", "split"
-    )
-
-    small_hits = tile_cell_hits(tbox, cover_cells(small, level), level)
-    # a tile can overlap both parts of an antimeridian-crossing box; the
-    # split slice joins separately (near-empty input) and dedups there, so
-    # the non-split broadcast join runs once with no dedup shuffle
-    l_ns = large.filter(~F.col("split"))
-    if (
-        large_budget is not None
-        and l_ns.limit(large_budget + 1).count() > large_budget
-    ):
-        dcols = ["doc_id", "west", "south", "east", "north"]
-        didx = _salt_replicate(
-            _coarse_explode(l_ns.select(*dcols), overflow_level, dcols), overflow_salt
-        ).alias("d")
-        tcols = ["tile_id", "west", "south", "east", "north"]
-        tidx = (
-            _coarse_explode(tbox.select(*tcols), overflow_level, tcols)
-            .withColumn("osalt", F.pmod(F.hash("tile_id"), F.lit(overflow_salt)))
-            .alias("t")
-        )
-        c_ix = cell_ix_expr(F.greatest("t.west", "d.west"), overflow_level)
-        c_iy = cell_iy_expr(F.greatest("t.south", "d.south"), overflow_level)
-        large_hits = (
-            tidx.join(
-                didx,
-                (F.col("t.ccell") == F.col("d.ccell"))
-                & (F.col("t.osalt") == F.col("d.osalt"))
-                & _overlap("t", "d")
-                & (F.col("t.ccell") == cell_id_expr(overflow_level, c_ix, c_iy)),
-            )
-            .select("tile_id", "doc_id")
-        )
-    else:
-        large_hits = (
-            tbox.alias("t")
-            .join(F.broadcast(l_ns.alias("d")), _overlap("t", "d"))
-            .select("tile_id", "doc_id")
-        )
-    split_hits = (
-        tbox.alias("t")
-        .join(F.broadcast(large.filter(F.col("split")).alias("d")), _overlap("t", "d"))
-        .select("tile_id", "doc_id")
-        .dropDuplicates(["tile_id", "doc_id"])
-    )
-    return small_hits.unionByName(large_hits).unionByName(split_hits)
+    ix = CellIndex.build(extents, level, large_cap)
+    return _tile_hits(tiles, ix, large_budget, overflow_level, overflow_salt)

@@ -72,22 +72,22 @@ def test_streaming_incremental_ingest(spark, sf_dir, tmp_path):
 def test_streaming_xml_directory_incremental(spark, tmp_path):
     """Raw-XML streaming ingest is incremental: a second batch of files is
     processed without reprocessing the first (checkpointed file source)."""
-    import shutil
-    from pathlib import Path
+    from gmx.corpus import make_record, standard_of
+    from gmx.serialize import serialize
     from gmx.streaming import ingest_xml_available
 
-    src = Path("/root/reference/gis_metadata/tests/data")
     xml_dir = tmp_path / "in"; xml_dir.mkdir()
     out = str(tmp_path / "out"); ckpt = str(tmp_path / "ckpt")
 
-    shutil.copy(src / "fgdc_metadata.xml", xml_dir / "a.xml")
+    (xml_dir / "a.xml").write_text(serialize(make_record(0), standard_of(0)))  # fgdc
     ingest_xml_available(spark, str(xml_dir), out, ckpt)
     first = spark.read.parquet(out)
     assert {r.doc_id.rsplit("/", 1)[-1] for r in first.select("doc_id").collect()} == {"a"}
 
-    shutil.copy(src / "iso_metadata.xml", xml_dir / "b.xml")
+    (xml_dir / "b.xml").write_text(serialize(make_record(1), standard_of(1)))  # iso
     ingest_xml_available(spark, str(xml_dir), out, ckpt)
     both = spark.read.parquet(out)
-    got = {r.doc_id.rsplit("/", 1)[-1]: r.standard for r in both.select("doc_id", "standard").collect()}
-    assert got == {"a": "fgdc", "b": "iso"}
-    assert both.filter("title = 'Test Title'").count() == 2
+    got = {r.doc_id.rsplit("/", 1)[-1]: (r.standard, r.title)
+           for r in both.select("doc_id", "standard", "title").collect()}
+    assert got == {"a": ("fgdc", make_record(0)["title"]), "b": ("iso", make_record(1)["title"])}
+    assert both.count() == 2  # the first file was not reprocessed

@@ -9,15 +9,8 @@ import __spark_entry__ as entry
 
 
 def test_oracle_keys_subset_of_queries():
-    qs = set(entry.queries())
-    osql = entry.oracle_sql()
-    assert set(osql) <= qs
-    missing = qs - set(osql)
-    # only hash/codec-based ops may lack an oracle
-    assert missing <= {
-        "text_fingerprint", "dedup_minhash_lsh", "dedup_simhash",
-        "media_decode_stub", "ann_lsh_topk", "ann_ivf_topk",
-    }
+    # every contract query has a DuckDB twin, and every twin a query
+    assert set(entry.oracle_sql()) == set(entry.queries())
 
 
 def test_oracle_sql_is_runnable_duckdb(sf_dir):

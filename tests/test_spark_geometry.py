@@ -7,6 +7,7 @@ import itertools
 
 import pytest
 from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from gmx.corpus import bbox_halfdeg
 from gmx.geometry import (
@@ -527,6 +528,66 @@ def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path):
     assert set(got_tiles) == want_tiles
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(f"DROP TABLE IF EXISTS {table}_large")
+
+
+def test_cell_index_doc_view(spark, extents, tmp_path):
+    """CellIndex.docs() yields every small-tier doc exactly once plus every
+    large-tier row, for a built and for an opened index alike — on cell
+    edges, point boxes, the +-180/+-90 clamps and antimeridian splits — and
+    on an opened index it is a filter over the stored tables: no Exchange."""
+
+    from gmx.geometry.bucketed import open_cell_index, write_cell_index
+    from gmx.geometry.joins import CellIndex
+
+    # level-4 cells are 22.5 x 11.25 degrees
+    boxes = {
+        "edge_w": (22.5, 10.0, 30.0, 20.0),       # west on a cell edge
+        "edge_s": (10.0, 11.25, 20.0, 15.0),      # south on a cell edge
+        "edge_all": (-45.0, -22.5, -22.5, 0.0),   # every side on an edge
+        "pt": (5.0, 5.0, 5.0, 5.0),
+        "pt_edge": (0.0, 0.0, 0.0, 0.0),          # point on a cell corner
+        "pt_ne": (180.0, 90.0, 180.0, 90.0),      # clamped into the last cell
+        "pt_sw": (-180.0, -90.0, -180.0, -90.0),
+        "ne": (170.0, 80.0, 180.0, 90.0),
+        "sw": (-180.0, -90.0, -170.0, -80.0),
+        "cross": (170.0, -10.0, -170.0, 10.0),    # antimeridian split
+        "cross_line": (180.0, 0.0, -180.0, 5.0),  # split into two slivers
+        "world": (-180.0, -90.0, 180.0, 90.0),    # large tier
+    }
+    meta = spark.createDataFrame(
+        [(d, "iso", tuple(str(v) for v in b)) for d, b in boxes.items()],
+        "doc_id string, standard string, "
+        "bounding_box struct<west:string,south:string,east:string,north:string>",
+    )
+    small_ids = set(boxes) - {"cross", "cross_line", "world"}
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("doc_id", "west", "south", "east", "north",
+                                                  "split").collect())
+
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for name, ext in (("gmx_test_docview", extents_df(meta)), ("gmx_test_docview_sf", extents)):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_large")
+        write_cell_index(ext, name, str(tmp_path / name))
+        for ix in (CellIndex.build(ext), open_cell_index(spark, name)):
+            docs = ix.docs()
+            small = [r.doc_id for r in docs.filter(~F.col("is_large")).collect()]
+            assert len(small) == len(set(small))  # one row per small-tier doc
+            assert set(small) == {r.doc_id for r in ix.cells.select("doc_id").collect()}
+            assert rows(docs.filter("is_large")) == rows(ix.large)
+            assert rows(docs) == rows(ext)  # every extent row, once
+            if name == "gmx_test_docview":
+                assert set(small) == small_ids
+
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            plan = open_cell_index(spark, name).docs()._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, plan[:3000]
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        spark.sql(f"DROP TABLE IF EXISTS {name}_large")
 
 
 def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path):

@@ -6,8 +6,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gmx import pipeline as P
-from gmx.corpus import catalog_attributes, catalog_kind, make_record
+from gmx.corpus import catalog_attributes, catalog_kind, make_record, standard_of
 from gmx.extract import finish_attributes
+from gmx.serialize import serialize
+
+# an XML declaration the encoding tests rewrite to declare other charsets
+DECL = "<?xml version='1.0' encoding='UTF-8'?>\n"
+
+
+def xml_doc(i: int) -> str:
+    """Synthesized metadata document of record ``i`` in its own standard
+    (fgdc, iso, arcgis for i % 3 == 0, 1, 2)."""
+    return serialize(make_record(i), standard_of(i))
 
 
 def golden_for(i: int) -> dict:
@@ -79,23 +89,20 @@ def test_pruned_pipeline_bbox_skips_catalog(spark, sf_dir):
 def test_ingest_reference_xml_directory(spark, tmp_path):
     """Reference-input compatibility: a directory of raw metadata XML files
     (the reference's native input) ingests into the span corpus and extracts
-    the reference's golden values unchanged."""
-    import shutil
-    from pathlib import Path
-    from pyspark.sql import functions as F
+    each document's own values unchanged."""
     from gmx import pipeline as P
     from gmx.ingest import corpus_from_xml_files
 
-    src = Path("/root/reference/gis_metadata/tests/data")
-    for name in ("fgdc_metadata.xml", "iso_metadata.xml", "arcgis_metadata.xml"):
-        shutil.copy(src / name, tmp_path / name)
+    names = {"fgdc_metadata": 0, "iso_metadata": 1, "arcgis_metadata": 2}
+    for name, i in names.items():
+        (tmp_path / f"{name}.xml").write_text(xml_doc(i))
 
     corpus = corpus_from_xml_files(spark, str(tmp_path))
     meta = P.metadata_from_corpus(corpus, persist=False)
     rows = {r.doc_id.rsplit("/", 1)[-1]: r for r in meta.select("doc_id", "standard", "title").collect()}
     # doc_id is the full path sans extension (collision-free); stems here
-    assert set(rows) == {"fgdc_metadata", "iso_metadata", "arcgis_metadata"}
-    assert all(r.title == "Test Title" for r in rows.values())
+    assert set(rows) == set(names)
+    assert all(rows[n].title == make_record(i)["title"] for n, i in names.items())
     assert {r.standard for r in rows.values()} == {"fgdc", "iso", "arcgis"}
 
 
@@ -103,7 +110,7 @@ def test_ingest_xml_strings(spark):
     from gmx import pipeline as P
     from gmx.ingest import corpus_from_xml_strings
 
-    xml = open("/root/reference/gis_metadata/tests/data/fgdc_metadata.xml").read()
+    xml = xml_doc(0)
     corpus = corpus_from_xml_strings(spark, [("d1", xml), ("d2", "<not-metadata/>")])
     meta = P.extract_wide(P.with_document_text(corpus))
     got = {r.doc_id: (r.standard, r.error) for r in meta.select("doc_id", "standard", "error").collect()}
@@ -115,15 +122,14 @@ def test_ingest_encodings_and_case(spark, tmp_path):
     """Ingest handles UTF-8 BOMs, declared latin-1, UTF-16 BOMs, and
     case-insensitive .XML extensions — and path-based doc_ids keep
     same-named files in different directories distinct."""
-    from pathlib import Path
     from gmx import pipeline as P
     from gmx.ingest import corpus_from_xml_files
 
-    base = Path("/root/reference/gis_metadata/tests/data/fgdc_metadata.xml").read_text()
+    base = DECL + xml_doc(0)
     (tmp_path / "bom.xml").write_bytes(b"\xef\xbb\xbf" + base.encode("utf-8"))
     latin = base.replace("encoding='UTF-8'", "encoding='ISO-8859-1'").replace(
-        "Test Abstract", "Résumé")
-    assert "ISO-8859-1" in latin
+        make_record(0)["abstract"], "Résumé")
+    assert "ISO-8859-1" in latin and "Résumé" in latin
     (tmp_path / "latin.XML").write_bytes(latin.encode("iso-8859-1"))
     (tmp_path / "utf16.xml").write_bytes(base.encode("utf-16"))  # with BOM
     (tmp_path / "notes.txt").write_text("not xml")
@@ -139,6 +145,7 @@ def test_ingest_encodings_and_case(spark, tmp_path):
     by_stem = {d.rsplit("/", 1)[-1]: r for d, r in rows.items()}
     assert by_stem["latin"].abstract == "Résumé"
     assert by_stem["utf16"].standard == "fgdc"
+    assert by_stem["utf16"].abstract == make_record(0)["abstract"]
     assert by_stem["bom"].standard == "fgdc"
 
 
@@ -146,14 +153,15 @@ def test_ingest_unsupported_declared_encoding_errors(spark, tmp_path):
     """A file declaring a charset the JVM decode set can't honor must yield
     a readable error row, not silent UTF-8 mojibake; a declared us-ascii
     file decodes fine."""
-    from pathlib import Path
     from gmx import pipeline as P
     from gmx.ingest import corpus_from_xml_files
 
-    base = Path("/root/reference/gis_metadata/tests/data/fgdc_metadata.xml").read_text()
+    base = DECL + xml_doc(0)
     sjis = base.replace("encoding='UTF-8'", "encoding='Shift_JIS'")
+    assert "Shift_JIS" in sjis
     (tmp_path / "sjis.xml").write_bytes(sjis.encode("shift_jis"))
     ascii_doc = base.replace("encoding='UTF-8'", "encoding='US-ASCII'").replace("é", "e")
+    assert "US-ASCII" in ascii_doc
     (tmp_path / "plain.xml").write_bytes(ascii_doc.encode("ascii", errors="replace"))
 
     corpus = corpus_from_xml_files(spark, str(tmp_path))
@@ -161,23 +169,21 @@ def test_ingest_unsupported_declared_encoding_errors(spark, tmp_path):
     rows = {r.doc_id.rsplit("/", 1)[-1]: r for r in meta.select("doc_id", "standard", "error", "title").collect()}
     assert "unsupported declared encoding: shift_jis" in rows["sjis"].error
     assert rows["sjis"].standard == ""
-    assert rows["plain"].standard == "fgdc" and rows["plain"].title == "Test Title"
+    assert rows["plain"].standard == "fgdc"
+    assert rows["plain"].title == make_record(0)["title"]
 
 
 def test_write_xml_files_round_trip(spark, tmp_path):
     """S5 sink with encoding control: serialize -> write .xml files in
-    latin-1 -> re-ingest -> identical golden values (reference
+    latin-1 -> re-ingest -> identical values (reference
     write(out_file_or_path, encoding), metadata_parser.py:377-391)."""
-    import shutil
-    from pathlib import Path
     from gmx import pipeline as P
     from gmx.convert import serialize_df
     from gmx.ingest import corpus_from_xml_files, write_xml_files
 
-    src = Path("/root/reference/gis_metadata/tests/data")
     in_dir = tmp_path / "in"; in_dir.mkdir()
-    for name in ("fgdc_metadata.xml", "iso_metadata.xml"):
-        shutil.copy(src / name, in_dir / name)
+    for name, i in (("fgdc_metadata", 0), ("iso_metadata", 1)):
+        (in_dir / f"{name}.xml").write_text(xml_doc(i))
 
     meta = P.metadata_from_corpus(corpus_from_xml_files(spark, str(in_dir)), persist=False)
     out_dir = tmp_path / "out"
@@ -191,22 +197,26 @@ def test_write_xml_files_round_trip(spark, tmp_path):
     back = P.metadata_from_corpus(corpus_from_xml_files(spark, str(out_dir)), persist=False)
     rows = back.select("standard", "title", "abstract").collect()
     assert {r.standard for r in rows} == {"fgdc", "iso"}
-    assert all(r.title == "Test Title" and r.abstract == "Test Abstract" for r in rows)
+    assert {(r.title, r.abstract) for r in rows} == {
+        (make_record(i)["title"], make_record(i)["abstract"]) for i in (0, 1)
+    }
 
 
 def test_distributed_custom_property(spark, tmp_path):
     """Extension surface through the Spark engine: custom spec + extra
-    schema ride the same Arrow extraction pass."""
-    import shutil
-    from pathlib import Path
+    schema ride the same Arrow extraction pass — the first path when the
+    document has it, the fallback path otherwise."""
     from pyspark.sql.types import StringType, StructField
     from gmx import pipeline as P
     from gmx.ingest import corpus_from_xml_files
     from gmx.specs import SPECS
     from gmx.specs.model import extend_spec
 
-    shutil.copy("/root/reference/gis_metadata/tests/data/fgdc_metadata.xml",
-                tmp_path / "d.xml")
+    (tmp_path / "d0.xml").write_text(xml_doc(0))
+    published = xml_doc(3).replace(
+        "<origin>", "<pubinfo><publish>Publisher 3</publish></pubinfo><origin>", 1)
+    assert "Publisher 3" in published
+    (tmp_path / "d3.xml").write_text(published)
     custom = {"fgdc": extend_spec(SPECS["fgdc"], simple={"publisher_name": (
         "idinfo/citation/citeinfo/pubinfo/publish", "idinfo/citation/citeinfo/origin")})}
     meta = P.metadata_from_corpus(
@@ -215,5 +225,7 @@ def test_distributed_custom_property(spark, tmp_path):
         specs=custom,
         extra_schema=[StructField("publisher_name", StringType())],
     )
-    row = meta.select("standard", "publisher_name").collect()[0]
-    assert (row.standard, row.publisher_name) == ("fgdc", "Test Originators")
+    rows = {r.doc_id.rsplit("/", 1)[-1]: (r.standard, r.publisher_name)
+            for r in meta.select("doc_id", "standard", "publisher_name").collect()}
+    assert rows == {"d0": ("fgdc", make_record(0)["originators"]),
+                    "d3": ("fgdc", "Publisher 3")}
