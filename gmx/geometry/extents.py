@@ -5,25 +5,29 @@ this is the first place values become doubles.  Validation follows SURVEY §2.7:
 reject lon outside [-180,180], lat outside [-90,90], south>north; west>east is
 *not* rejected — it is an antimeridian-crossing box and is split into two rows
 (``part`` column 0/1) so every downstream operator sees west<=east.
+
+The split is one ``Generate`` over the validated rows, not a union of filtered
+copies: Catalyst cannot push filters through the opaque ``mapInPandas``
+extraction node, so each union branch would re-run the extraction pass.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+_SIDES = ("west", "south", "east", "north")
+
+
+def _typed_box() -> list:
+    """The four ``bounding_box`` sides as doubles (null when not numeric)."""
+    return [F.col(f"bounding_box.{s}").try_cast("double").alias(s) for s in _SIDES]
+
 
 def extents_df(meta: DataFrame, split_antimeridian: bool = True) -> DataFrame:
     """(doc_id, west, south, east, north) doubles from ``bounding_box``;
     invalid rows are dropped (use :func:`quarantine_df` to collect them)."""
 
-    e = meta.select(
-        "doc_id",
-        "standard",
-        F.col("bounding_box.west").try_cast("double").alias("west"),
-        F.col("bounding_box.south").try_cast("double").alias("south"),
-        F.col("bounding_box.east").try_cast("double").alias("east"),
-        F.col("bounding_box.north").try_cast("double").alias("north"),
-    ).filter(
+    e = meta.select("doc_id", "standard", *_typed_box()).filter(
         F.col("west").isNotNull() & F.col("south").isNotNull()
         & F.col("east").isNotNull() & F.col("north").isNotNull()
     )
@@ -43,25 +47,17 @@ def extents_df(meta: DataFrame, split_antimeridian: bool = True) -> DataFrame:
     # [-180,east] (part 1).  ``split`` marks both rows of a crossing box so
     # pair-emitting joins can dedup pairs a counterpart reaches via BOTH
     # parts; non-crossing rows are part 0, split=false.
+    def part(west, east, n):
+        return F.struct(west.alias("west"), east.alias("east"), F.lit(n).alias("part"))
+
     crossing = F.col("west") > F.col("east")
-    whole = (
-        e.filter(~crossing)
-        .withColumn("part", F.lit(0))
-        .withColumn("split", F.lit(False))
-    )
-    left = (
-        e.filter(crossing)
-        .withColumn("east", F.lit(180.0))
-        .withColumn("part", F.lit(0))
-        .withColumn("split", F.lit(True))
-    )
-    right = (
-        e.filter(crossing)
-        .withColumn("west", F.lit(-180.0))
-        .withColumn("part", F.lit(1))
-        .withColumn("split", F.lit(True))
-    )
-    return whole.unionByName(left).unionByName(right)
+    parts = F.when(
+        crossing,
+        F.array(part(F.col("west"), F.lit(180.0), 0), part(F.lit(-180.0), F.col("east"), 1)),
+    ).otherwise(F.array(part(F.col("west"), F.col("east"), 0)))
+    return e.select(
+        "doc_id", "standard", "south", "north", crossing.alias("split"), F.inline(parts)
+    ).select("doc_id", "standard", *_SIDES, "part", "split")
 
 
 def quarantine_df(meta: DataFrame) -> DataFrame:
@@ -70,12 +66,7 @@ def quarantine_df(meta: DataFrame) -> DataFrame:
     route rows instead of raising)."""
 
     b = meta.select(
-        "doc_id",
-        F.col("bounding_box.west").try_cast("double").alias("west"),
-        F.col("bounding_box.south").try_cast("double").alias("south"),
-        F.col("bounding_box.east").try_cast("double").alias("east"),
-        F.col("bounding_box.north").try_cast("double").alias("north"),
-        F.col("bounding_box").isNotNull().alias("has_box"),
+        "doc_id", *_typed_box(), F.col("bounding_box").isNotNull().alias("has_box")
     )
     bad = (
         F.col("has_box")

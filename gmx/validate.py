@@ -14,6 +14,8 @@ implemented here:
 - Q6 date-type enum + cardinality matrix (utils.py:599-641)
 - bounding-box numeric/range rules (SURVEY §2.7; see also geometry.extents)
 - emptiness/shape rules for complex lists (labels present, etc.)
+The report evaluates every rule in one projection and explodes the hits with
+one ``Generate``, so an unpersisted ``meta`` (an extraction pass) runs once.
 Q2 (required-property schema completeness, utils.py:672-685) is a driver-side
 plan assertion: validate_schema raises before any job runs.
 """
@@ -40,9 +42,9 @@ def validate_schema(meta: DataFrame, required: tuple[str, ...] = SUPPORTED_PROPS
         raise SchemaValidationError(f"Missing property names: {','.join(missing)}")
 
 
-def _violation(df: DataFrame, cond, prop: str, rule: str, detail) -> DataFrame:
-    return df.filter(cond).select(
-        "doc_id",
+def _rule(hit, prop: str, rule: str, detail):
+    return F.struct(
+        hit.alias("hit"),
         F.lit(prop).alias("property"),
         F.lit(rule).alias("rule"),
         detail.cast("string").alias("detail"),
@@ -54,16 +56,19 @@ def validation_report(meta: DataFrame) -> DataFrame:
 
     n_vals = F.coalesce(F.size("dates.values"), F.lit(0))
     dtype = F.coalesce(F.col("dates.type"), F.lit(""))
+    has_box = F.col("bounding_box").isNotNull()
+    west, south, east, north = (
+        F.col(f"bounding_box.{s}").try_cast("double") for s in ("west", "south", "east", "north")
+    )
 
-    parts = [
+    rules = F.array(
         # Q6: date type enum
-        _violation(
-            meta, F.col("dates").isNotNull() & ~dtype.isin(*DATE_TYPES),
+        _rule(
+            F.col("dates").isNotNull() & ~dtype.isin(*DATE_TYPES),
             "dates", "type_not_in_enum", dtype,
         ),
         # Q6: cardinality matrix — missing=0, single=1, range=2, multiple>=2
-        _violation(
-            meta,
+        _rule(
             F.col("dates").isNotNull()
             & (
                 ((dtype == "") & (n_vals != 0))
@@ -74,48 +79,33 @@ def validation_report(meta: DataFrame) -> DataFrame:
             "dates", "cardinality_mismatch", F.concat_ws(":", dtype, n_vals),
         ),
         # bbox numeric + range rules
-        _violation(
-            meta,
-            F.col("bounding_box").isNotNull()
-            & (
-                F.col("bounding_box.west").try_cast("double").isNull()
-                | F.col("bounding_box.east").try_cast("double").isNull()
-                | F.col("bounding_box.south").try_cast("double").isNull()
-                | F.col("bounding_box.north").try_cast("double").isNull()
-            ),
-            "bounding_box", "not_numeric",
-            F.to_json("bounding_box"),
+        _rule(
+            has_box & (west.isNull() | east.isNull() | south.isNull() | north.isNull()),
+            "bounding_box", "not_numeric", F.to_json("bounding_box"),
         ),
-        _violation(
-            meta,
-            F.col("bounding_box").isNotNull()
-            & F.col("bounding_box.west").try_cast("double").isNotNull()
+        _rule(
+            has_box
+            & west.isNotNull()
             & (
-                (F.abs(F.col("bounding_box.west").try_cast("double")) > 180)
-                | (F.abs(F.col("bounding_box.east").try_cast("double")) > 180)
-                | (F.abs(F.col("bounding_box.south").try_cast("double")) > 90)
-                | (F.abs(F.col("bounding_box.north").try_cast("double")) > 90)
-                | (
-                    F.col("bounding_box.south").try_cast("double")
-                    > F.col("bounding_box.north").try_cast("double")
-                )
+                (F.abs(west) > 180) | (F.abs(east) > 180)
+                | (F.abs(south) > 90) | (F.abs(north) > 90)
+                | (south > north)
             ),
             "bounding_box", "out_of_range", F.to_json("bounding_box"),
         ),
         # attributes must carry a label (reference requires str label at write)
-        _violation(
-            meta,
+        _rule(
             F.exists("attributes", lambda a: a["label"] == ""),
             "attributes", "empty_label", F.size("attributes"),
         ),
         # ingest errors routed rather than raised (NoContent/InvalidContent)
-        _violation(meta, F.col("error") != "", "_document", "ingest_error", F.col("error")),
-    ]
+        _rule(F.col("error") != "", "_document", "ingest_error", F.col("error")),
+    )
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # One Generate over the hits (a null rule result drops, as a filter
+    # would), not a union of filtered copies: each branch of a union would
+    # re-run an unpersisted extraction pass under ``meta``.
+    return meta.select("doc_id", F.inline(F.filter(rules, lambda v: v["hit"]))).drop("hit")
 
 
 def quarantine_split(meta: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -225,6 +225,69 @@ def test_antimeridian_crossing_boxes(spark):
     assert len(res) == len({(r.point_id, r.doc_id) for r in res}) == 6
 
 
+_COORD = st.one_of(
+    st.none(),
+    st.sampled_from(["180", "-180", "180.0", "-180.0", "90", "-90", "0", "junk", "", "1.5x"]),
+    st.floats(-400, 400, allow_nan=False).map(repr),
+)
+
+
+def _py_extents(rows, split_antimeridian):
+    """Pure-Python model of extents_df over (doc_id, standard, box) rows."""
+    out = []
+    for doc_id, standard, box in rows:
+        try:
+            w, s, e, n = (float(v) for v in box)
+        except (TypeError, ValueError):
+            continue
+        if not (-180 <= w <= 180 and -180 <= e <= 180 and s >= -90 and n <= 90 and s <= n):
+            continue
+        if not split_antimeridian:
+            if w <= e:
+                out.append((doc_id, standard, w, s, e, n))
+        elif w > e:
+            out += [(doc_id, standard, w, s, 180.0, n, 0, True),
+                    (doc_id, standard, -180.0, s, e, n, 1, True)]
+        else:
+            out.append((doc_id, standard, w, s, e, n, 0, False))
+    return sorted(out)
+
+
+@settings(max_examples=25, deadline=None)
+@given(boxes=st.lists(st.tuples(_COORD, _COORD, _COORD, _COORD), max_size=12))
+@example(boxes=[("180", "0", "-180", "1"), ("170", "-10", "-170", "10"), ("-180", "0", "180", "0")])
+@example(boxes=[("10", "5", "20", "1"), ("200", "0", "10", "1"), ("0", "-91", "1", "0"),
+                ("0", "0", "1", "91"), ("junk", "0", "1", "1"), (None, "0", "1", "1")])
+def test_extents_match_python_split(spark, boxes):
+    """extents_df rows equal a pure-Python validate-and-split, with and
+    without the antimeridian split: crossing boxes, the 180/-180 edges,
+    non-numeric strings, nulls, out-of-range values and south > north."""
+
+    rows = [(f"doc-{i}", "iso", b) for i, b in enumerate(boxes)] + [("doc-null", "iso", None)]
+    meta = spark.createDataFrame(
+        rows,
+        "doc_id string, standard string, "
+        "bounding_box struct<west:string,south:string,east:string,north:string>",
+    )
+    for split in (True, False):
+        got = sorted(tuple(r) for r in extents_df(meta, split_antimeridian=split).collect())
+        assert got == _py_extents(rows, split)
+
+
+def test_extents_plan_is_one_extraction_pass(spark, sf_dir, tmp_path):
+    """The antimeridian split is one Generate over ONE extraction node: an
+    unpersisted metadata input is not re-run per branch of a union."""
+    from gmx import pipeline as P
+
+    P.corpus_df(spark, sf_dir).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))  # a table, as in production
+    ext = extents_df(P.metadata_from_corpus(corpus, persist=False, props={"bounding_box"}))
+
+    plan = ext._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan and "Generate" in plan, plan
+
+
 def test_count_budgeted_overflow_tier(extents, boxes, points, spark):
     """large_budget=0 forces the whole-world tier (planted 1/97 in the
     corpus) off the broadcast and through the salted coarse-cell equi-join;

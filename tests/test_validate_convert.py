@@ -50,6 +50,21 @@ def test_violations_detected_and_quarantined(spark, metadata):
     assert clean.count() == metadata.count()
 
 
+def test_report_plan_is_one_extraction_pass(spark, sf_dir, tmp_path):
+    """Every rule is one Generate over ONE extraction node: an unpersisted
+    extraction output is not re-run per rule."""
+    from gmx import pipeline as P
+
+    P.corpus_df(spark, sf_dir).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))  # a table, as in production
+    report = validation_report(P.extract_wide(P.with_document_text(corpus)))
+
+    plan = report._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Union" not in plan and "Generate" in plan, plan
+    assert report.count() == 0
+
+
 @pytest.mark.parametrize("target", ["iso", "arcgis", "fgdc"])
 def test_conversion_round_trip_equality(metadata, target):
     """Q1: converting the whole corpus to one dialect preserves every

@@ -13,6 +13,7 @@ from __future__ import annotations
 import hashlib
 import sys
 import time
+from pathlib import Path
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -42,7 +43,7 @@ def main() -> int:
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))  # this checkout
     import __spark_entry__ as entrymod
     from gmx.session import get_spark
 
