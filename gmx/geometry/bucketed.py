@@ -23,7 +23,12 @@ The grid ``level`` the index was written at is persisted as a table
 property (``gmx.cell_level``) and read back by :func:`open_cell_index` — a
 caller re-supplying a mismatched level would silently drop pairs (the
 reference-corner predicate compares level-tagged cell ids), so the table
-itself is the source of truth.
+itself is the source of truth.  The centroid index also records its
+per-occupied-cell centroid counts (``gmx.cell_counts``, at most
+min(docs, 4^level) ``ix:iy:count`` entries), counted at write time over the
+written table; :func:`knn_from_index` sizes its probe windows from them, so
+opening an index and building any ``*_from_index`` plan launches no Spark
+job.
 
 Reference: none (north-rule scale mechanism; the reference processes one
 document at a time and has no joins).
@@ -31,6 +36,7 @@ document at a time and has no joins).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from gmx.geometry.cellgrid import DEFAULT_LEVEL
@@ -44,15 +50,21 @@ from gmx.geometry.joins import (
     _point_hits,
     _small_pairs,
     _tile_hits,
+    cell_counts,
     centroids,
 )
 from gmx.session import app_scoped
 
 
-def _write_bucketed(df: DataFrame, table: str, path: str, level: int, buckets: int) -> None:
+def _write_bucketed(
+    df: DataFrame, table: str, path: str, level: int, buckets: int, with_counts: bool = False
+) -> None:
     """Write ``df`` as an external table bucketed and sorted by ``cell``,
     recording the grid level and bucket count as table properties (and the
-    level in the process memo)."""
+    level in the process memo).  ``with_counts`` also records the per-cell
+    row counts (``gmx.cell_counts``), aggregated over the written table:
+    grouping by the bucket column is one stage with no Exchange, and it
+    counts exactly the rows readers will see."""
 
     (
         df.write.mode("overwrite")
@@ -63,11 +75,16 @@ def _write_bucketed(df: DataFrame, table: str, path: str, level: int, buckets: i
         .saveAsTable(table)
     )
     spark = df.sparkSession
-    spark.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('gmx.cell_level'='{level}', 'gmx.buckets'='{buckets}')"
-    )
-    _LEVEL_MEMO[_memo_key(spark, table)] = level
+    props = {"gmx.cell_level": level, "gmx.buckets": buckets}
+    if with_counts:
+        counts = cell_counts(spark.table(table))
+        props["gmx.cell_counts"] = ",".join(f"{ix}:{iy}:{c}" for ix, iy, c in counts.tolist())
+    listed = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
+    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({listed})")
+    key = _memo_key(spark, table)
+    _LEVEL_MEMO[key] = level
+    if with_counts:
+        _COUNTS_MEMO[key] = counts
 
 
 def write_cell_index(
@@ -102,7 +119,9 @@ def write_centroid_index(
     buckets: int = 16,
 ) -> None:
     """Materialize the kNN centroid index (doc_id, cx, cy, cell) bucketed +
-    sorted by ``cell``.
+    sorted by ``cell``, with its per-occupied-cell centroid counts recorded
+    as table property ``gmx.cell_counts`` (one aggregate over the written
+    table, run here once instead of on every kNN call).
 
     One row per doc (antimeridian boxes contribute their eastern part, same
     convention as :func:`gmx.geometry.joins.knn_points`); the finer default
@@ -110,7 +129,7 @@ def write_centroid_index(
     workloads then read the centroid side of every probe join without an
     Exchange — only the (small) point stream shuffles."""
 
-    _write_bucketed(centroids(extents, level), table, path, level, buckets)
+    _write_bucketed(centroids(extents, level), table, path, level, buckets, with_counts=True)
 
 
 def knn_from_index(
@@ -121,22 +140,27 @@ def knn_from_index(
 ) -> DataFrame:
     """kNN against the bucketed centroid index: the same one-pass exact core
     (``joins._knn_probe``) and results as ``knn_points``, at the grid level
-    recorded in the table property.  Both index reads consume bucket
-    metadata — the per-cell count aggregate groups by the bucket column and
-    the probe join reads the centroid side in bucket order — so only the
-    point stream shuffles.  The count aggregate is the one job run at
-    call time; its 4^level-row ring table (4096 at the default level 6)
-    rides a broadcast join to the points.  Nothing is persisted, so no cache
-    outlives the call.  Completeness argument: see ``joins._knn_probe``."""
+    and with the per-cell counts recorded in the table properties (one
+    ``SHOW TBLPROPERTIES`` per table and application, memoized), so
+    building the plan launches no Spark job.  The probe join reads the
+    centroid side in bucket order, so only the point stream shuffles; the
+    4^level-row ring table (4096 at the default level 6) rides a broadcast
+    join to the points.  Nothing is persisted, so no cache outlives the
+    call.  A centroid table without ``gmx.cell_counts`` raises
+    ``ValueError``: rebuild it with :func:`write_centroid_index`.
+    Completeness argument: see ``joins._knn_probe``."""
 
-    return _knn_probe(points, spark.table(table), k, index_level(spark, table))
+    level, counts = index_cell_counts(spark, table)
+    return _knn_probe(points, spark.table(table), k, level, counts)
 
 
-# Per-process memo: (application id, database-qualified table name) ->
-# written grid level.  Levels are immutable for a given index generation
-# and every writer in this module records the level here, so from-index
-# plan CONSTRUCTION is zero-job after the first lookup (the SHOW
-# TBLPROPERTIES driver round-trip is paid once per session per table).
+# Per-process memos: (application id, database-qualified table name) ->
+# written grid level, and -> recorded per-cell centroid counts (centroid
+# indexes only; the (ix, iy, count) array of joins.cell_counts).  Both are
+# immutable for a given index generation, every writer in this module
+# records them here, and one SHOW TBLPROPERTIES fills both, so from-index
+# plan CONSTRUCTION is zero-job after the first lookup (the driver
+# round-trip is paid once per session per table).
 # Keys carry the live SparkContext's application id (gmx.session.app_scoped):
 # a session restart starts from a fresh catalog view, so an entry from a
 # stopped application is never reused.  Unqualified names are scoped to
@@ -147,6 +171,7 @@ def knn_from_index(
 # driver-side metadata cache (Spark's own relation cache included); the
 # table property remains the durable source of truth.
 _LEVEL_MEMO: dict[tuple[str, str], int] = {}
+_COUNTS_MEMO: dict[tuple[str, str], np.ndarray] = {}
 
 
 def _memo_key(spark: SparkSession, table: str) -> tuple[str, str]:
@@ -156,13 +181,24 @@ def _memo_key(spark: SparkSession, table: str) -> tuple[str, str]:
 
 
 def invalidate_index_level(table: str) -> None:
-    """Forget the memoized grid level for ``table`` (after an out-of-band
-    rewrite); the next :func:`index_level` call re-reads the property.
-    An unqualified name drops the entry in EVERY database — over-
+    """Forget the memoized grid level and cell counts for ``table`` (after
+    an out-of-band rewrite); the next lookup re-reads the properties.
+    An unqualified name drops the entries in EVERY database — over-
     invalidation is safe (the next lookup pays one driver round-trip)."""
 
-    for key in [k for k in _LEVEL_MEMO if table in (k[1], k[1].rsplit(".", 1)[-1])]:
-        del _LEVEL_MEMO[key]
+    for memo in (_LEVEL_MEMO, _COUNTS_MEMO):
+        for key in [k for k in memo if table in (k[1], k[1].rsplit(".", 1)[-1])]:
+            del memo[key]
+
+
+def _read_properties(spark: SparkSession, table: str, key: tuple[str, str]) -> None:
+    """One ``SHOW TBLPROPERTIES`` fills both memos for ``table``."""
+
+    props = {r["key"]: r["value"] for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
+    _LEVEL_MEMO[key] = int(props["gmx.cell_level"])
+    if "gmx.cell_counts" in props:
+        entries = props["gmx.cell_counts"].replace(",", ":").split(":")
+        _COUNTS_MEMO[key] = np.array(entries if entries != [""] else [], np.int64).reshape(-1, 3)
 
 
 def index_level(spark: SparkSession, table: str) -> int:
@@ -170,13 +206,23 @@ def index_level(spark: SparkSession, table: str) -> int:
     memoized per process so repeated from-index plan builds cost no job."""
 
     key = _memo_key(spark, table)
-    if key in _LEVEL_MEMO:
-        return _LEVEL_MEMO[key]
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    props = {r["key"]: r["value"] for r in rows}
-    level = int(props["gmx.cell_level"])
-    _LEVEL_MEMO[key] = level
-    return level
+    if key not in _LEVEL_MEMO:
+        _read_properties(spark, table, key)
+    return _LEVEL_MEMO[key]
+
+
+def index_cell_counts(spark: SparkSession, table: str) -> tuple[int, np.ndarray]:
+    """The grid level and the per-cell centroid counts a centroid index was
+    written with (table properties, memoized like :func:`index_level`)."""
+
+    key = _memo_key(spark, table)
+    if key not in _LEVEL_MEMO or key not in _COUNTS_MEMO:
+        _read_properties(spark, table, key)
+    if key not in _COUNTS_MEMO:
+        raise ValueError(
+            f"{table} records no gmx.cell_counts property: build it with write_centroid_index"
+        )
+    return _LEVEL_MEMO[key], _COUNTS_MEMO[key]
 
 
 def open_cell_index(spark: SparkSession, table: str) -> CellIndex:

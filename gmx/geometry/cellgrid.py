@@ -9,9 +9,19 @@ into 2^L columns and lat [-90,90) into 2^L rows; a cell id packs
     cell_id = (L * 2^28 + ix) * 2^28 + iy
 
 Everything is closed-form integer math on the half-degree coordinate lattice
-(gmx.corpus), so cell assignment is bit-identical between Spark column
-expressions, numpy, and the DuckDB oracle SQL — no library dependence, no
-floating-point grid-boundary ambiguity.
+(gmx.corpus), so cell assignment is bit-identical between the Spark
+expressions, numpy (``np_cell_*``, pinned to them in tests), and the DuckDB
+oracle SQL — no library dependence, no floating-point grid-boundary
+ambiguity.
+
+Each grid expression (cell ix/iy/id, point cell, covering, covering size,
+range window) is one SQL expression: the ``*_sql`` builders compose SQL
+text from column names or SQL text, and each ``*_expr`` turns it into a
+Column with a single ``F.expr``.  Building a plan then costs a few driver
+round trips per expression, not several per operator node.  Literal-typing
+rule: doubles are written ``180.0D`` (a bare ``180.0`` is a DECIMAL in
+Spark SQL) and bigints ``...L``, so every expression keeps the types —
+and the values — of the closed-form math above.
 
 Parent/child relation: cell at L+1 has ix//2, iy//2 at L — used to coarsen
 coverings of huge (whole-world) extents instead of emitting thousands of
@@ -32,56 +42,94 @@ def nx(level: int) -> int:
     return 1 << level
 
 
-def cell_ix_expr(lon: Column, level: int) -> Column:
-    """Column: longitude (deg) -> column index at ``level``, clamped."""
+# SQL text builders.  Inputs are column names or SQL text and are always
+# parenthesised, so ``"lon - 1"`` composes safely.  Literal types follow
+# the rule in the module docstring.
+
+def _grid_index(v: str, offset: str, span: str, level: int) -> str:
+    """Coordinate ``v`` -> grid index at ``level``, clamped to the grid.
+    greatest/least skip nulls, so a null ``v`` is mapped to null
+    explicitly: a null coordinate has no cell and joins nothing."""
 
     n = nx(level)
-    raw = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw)).cast("long")
+    clamped = f"greatest(0, least({n - 1}, floor((({v}) + {offset}) / {span} * {n})))"
+    return f"CASE WHEN ({v}) IS NOT NULL THEN CAST({clamped} AS BIGINT) END"
 
 
-def cell_iy_expr(lat: Column, level: int) -> Column:
-    n = nx(level)
-    raw = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n))
-    return F.greatest(F.lit(0), F.least(F.lit(n - 1), raw)).cast("long")
+def cell_ix_sql(lon: str, level: int) -> str:
+    """Longitude (deg) -> column index at ``level``."""
+
+    return _grid_index(lon, "180.0D", "360.0D", level)
 
 
-def cell_id_expr(level: int, ix: Column, iy: Column) -> Column:
-    base = F.lit(CELL_BASE).cast("long")
-    return (F.lit(level).cast("long") * base + ix) * base + iy
+def cell_iy_sql(lat: str, level: int) -> str:
+    """Latitude (deg) -> row index at ``level``."""
+
+    return _grid_index(lat, "90.0D", "180.0D", level)
 
 
-def point_cell_expr(lon: Column, lat: Column, level: int) -> Column:
-    return cell_id_expr(level, cell_ix_expr(lon, level), cell_iy_expr(lat, level))
+def cell_id_sql(level: int, ix: str, iy: str) -> str:
+    return f"({level}L * {CELL_BASE}L + ({ix})) * {CELL_BASE}L + ({iy})"
 
 
-def cells_for_ranges(ix0: Column, ix1: Column, iy0: Column, iy1: Column, level: int) -> Column:
+def point_cell_sql(lon: str, lat: str, level: int) -> str:
+    return cell_id_sql(level, cell_ix_sql(lon, level), cell_iy_sql(lat, level))
+
+
+def cells_for_ranges_sql(ix0: str, ix1: str, iy0: str, iy1: str, level: int) -> str:
     """Array<long> of cell ids for an inclusive index-range window — built
     with sequence + nested transform + flatten so the generated code is a
     loop, not an unrolled expression (unrolling blows janino's 64KB method
-    limit for large windows)."""
+    limit for large windows).  The lambda variables carry a ``_gmx_``
+    prefix so they cannot shadow a data column the bounds refer to."""
 
-    return F.flatten(
-        F.transform(
-            F.sequence(ix0, ix1),
-            lambda ix: F.transform(F.sequence(iy0, iy1), lambda iy: cell_id_expr(level, ix, iy)),
-        )
+    cell = cell_id_sql(level, "_gmx_ix", "_gmx_iy")
+    return (
+        f"flatten(transform(sequence({ix0}, {ix1}), _gmx_ix -> "
+        f"transform(sequence({iy0}, {iy1}), _gmx_iy -> {cell})))"
     )
 
 
-def covering_expr(west: Column, south: Column, east: Column, north: Column, level: int) -> Column:
-    """Array<long> of cell ids covering a bbox at ``level`` — pure JVM
-    expressions, no UDF."""
+def covering_sql(west: str, south: str, east: str, north: str, level: int) -> str:
+    """Array<long> of cell ids covering a bbox at ``level``."""
 
-    ix0, ix1 = cell_ix_expr(west, level), cell_ix_expr(east, level)
-    iy0, iy1 = cell_iy_expr(south, level), cell_iy_expr(north, level)
-    return cells_for_ranges(ix0, ix1, iy0, iy1, level)
+    return cells_for_ranges_sql(
+        cell_ix_sql(west, level), cell_ix_sql(east, level),
+        cell_iy_sql(south, level), cell_iy_sql(north, level), level,
+    )
 
 
-def covering_size_expr(west: Column, south: Column, east: Column, north: Column, level: int) -> Column:
-    ix0, ix1 = cell_ix_expr(west, level), cell_ix_expr(east, level)
-    iy0, iy1 = cell_iy_expr(south, level), cell_iy_expr(north, level)
-    return (ix1 - ix0 + 1) * (iy1 - iy0 + 1)
+def covering_size_sql(west: str, south: str, east: str, north: str, level: int) -> str:
+    return (
+        f"({cell_ix_sql(east, level)} - {cell_ix_sql(west, level)} + 1)"
+        f" * ({cell_iy_sql(north, level)} - {cell_iy_sql(south, level)} + 1)"
+    )
+
+
+# Column forms: one F.expr over the SQL text above each.
+
+def cell_ix_expr(lon: str, level: int) -> Column:
+    return F.expr(cell_ix_sql(lon, level))
+
+
+def cell_iy_expr(lat: str, level: int) -> Column:
+    return F.expr(cell_iy_sql(lat, level))
+
+
+def cell_id_expr(level: int, ix: str, iy: str) -> Column:
+    return F.expr(cell_id_sql(level, ix, iy))
+
+
+def point_cell_expr(lon: str, lat: str, level: int) -> Column:
+    return F.expr(point_cell_sql(lon, lat, level))
+
+
+def covering_expr(west: str, south: str, east: str, north: str, level: int) -> Column:
+    return F.expr(covering_sql(west, south, east, north, level))
+
+
+def covering_size_expr(west: str, south: str, east: str, north: str, level: int) -> Column:
+    return F.expr(covering_size_sql(west, south, east, north, level))
 
 
 # ----------------------------------------------------------- numpy twin

@@ -52,7 +52,5 @@ def place_keyword_cells(
     return joined.select(
         "doc_id",
         "keyword",
-        F.explode(
-            covering_expr(F.col("west"), F.col("south"), F.col("east"), F.col("north"), level)
-        ).alias("cell"),
+        F.explode(covering_expr("west", "south", "east", "north", level)).alias("cell"),
     )

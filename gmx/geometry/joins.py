@@ -38,17 +38,18 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from gmx.geometry.cellgrid import (
     CELL_BASE,
     DEFAULT_LEVEL,
-    cells_for_ranges,
-    covering_expr,
+    cells_for_ranges_sql,
     covering_size_expr,
+    covering_sql,
     np_cell_id,
     nx,
     point_cell_expr,
+    point_cell_sql,
 )
 
 DEFAULT_LARGE_CAP = 64  # coverings above this many cells go to the broadcast tier
@@ -71,7 +72,6 @@ _BOX = ["west", "south", "east", "north"]
 
 
 def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
-    size = covering_size_expr(*map(F.col, _BOX), level)
     e = extents
     if "split" not in e.columns:  # extents not built by extents_df carry no parts
         e = e.withColumn("split", F.lit(False))
@@ -79,8 +79,8 @@ def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
     # tier: they are as rare as whole-world boxes, and keeping them out of
     # the exploded index means the reference-point dedup never sees a doc
     # twice — cross-tier duplicate pairs become impossible
-    return e.withColumn("n_cells", size).withColumn(
-        "is_large", (F.col("n_cells") > large_cap) | F.col("split")
+    return e.withColumn("n_cells", covering_size_expr(*_BOX, level)).withColumn(
+        "is_large", F.expr(f"n_cells > {large_cap} OR split")
     )
 
 
@@ -104,7 +104,7 @@ def tier_stats(
 def _explode_cover(df: DataFrame, level: int, name: str) -> DataFrame:
     """Every row of a bbox frame, once per cell of its covering at ``level``."""
 
-    return df.select("*", F.explode(covering_expr(*map(F.col, _BOX), level)).alias(name))
+    return df.selectExpr("*", f"explode({covering_sql(*_BOX, level)}) AS {name}")
 
 
 def cover_cells(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
@@ -139,8 +139,8 @@ class CellIndex:
     ) -> CellIndex:
         ext = _with_tier(extents, level, large_cap)
         return cls(
-            cover_cells(ext.filter(~F.col("is_large")), level),
-            ext.filter(F.col("is_large")).select("doc_id", *_BOX, "split"),
+            cover_cells(ext.filter("NOT is_large"), level),
+            ext.filter("is_large").select("doc_id", *_BOX, "split"),
             level,
         )
 
@@ -151,51 +151,44 @@ class CellIndex:
         shuffle over the index; the large tier adds every row, both parts of
         a split box included."""
 
-        corner = F.col("cell") == point_cell_expr(F.col("west"), F.col("south"), self.level)
-        small = self.cells.filter(corner).select(
-            "doc_id", *_BOX, F.lit(False).alias("is_large"), F.lit(False).alias("split")
+        corner = point_cell_sql("west", "south", self.level)
+        small = self.cells.filter(f"cell = {corner}").selectExpr(
+            "doc_id", *_BOX, "false AS is_large", "false AS split"
         )
-        return small.unionByName(
-            self.large.select("doc_id", *_BOX, F.lit(True).alias("is_large"), "split")
-        )
+        large = self.large.selectExpr("doc_id", *_BOX, "true AS is_large", "split")
+        return small.unionByName(large)
 
 
-def _overlap(a: str, b: str) -> Column:
+# Join predicates and pair projections are SQL text over the sides' aliases
+# (one F.expr / selectExpr each at the join), like the grid expressions.
+
+def _overlap(a: str, b: str) -> str:
     return (
-        (F.col(f"{a}.west") <= F.col(f"{b}.east"))
-        & (F.col(f"{b}.west") <= F.col(f"{a}.east"))
-        & (F.col(f"{a}.south") <= F.col(f"{b}.north"))
-        & (F.col(f"{b}.south") <= F.col(f"{a}.north"))
+        f"{a}.west <= {b}.east AND {b}.west <= {a}.east"
+        f" AND {a}.south <= {b}.north AND {b}.south <= {a}.north"
     )
 
 
-def _contains() -> Column:
+def _contains() -> str:
     """Closed-interval point-in-box: ``lon``/``lat`` inside ``west..north``."""
 
-    return (
-        (F.col("west") <= F.col("lon")) & (F.col("lon") <= F.col("east"))
-        & (F.col("south") <= F.col("lat")) & (F.col("lat") <= F.col("north"))
-    )
+    return "west <= lon AND lon <= east AND south <= lat AND lat <= north"
 
 
-def _refine(a: str, b: str, cell: str, level: int) -> Column:
+def _refine(a: str, b: str, cell: str, level: int) -> str:
     """Cell equi-join + exact overlap refine + reference-point dedup: an
     overlapping pair is kept only in the ``cell`` holding its intersection's
     (max-west, max-south) corner, so the pair stream needs no distinct."""
 
-    corner = point_cell_expr(
-        F.greatest(f"{a}.west", f"{b}.west"), F.greatest(f"{a}.south", f"{b}.south"), level
+    corner = point_cell_sql(
+        f"greatest({a}.west, {b}.west)", f"greatest({a}.south, {b}.south)", level
     )
-    return (
-        (F.col(f"{a}.{cell}") == F.col(f"{b}.{cell}"))
-        & _overlap(a, b)
-        & (F.col(f"{a}.{cell}") == corner)
-    )
+    return f"{a}.{cell} = {b}.{cell} AND {_overlap(a, b)} AND {a}.{cell} = {corner}"
 
 
-def _pair(a: str, b: str) -> list[Column]:
-    return [F.least(f"{a}.doc_id", f"{b}.doc_id").alias("a_id"),
-            F.greatest(f"{a}.doc_id", f"{b}.doc_id").alias("b_id")]
+def _pair(a: str, b: str) -> list[str]:
+    return [f"least({a}.doc_id, {b}.doc_id) AS a_id",
+            f"greatest({a}.doc_id, {b}.doc_id) AS b_id"]
 
 
 def _over_budget(tier: DataFrame, budget: int | None) -> bool:
@@ -211,8 +204,8 @@ def _salt(index: DataFrame, probe: DataFrame, key: str, salt: int) -> tuple[Data
     gain the ``osalt`` join key."""
 
     return (
-        index.withColumn("osalt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))),
-        probe.withColumn("osalt", F.pmod(F.hash(key), F.lit(salt))),
+        index.withColumn("osalt", F.expr(f"explode(sequence(0, {salt - 1}))")),
+        probe.withColumn("osalt", F.expr(f"pmod(hash({key}), {salt})")),
     )
 
 
@@ -228,7 +221,7 @@ def _coarse_join(probe: DataFrame, key: str, large: DataFrame, level: int, salt:
         _explode_cover(probe, level, "ccell"), key, salt,
     )
     l, o = lidx.alias("l"), oidx.alias("o")
-    return o.join(l, _refine("o", "l", "ccell", level) & (F.col("o.osalt") == F.col("l.osalt")))
+    return o.join(l, F.expr(f"{_refine('o', 'l', 'ccell', level)} AND o.osalt = l.osalt"))
 
 
 def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
@@ -241,14 +234,11 @@ def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
     o, l = o_side.alias("o"), l_side.alias("l")
     return o.join(
         F.broadcast(l),
-        _overlap("l", "o")
-        & (F.col("o.doc_id") != F.col("l.doc_id"))
-        & (
-            ~F.col("o.is_large")
-            | F.col("o.is_overflow")
-            | (F.col("o.doc_id") > F.col("l.doc_id"))
+        F.expr(
+            f"{_overlap('l', 'o')} AND o.doc_id != l.doc_id"
+            " AND (NOT o.is_large OR o.is_overflow OR o.doc_id > l.doc_id)"
         ),
-    ).select(*_pair("l", "o"))
+    ).selectExpr(*_pair("l", "o"))
 
 
 def _small_pairs(ix: CellIndex) -> DataFrame:
@@ -256,8 +246,8 @@ def _small_pairs(ix: CellIndex) -> DataFrame:
 
     a, b = ix.cells.alias("a"), ix.cells.alias("b")
     return a.join(
-        b, _refine("a", "b", "cell", ix.level) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        b, F.expr(f"{_refine('a', 'b', 'cell', ix.level)} AND a.doc_id < b.doc_id")
+    ).selectExpr("a.doc_id AS a_id", "b.doc_id AS b_id")
 
 
 def _overlap_pairs(
@@ -273,30 +263,27 @@ def _overlap_pairs(
     # inputs are split BEFORE joining so the heavy non-split stream is joined
     # exactly once with no dedup shuffle (filtering the join OUTPUT twice
     # would re-execute the broadcast join per branch).
-    l_ns = ix.large.filter(~F.col("split"))
-    l_s = ix.large.filter(F.col("split"))
+    l_ns = ix.large.filter("NOT split")
+    l_s = ix.large.filter("split")
     overflow = _over_budget(l_ns, large_budget)
     # rows that live in the overflow tier (emitted there, so the split
     # broadcast must emit their pairs with split rows regardless of doc-id
     # order — the coarse join's probe side excludes split rows)
     other = ix.docs().withColumn(
-        "is_overflow", F.lit(overflow) & F.col("is_large") & ~F.col("split")
+        "is_overflow", F.expr(f"{str(overflow).lower()} AND is_large AND NOT split")
     )
     if overflow:
         large_pairs = (
-            _coarse_join(other.filter(~F.col("split")), "doc_id", l_ns, overflow_level, overflow_salt)
-            .filter(
-                (F.col("o.doc_id") != F.col("l.doc_id"))
-                & (~F.col("o.is_overflow") | (F.col("l.doc_id") < F.col("o.doc_id")))
-            )
-            .select(*_pair("l", "o"))
+            _coarse_join(other.filter("NOT split"), "doc_id", l_ns, overflow_level, overflow_salt)
+            .filter("o.doc_id != l.doc_id AND (NOT o.is_overflow OR l.doc_id < o.doc_id)")
+            .selectExpr(*_pair("l", "o"))
         )
         # split tier (still broadcast — bounded): pairs with EVERYTHING,
         # including overflow rows in either doc-id order
         split_pairs = _ljoin_large(other, l_s)
     else:
-        large_pairs = _ljoin_large(other.filter(~F.col("split")), l_ns)
-        split_pairs = _ljoin_large(other.filter(F.col("split")), l_ns).unionByName(
+        large_pairs = _ljoin_large(other.filter("NOT split"), l_ns)
+        split_pairs = _ljoin_large(other.filter("split"), l_ns).unionByName(
             _ljoin_large(other, l_s)
         )
     return (
@@ -378,7 +365,7 @@ def _point_hits(
     if salt == "auto":
         salt = _cell_salt(ix.cells, salt_rows_per_shard)
     idx = ix.cells
-    pts = points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), ix.level))
+    pts = points.withColumn("cell", point_cell_expr("lon", "lat", ix.level))
     keys = ["cell"]
     if salt and salt > 1:
         idx, pts = _salt(idx, pts, "point_id", salt)
@@ -389,14 +376,12 @@ def _point_hits(
     if _over_budget(ix.large, large_budget):
         lidx, pts_c = _salt(
             _explode_cover(ix.large.select("doc_id", *_BOX), overflow_level, "ccell"),
-            points.withColumn(
-                "ccell", point_cell_expr(F.col("lon"), F.col("lat"), overflow_level)
-            ),
+            points.withColumn("ccell", point_cell_expr("lon", "lat", overflow_level)),
             "point_id", overflow_salt,
         )
         large_hits = pts_c.join(lidx, on=["ccell", "osalt"]).filter(_contains())
     else:
-        large_hits = points.join(F.broadcast(ix.large), _contains())
+        large_hits = points.join(F.broadcast(ix.large), F.expr(_contains()))
     return small_hits.unionByName(large_hits.select("point_id", "doc_id"))
 
 
@@ -436,12 +421,10 @@ def centroids(extents: DataFrame, level: int) -> DataFrame:
     (part 0, [west, 180]) — deterministic and single-rowed, so a doc can
     never appear twice in one point's top k."""
 
-    base_ext = extents.filter(F.col("part") == 0) if "part" in extents.columns else extents
-    return base_ext.select(
-        "doc_id",
-        ((F.col("west") + F.col("east")) / 2).alias("cx"),
-        ((F.col("south") + F.col("north")) / 2).alias("cy"),
-    ).withColumn("cell", point_cell_expr(F.col("cx"), F.col("cy"), level))
+    base_ext = extents.filter("part = 0") if "part" in extents.columns else extents
+    return base_ext.selectExpr(
+        "doc_id", "(west + east) / 2 AS cx", "(south + north) / 2 AS cy"
+    ).withColumn("cell", point_cell_expr("cx", "cy", level))
 
 
 def knn_points(
@@ -455,22 +438,37 @@ def knn_points(
     Distance = squared equirectangular degrees (exact on the corpus lattice),
     tie-broken by doc_id.  Each centroid indexes into ONE cell at ``level``;
     :func:`_knn_probe` then sizes every point's probe window from the
-    per-cell centroid counts (one aggregate, collected to the driver: the
-    ring table is 4^level rows, 4096 at the default level 6), so each point
-    probes a window proven to hold its whole top k — no completeness check,
-    no second round, no cross join at any density.  Nothing is persisted,
-    so no cache outlives the call.  Query points must lie on the globe
-    (lon in [-180, 180], lat in [-90, 90]); see :func:`_knn_probe` for the
-    completeness argument.
+    per-cell centroid counts, so each point probes a window proven to hold
+    its whole top k — no completeness check, no second round, no cross join
+    at any density.  Here the counts come from :func:`cell_counts` over the
+    on-the-fly centroids: one aggregate job, run while the plan is built
+    (``knn_from_index`` reads the same counts from the table instead).
+    Nothing is persisted, so no cache outlives the call.  Query points must
+    lie on the globe (lon in [-180, 180], lat in [-90, 90]); see
+    :func:`_knn_probe` for the completeness argument.
     Returns (point_id, rank, doc_id, dist_sq).
     """
 
-    return _knn_probe(points, centroids(extents, level), k, level)
+    cent = centroids(extents, level)
+    return _knn_probe(points, cent, k, level, cell_counts(cent))
 
 
 def release_knn_caches() -> None:
     """No-op, kept for callers written against the earlier multi-round kNN:
     the one-pass core persists nothing, so there is nothing to release."""
+
+
+def cell_counts(cent_idx: DataFrame) -> np.ndarray:
+    """(ix, iy, count) rows, one per occupied cell of a centroid index
+    (doc_id, cx, cy, cell): one ``groupBy(cell).count()`` aggregate,
+    collected to the driver — at most min(docs, 4^level) rows.  A null cell
+    (a doc without a centroid) joins nothing and is not counted."""
+
+    cells = cent_idx.groupBy("cell").count().dropna().toPandas()
+    ids = cells["cell"].to_numpy(np.int64)
+    return np.column_stack(
+        [(ids // CELL_BASE) % CELL_BASE, ids % CELL_BASE, cells["count"].to_numpy(np.int64)]
+    )
 
 
 def _knn_rings(counts: np.ndarray, m: int) -> np.ndarray:
@@ -505,13 +503,19 @@ def _knn_rings(counts: np.ndarray, m: int) -> np.ndarray:
 _KNN_SLACK = 1e-9
 
 
-def _knn_probe(points: DataFrame, cent_idx: DataFrame, k: int, level: int) -> DataFrame:
+def _knn_probe(
+    points: DataFrame, cent_idx: DataFrame, k: int, level: int, counts: np.ndarray
+) -> DataFrame:
     """The one-pass exact kNN core over a centroid index.
 
     ``cent_idx`` is (doc_id, cx, cy, cell) — computed on the fly by
     :func:`knn_points` or read from a bucketed table by
-    ``gmx.geometry.bucketed.knn_from_index`` (where the count aggregate and
-    the index side of the probe join plan without an Exchange).
+    ``gmx.geometry.bucketed.knn_from_index`` (where the index side of the
+    probe join plans without an Exchange).  ``counts`` are its per-cell
+    centroid counts as :func:`cell_counts` returns them: computed by
+    ``knn_points`` at call time, or read by ``knn_from_index`` from the
+    table property ``write_centroid_index`` recorded.  The body itself
+    launches no job; its 4^level-row ring table rides a broadcast join.
 
     Completeness: let m = min(k, centroids).  The ring table gives each
     cell the smallest ring r whose window holds >= m centroids.  A point
@@ -527,11 +531,9 @@ def _knn_probe(points: DataFrame, cent_idx: DataFrame, k: int, level: int) -> Da
     [-90, 90]."""
 
     n = nx(level)
-    counts = np.zeros((n, n), np.int64)
-    cells = cent_idx.groupBy("cell").count().dropna().toPandas()  # a null cell joins nothing
-    ids = cells["cell"].to_numpy(np.int64)
-    counts[(ids // CELL_BASE) % CELL_BASE, ids % CELL_BASE] = cells["count"].to_numpy(np.int64)
-    r = _knn_rings(counts, min(k, int(counts.sum())))
+    grid = np.zeros((n, n), np.int64)
+    grid[counts[:, 0], counts[:, 1]] = counts[:, 2]
+    r = _knn_rings(grid, min(k, int(grid.sum())))
 
     # ring table: per cell, the probe window (inclusive cell-index ranges)
     # and the squared distance bound
@@ -548,25 +550,25 @@ def _knn_probe(points: DataFrame, cent_idx: DataFrame, k: int, level: int) -> Da
         "bound_sq": (reach * reach).ravel(),
     }))
 
+    window = cells_for_ranges_sql("x0", "x1", "y0", "y1", level)
     probes = (
-        points.withColumn("cell", point_cell_expr(F.col("lon"), F.col("lat"), level))
+        points.withColumn("cell", point_cell_expr("lon", "lat", level))
         .join(F.broadcast(rings), "cell")
-        .select(
-            "point_id", "lon", "lat", "bound_sq",
-            F.explode(cells_for_ranges(F.col("x0"), F.col("x1"), F.col("y0"), F.col("y1"), level))
-            .alias("cell"),
-        )
+        .selectExpr("point_id", "lon", "lat", "bound_sq", f"explode({window}) AS cell")
     )
-    dist = (F.col("lon") - F.col("cx")) ** 2 + (F.col("lat") - F.col("cy")) ** 2
-    w = Window.partitionBy("point_id").orderBy(F.col("dist_sq").asc(), F.col("doc_id").asc())
     # the bound pre-filter keeps every true neighbour (see above) and drops
     # the window's far corners before the rank shuffle
     return (
         probes.join(cent_idx, on="cell")
-        .select("point_id", "doc_id", dist.alias("dist_sq"), "bound_sq")
-        .filter(F.col("dist_sq") <= F.col("bound_sq"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .selectExpr(
+            "point_id", "doc_id", "pow(lon - cx, 2) + pow(lat - cy, 2) AS dist_sq", "bound_sq"
+        )
+        .filter("dist_sq <= bound_sq")
+        .selectExpr(
+            "point_id", "doc_id", "dist_sq",
+            "row_number() OVER (PARTITION BY point_id ORDER BY dist_sq, doc_id) AS rank",
+        )
+        .filter(f"rank <= {k}")
         .select("point_id", "rank", "doc_id", "dist_sq")
     )
 
@@ -575,13 +577,12 @@ def tile_boxes(tiles: DataFrame) -> DataFrame:
     """(tile_id, z, x, y) -> (tile_id, west, south, east, north): the
     closed-form footprint of an equirectangular raster tile."""
 
-    tz = F.pow(F.lit(2.0), F.col("z"))
-    return tiles.select(
+    return tiles.selectExpr(
         "tile_id",
-        (F.lit(-180.0) + F.col("x") * (F.lit(360.0) / tz)).alias("west"),
-        (F.lit(-90.0) + F.col("y") * (F.lit(180.0) / tz)).alias("south"),
-        (F.lit(-180.0) + (F.col("x") + 1) * (F.lit(360.0) / tz)).alias("east"),
-        (F.lit(-90.0) + (F.col("y") + 1) * (F.lit(180.0) / tz)).alias("north"),
+        "-180.0D + x * (360.0D / pow(2.0D, z)) AS west",
+        "-90.0D + y * (180.0D / pow(2.0D, z)) AS south",
+        "-180.0D + (x + 1) * (360.0D / pow(2.0D, z)) AS east",
+        "-90.0D + (y + 1) * (180.0D / pow(2.0D, z)) AS north",
     )
 
 
@@ -598,8 +599,8 @@ def _tile_hits(
 
     tbox = tile_boxes(tiles)
     t, d = _explode_cover(tbox, ix.level, "cell").alias("t"), ix.cells.alias("d")
-    small_hits = t.join(d, _refine("t", "d", "cell", ix.level)).select("tile_id", "doc_id")
-    l_ns = ix.large.filter(~F.col("split"))
+    small_hits = t.join(d, F.expr(_refine("t", "d", "cell", ix.level))).select("tile_id", "doc_id")
+    l_ns = ix.large.filter("NOT split")
     if _over_budget(l_ns, large_budget):
         large_hits = _coarse_join(tbox, "tile_id", l_ns, overflow_level, overflow_salt).select(
             "o.tile_id", "l.doc_id"
@@ -607,7 +608,7 @@ def _tile_hits(
     else:
         large_hits = (
             tbox.alias("t")
-            .join(F.broadcast(l_ns.alias("d")), _overlap("t", "d"))
+            .join(F.broadcast(l_ns.alias("d")), F.expr(_overlap("t", "d")))
             .select("tile_id", "doc_id")
         )
     # a tile can overlap both parts of an antimeridian-crossing box; the
@@ -615,7 +616,7 @@ def _tile_hits(
     # the non-split broadcast join runs once with no dedup shuffle
     split_hits = (
         tbox.alias("t")
-        .join(F.broadcast(ix.large.filter(F.col("split")).alias("d")), _overlap("t", "d"))
+        .join(F.broadcast(ix.large.filter("split").alias("d")), F.expr(_overlap("t", "d")))
         .select("tile_id", "doc_id")
         .dropDuplicates(["tile_id", "doc_id"])
     )

@@ -540,8 +540,9 @@ def spatial_tile_join_indexed(spark, sf_dir):
 
 def spatial_knn_indexed(spark, sf_dir):
     """kNN served from the bucketed centroid index under the driver gate —
-    same one-pass core and oracle as spatial_knn; the count aggregate and
-    the probe join read the index without an Exchange."""
+    same one-pass core and oracle as spatial_knn; the probe windows come
+    from the cell counts the index build recorded (no job at call time) and
+    the probe join reads the index without an Exchange."""
     from gmx.geometry.bucketed import knn_from_index
 
     return knn_from_index(

@@ -68,5 +68,14 @@ def get_spark(app: str = "gmx", cpus: int | None = None, shuffle_partitions: int
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark 4.1 defaults this to true: every Column/functions call then
+        # walks the Python stack and makes ~8 extra JVM round trips to record
+        # its call site (measured: a served bbox-overlap plan build makes
+        # 2386 py4j round trips, a point-cell expression costs 27.6 ms vs
+        # 15.6 ms with it off).  What is lost: the Python call-site block in
+        # AnalysisException text.  PySpark reads the flag once per process
+        # (pyspark.errors.utils._enable_debugging_cache), so it is set here,
+        # in the one builder every entry point uses.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -687,21 +687,46 @@ def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path):
 
 
 def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path):
-    """knn_from_index equals knn_points exactly, and the probe join reads
-    the centroid side from bucket metadata (bucketed scan, no Exchange
-    above it)."""
+    """At write levels 5, 6 and 7, knn_from_index, sized by the cell counts
+    the writer recorded, equals both knn_points (counts aggregated on the
+    fly) and the brute-force oracle — also for points far from every
+    centroid, whose probe windows span many empty rings;
+    invalidate_index_level forgets the counts and the re-read table
+    property gives the same answer.  The probe join reads the centroid
+    side from bucket metadata (bucketed scan, no Exchange above it)."""
 
-    from gmx.geometry.bucketed import knn_from_index, write_centroid_index
+    import numpy as np
+
+    from gmx.geometry import bucketed
+    from gmx.geometry.bucketed import (
+        invalidate_index_level,
+        knn_from_index,
+        write_centroid_index,
+    )
 
     table = "gmx_test_centidx"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    write_centroid_index(extents, table, str(tmp_path / "centidx"))
-
+    # centroids reach lat 79 at most: the pole is 11-33 degrees from all
+    far = [(1000 + i, x, y) for i, (x, y) in enumerate(
+        [(180.0, 90.0), (120.0, 90.0), (-150.0, 90.0), (179.5, 89.5)])]
+    far_df = spark.createDataFrame(far, "point_id long, lon double, lat double")
     pts, df = points
-    want = knn_oracle(pts, boxes)
-    got = {(r.point_id, r.rank, r.doc_id)
-           for r in knn_from_index(spark, df, table).collect()}
-    assert got == want
+    for level in (5, 6, 7):
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        write_centroid_index(extents, table, str(tmp_path / f"centidx{level}"), level=level)
+        for batch, bdf in ((pts, df), (far, far_df)):
+            got = {tuple(r) for r in knn_from_index(spark, bdf, table).collect()}
+            want = {tuple(r) for r in knn_points(bdf, extents, level=level).collect()}
+            assert got == want, level
+            assert {(p, r, d) for p, r, d, _ in got} == knn_oracle(batch, boxes), level
+
+        key = bucketed._memo_key(spark, table)
+        written = bucketed._COUNTS_MEMO[key]
+        assert len(written) <= min(len(boxes), 4**level)
+        invalidate_index_level(table)
+        assert key not in bucketed._COUNTS_MEMO and key not in bucketed._LEVEL_MEMO
+        again = {tuple(r) for r in knn_from_index(spark, far_df, table).collect()}
+        assert np.array_equal(bucketed._COUNTS_MEMO[key], written), level  # property round-trips
+        assert {(p, r, d) for p, r, d, _ in again} == knn_oracle(far, boxes), level
 
     # plan check on the first-round probe join shape: points side shuffles
     # to the index's bucketing, index side scans its buckets directly
@@ -715,8 +740,7 @@ def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path):
         probe = df.select(
             "point_id",
             F.explode(
-                covering_expr(F.col("lon") - 1, F.col("lat") - 1,
-                              F.col("lon") + 1, F.col("lat") + 1, 6)
+                covering_expr("lon - 1", "lat - 1", "lon + 1", "lat + 1", 6)
             ).alias("cell"),
         ).join(idx, on="cell")
         plan = probe._jdf.queryExecution().executedPlan().toString()
@@ -728,18 +752,146 @@ def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_cover_cells_match_oracle(extents, boxes):
+@pytest.fixture(scope="module")
+def served_index(spark, extents, tmp_path_factory):
+    """(cell table, centroid table) written once for the served-plan tests."""
+
+    from gmx.geometry.bucketed import write_cell_index, write_centroid_index
+
+    cell, cent = "gmx_test_served_cell", "gmx_test_served_cent"
+    tables = (cell, f"{cell}_large", cent)
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    path = tmp_path_factory.mktemp("served")
+    write_cell_index(extents, cell, str(path / "cell"))
+    write_centroid_index(extents, cent, str(path / "cent"))
+    yield cell, cent
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize("query", ["bbox_overlap", "point_in_bbox", "knn", "tile_join"])
+def test_served_plans_build_without_jobs(spark, served_index, points, tmp_path, query):
+    """Building a *_from_index DataFrame launches no Spark job, also with a
+    cold property memo (SHOW TBLPROPERTIES is a driver-side command): the
+    kNN probe windows come from the counts write_centroid_index recorded,
+    not from an aggregate at call time.  A centroid table without them is
+    refused rather than counted."""
+
+    from gmx.geometry.bucketed import (
+        bbox_overlap_pairs_from_index,
+        invalidate_index_level,
+        knn_from_index,
+        point_in_bbox_from_index,
+        tile_extent_join_from_index,
+        write_centroid_index,
+    )
+
+    cell, cent = served_index
+    _, pts = points
+    tiles = spark.createDataFrame([("t3-1-2", 3, 1, 2)], "tile_id string, z int, x int, y int")
+    build = {
+        "bbox_overlap": lambda: bbox_overlap_pairs_from_index(spark, cell),
+        "point_in_bbox": lambda: point_in_bbox_from_index(spark, pts, cell),
+        "knn": lambda: knn_from_index(spark, pts, cent),
+        "tile_join": lambda: tile_extent_join_from_index(spark, tiles, cell),
+    }[query]
+    sc = spark.sparkContext
+    for memo in ("cold", "warm"):
+        if memo == "cold":
+            invalidate_index_level(cell)
+            invalidate_index_level(cent)
+        group = f"gmx-test-build-{query}-{memo}"
+        sc.setJobGroup(group, "plan build only")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], memo
+
+    if query == "knn":
+        table = "gmx_test_nocounts"
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        ext = spark.createDataFrame(
+            [("a", 1.0, 2.0, 3.0, 4.0)],
+            "doc_id string, west double, south double, east double, north double",
+        )
+        write_centroid_index(ext, table, str(tmp_path / "nocounts"))
+        spark.sql(f"ALTER TABLE {table} UNSET TBLPROPERTIES ('gmx.cell_counts')")
+        invalidate_index_level(table)
+        with pytest.raises(ValueError, match="write_centroid_index"):
+            knn_from_index(spark, pts, table)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_cover_cells_match_oracle(spark, extents, boxes):
+    """At levels 2, 4, 6 and 10 the SQL-text grid equals closed-form Python
+    math on the corpus extents, and its numpy twin (np_cell_id of
+    np_cell_ix, np_cell_iy) on adversarial coordinates: +-180 and +-90,
+    exact cell edges, values just outside the globe (clamped into the edge
+    cells) and null coordinates."""
+
     import math
 
-    want = set()
-    for d, (w, s, e, n) in boxes.items():
-        ix0, ix1 = (min(max(math.floor((v + 180) / 360 * 16), 0), 15) for v in (w, e))
-        iy0, iy1 = (min(max(math.floor((v + 90) / 180 * 16), 0), 15) for v in (s, n))
-        for ix in range(ix0, ix1 + 1):
-            for iy in range(iy0, iy1 + 1):
-                want.add((d, (4 * 2**28 + ix) * 2**28 + iy))
-    got = {(r.doc_id, r.cell) for r in cover_cells(extents, 4).collect()}
-    assert got == want
+    import numpy as np
+
+    from gmx.geometry.cellgrid import (
+        covering_expr,
+        covering_size_expr,
+        np_cell_id,
+        np_cell_ix,
+        np_cell_iy,
+        point_cell_expr,
+    )
+
+    for level in (2, 4, 6, 10):
+        n = 2**level
+        cap = 1024  # the level-10 whole-world covering is 2^20 cells per doc
+        want, small = set(), []
+        for d, (w, s, e, nn) in boxes.items():
+            ix0, ix1 = (min(max(math.floor((v + 180) / 360 * n), 0), n - 1) for v in (w, e))
+            iy0, iy1 = (min(max(math.floor((v + 90) / 180 * n), 0), n - 1) for v in (s, nn))
+            if (ix1 - ix0 + 1) * (iy1 - iy0 + 1) > cap:
+                continue
+            small.append(d)
+            for ix in range(ix0, ix1 + 1):
+                for iy in range(iy0, iy1 + 1):
+                    want.add((d, (level * 2**28 + ix) * 2**28 + iy))
+        small_ext = extents.filter(F.col("doc_id").isin(small))
+        got = {(r.doc_id, r.cell) for r in cover_cells(small_ext, level).collect()}
+        assert got == want, level
+
+        cw, ch = 360 / n, 180 / n
+        lons = [-180.5, math.nextafter(-180.0, -181.0), -180.0, -180 + cw, -cw, 0.0, cw / 3,
+                180 - cw, 180.0, math.nextafter(180.0, 181.0), 180.5]
+        lats = [-90.5, math.nextafter(-90.0, -91.0), -90.0, -90 + ch, -ch, 0.0, ch / 3,
+                90 - ch, 90.0, math.nextafter(90.0, 91.0), 90.5]
+        # each box spans (x, y) to two cells further north-east, so coverings
+        # stay small at every level and both ends meet the clamps
+        coords = [(x, y) for x in lons for y in lats] + [(None, 0.0), (0.0, None)]
+        rows = [(i, x, y, None if x is None else x + 2 * cw, None if y is None else y + 2 * ch)
+                for i, (x, y) in enumerate(coords)]
+        df = spark.createDataFrame(rows, "id long, x double, y double, x2 double, y2 double")
+        got = df.select(
+            "id",
+            point_cell_expr("x", "y", level).alias("cell"),
+            covering_expr("x", "y", "x2", "y2", level).alias("cover"),
+            covering_size_expr("x", "y", "x2", "y2", level).alias("size"),
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            _, x, y, x2, y2 = rows[r.id]
+            if x is None or y is None:
+                assert (r.cell, r.cover, r.size) == (None, None, None), (level, x, y)
+                continue
+            ix0, ix1 = np_cell_ix(np.array([x, x2]), level)
+            iy0, iy1 = np_cell_iy(np.array([y, y2]), level)
+            ix, iy = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1), indexing="ij")
+            assert r.cell == np_cell_id(level, ix0, iy0), (level, x, y)
+            assert r.cover == np_cell_id(level, ix, iy).ravel().tolist(), (level, x, y)
+            assert r.size == (ix1 - ix0 + 1) * (iy1 - iy0 + 1), (level, x, y)
 
 
 def test_index_level_memoized(spark, extents, tmp_path, monkeypatch):
