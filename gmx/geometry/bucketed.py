@@ -7,6 +7,13 @@ bucketed and sorted by ``cell``; every later join keyed on ``cell`` between
 co-bucketed sides then runs with NO Exchange on the bucketed side(s) — the
 shuffle is paid once at write time, not per query.
 
+Each bucketed table is shuffled to bucket alignment before it is written
+(``repartition(buckets, "cell")`` hashes exactly like ``bucketBy``), so
+every write task holds one bucket and writes ONE file: a table has at most
+``buckets`` files, whatever the input's partitioning, and every reader
+opens that many.  Write parallelism therefore equals ``buckets``: pick
+about one bucket per core.
+
 This module only stores and opens indexes: :func:`write_cell_index` writes
 the two frames of ``joins.CellIndex.build`` and :func:`open_cell_index`
 reads them back as the same ``CellIndex`` value, so every ``*_from_index``
@@ -60,14 +67,16 @@ def _write_bucketed(
     df: DataFrame, table: str, path: str, level: int, buckets: int, with_counts: bool = False
 ) -> None:
     """Write ``df`` as an external table bucketed and sorted by ``cell``,
-    recording the grid level and bucket count as table properties (and the
-    level in the process memo).  ``with_counts`` also records the per-cell
+    one file per bucket (``buckets`` write tasks), recording the grid
+    level and bucket count as table properties (and the level in the
+    process memo).  ``with_counts`` also records the per-cell
     row counts (``gmx.cell_counts``), aggregated over the written table:
     grouping by the bucket column is one stage with no Exchange, and it
     counts exactly the rows readers will see."""
 
     (
-        df.write.mode("overwrite")
+        df.repartition(buckets, "cell")
+        .write.mode("overwrite")
         .bucketBy(buckets, "cell")
         .sortBy("cell")
         .option("path", path)
@@ -96,10 +105,11 @@ def write_cell_index(
     buckets: int = 16,
 ) -> None:
     """Materialize ``CellIndex.build(extents, level, large_cap)``: the
-    small-tier covering as a bucketed+sorted table, the broadcast tier
-    alongside as ``<table>_large`` (a tiny unbucketed table).  The grid
-    level and bucket count are recorded as table properties; at corpus
-    scale pick buckets ~ O(cluster cores)."""
+    small-tier covering as a bucketed+sorted table, one file per bucket,
+    the broadcast tier alongside as ``<table>_large`` (a tiny unbucketed
+    table, one row per doc: a crossing box is one wrapped row).  The grid
+    level and bucket count are recorded as table properties.  The covering
+    is written by ``buckets`` tasks, so pick about one bucket per core."""
 
     ix = CellIndex.build(extents, level, large_cap)
     _write_bucketed(ix.cells, table, path, level, buckets)
@@ -119,9 +129,10 @@ def write_centroid_index(
     buckets: int = 16,
 ) -> None:
     """Materialize the kNN centroid index (doc_id, cx, cy, cell) bucketed +
-    sorted by ``cell``, with its per-occupied-cell centroid counts recorded
-    as table property ``gmx.cell_counts`` (one aggregate over the written
-    table, run here once instead of on every kNN call).
+    sorted by ``cell``, one file per bucket written by ``buckets`` tasks
+    (pick about one bucket per core), with its per-occupied-cell centroid
+    counts recorded as table property ``gmx.cell_counts`` (one aggregate
+    over the written table, run here once instead of on every kNN call).
 
     One row per doc (antimeridian boxes contribute their eastern part, same
     convention as :func:`gmx.geometry.joins.knn_points`); the finer default

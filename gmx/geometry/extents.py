@@ -44,9 +44,10 @@ def extents_df(meta: DataFrame, split_antimeridian: bool = True) -> DataFrame:
         return e.filter(F.col("west") <= F.col("east"))
 
     # west>east crosses the antimeridian: split into [west,180] (part 0) and
-    # [-180,east] (part 1).  ``split`` marks both rows of a crossing box so
-    # pair-emitting joins can dedup pairs a counterpart reaches via BOTH
-    # parts; non-crossing rows are part 0, split=false.
+    # [-180,east] (part 1).  ``split`` marks both rows of a crossing box:
+    # the cell index folds them back into one wrapped large-tier row
+    # (joins.CellIndex.build), so no join sees a crossing doc twice;
+    # non-crossing rows are part 0, split=false.
     def part(west, east, n):
         return F.struct(west.alias("west"), east.alias("east"), F.lit(n).alias("part"))
 

@@ -22,10 +22,14 @@ hazard; the corpus plants one whole-world bbox per 97 docs):
 
 - **Cell-splitting / tiering**: extents whose covering would exceed
   ``large_cap`` cells (whole-world and near-global boxes) are pulled OUT of
-  the exploded index entirely and joined via a broadcast nested-loop pass —
-  so hot cells never materialize in the shuffle.  At 100 TB the large tier is
-  a tiny fraction (must fit broadcast; the cap is configurable and the tier
-  is counted so a runaway fraction is observable in metrics).
+  the exploded index entirely and joined via ONE broadcast nested-loop pass
+  per join — so hot cells never materialize in the shuffle.  At 100 TB the
+  large tier is a tiny fraction (must fit broadcast; the cap is configurable
+  and the tier is counted so a runaway fraction is observable in metrics).
+  Antimeridian-crossing boxes ride the same tier as ONE wrapped row each
+  (west > east: the box holds [west, 180] and [-180, east]) with
+  wrap-aware predicates, so no counterpart can reach a doc twice and no
+  join needs a pair dedup.
 - **Salting**: ``salt`` replicates index rows S ways and routes probes by
   ``pmod(hash(key), S)`` for residual per-cell hotspots.
 - **AQE**: runtime skew-join splitting for anything left.
@@ -76,9 +80,8 @@ def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
     if "split" not in e.columns:  # extents not built by extents_df carry no parts
         e = e.withColumn("split", F.lit(False))
     # antimeridian-crossing boxes (split parts) always ride the broadcast
-    # tier: they are as rare as whole-world boxes, and keeping them out of
-    # the exploded index means the reference-point dedup never sees a doc
-    # twice — cross-tier duplicate pairs become impossible
+    # tier: they are as rare as whole-world boxes, and the exploded index
+    # and its reference-point dedup then only ever see west <= east
     return e.withColumn("n_cells", covering_size_expr(*_BOX, level)).withColumn(
         "is_large", F.expr(f"n_cells > {large_cap} OR split")
     )
@@ -123,9 +126,11 @@ class CellIndex:
 
     ``cells`` is the exploded small-tier covering (one row per doc and
     cell); ``large`` is the broadcast tier (doc_id, west, south, east,
-    north, split): coverings above ``large_cap`` cells and every
-    antimeridian-split part; ``level`` is the grid level of ``cells``.
-    :meth:`build` computes both frames from extents;
+    north, split), one row per doc: coverings above ``large_cap`` cells,
+    and every antimeridian-crossing box folded back from its two split
+    parts into one wrapped row (west > east, ``split`` true); ``level`` is
+    the grid level of ``cells``.  :meth:`build` computes both frames from
+    extents (the fold is one ``groupBy`` over the split slice only);
     ``gmx.geometry.bucketed.open_cell_index`` reads them back from the
     tables ``write_cell_index`` stored."""
 
@@ -138,9 +143,17 @@ class CellIndex:
         cls, extents: DataFrame, level: int = DEFAULT_LEVEL, large_cap: int = DEFAULT_LARGE_CAP
     ) -> CellIndex:
         ext = _with_tier(extents, level, large_cap)
+        # part 0 is [west, 180] and part 1 [-180, east]: max(west) and
+        # min(east) are the crossing box's own sides
+        wrapped = ext.filter("split").groupBy("doc_id").agg(
+            F.expr("max(west) AS west"), F.expr("min(south) AS south"),
+            F.expr("min(east) AS east"), F.expr("max(north) AS north"),
+            F.expr("true AS split"),
+        )
         return cls(
             cover_cells(ext.filter("NOT is_large"), level),
-            ext.filter("is_large").select("doc_id", *_BOX, "split"),
+            ext.filter("is_large AND NOT split").select("doc_id", *_BOX, "split")
+            .unionByName(wrapped),
             level,
         )
 
@@ -148,8 +161,8 @@ class CellIndex:
         """One row per extent: (doc_id, west, south, east, north, is_large,
         split).  A small-tier doc's covering holds its (west, south) corner
         cell exactly once, so keeping that row is a filter — no dedup
-        shuffle over the index; the large tier adds every row, both parts of
-        a split box included."""
+        shuffle over the index; the large tier adds its rows, one per doc
+        (a crossing box as its wrapped row)."""
 
         corner = point_cell_sql("west", "south", self.level)
         small = self.cells.filter(f"cell = {corner}").selectExpr(
@@ -163,16 +176,38 @@ class CellIndex:
 # (one F.expr / selectExpr each at the join), like the grid expressions.
 
 def _overlap(a: str, b: str) -> str:
+    """Closed-interval box overlap of two boxes with west <= east."""
+
     return (
         f"{a}.west <= {b}.east AND {b}.west <= {a}.east"
         f" AND {a}.south <= {b}.north AND {b}.south <= {a}.north"
     )
 
 
-def _contains() -> str:
-    """Closed-interval point-in-box: ``lon``/``lat`` inside ``west..north``."""
+def _holds(box: str, lon: str) -> str:
+    """The longitude range of ``box`` (a column prefix) holds ``lon``; a
+    wrapped range (west > east) holds [west, 180] and [-180, east]."""
 
-    return "west <= lon AND lon <= east AND south <= lat AND lat <= north"
+    w, e = f"{box}west", f"{box}east"
+    return f"if({w} <= {e}, {w} <= {lon} AND {lon} <= {e}, {w} <= {lon} OR {lon} <= {e})"
+
+
+def _wrap_overlap(a: str, b: str) -> str:
+    """:func:`_overlap` for boxes that may wrap: two closed longitude ranges
+    meet iff one holds the other's west side (two wrapped ranges always
+    meet, at 180)."""
+
+    return (
+        f"({_holds(f'{a}.', f'{b}.west')} OR {_holds(f'{b}.', f'{a}.west')})"
+        f" AND {a}.south <= {b}.north AND {b}.south <= {a}.north"
+    )
+
+
+def _contains() -> str:
+    """Closed-interval point-in-box: ``lon``/``lat`` inside ``west..north``
+    (wrap-aware, see :func:`_holds`)."""
+
+    return f"{_holds('', 'lon')} AND south <= lat AND lat <= north"
 
 
 def _refine(a: str, b: str, cell: str, level: int) -> str:
@@ -191,11 +226,18 @@ def _pair(a: str, b: str) -> list[str]:
             f"greatest({a}.doc_id, {b}.doc_id) AS b_id"]
 
 
-def _over_budget(tier: DataFrame, budget: int | None) -> bool:
-    """Whether ``tier`` holds more than ``budget`` rows: one
-    ``limit(budget+1).count()`` job, none when there is no budget."""
+def _large_tiers(ix: CellIndex, budget: int | None) -> tuple[DataFrame, DataFrame | None]:
+    """The large-tier rows to broadcast, and those to route through
+    :func:`_coarse_join` instead (``None`` when there are none).  Over
+    ``budget`` non-split rows — decided by one ``limit(budget+1).count()``
+    job, none when there is no budget — only the wrapped rows stay
+    broadcast: they have no coarse covering, and they are bounded by
+    crossing-box rarity."""
 
-    return budget is not None and tier.limit(budget + 1).count() > budget
+    flat = ix.large.filter("NOT split")
+    if budget is not None and flat.limit(budget + 1).count() > budget:
+        return ix.large.filter("split"), flat
+    return ix.large, None
 
 
 def _salt(index: DataFrame, probe: DataFrame, key: str, salt: int) -> tuple[DataFrame, DataFrame]:
@@ -225,17 +267,17 @@ def _coarse_join(probe: DataFrame, key: str, large: DataFrame, level: int, salt:
 
 
 def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
-    """Broadcast join of the large tier against a counterpart stream with
+    """Broadcast join of large-tier rows against a counterpart stream with
     the pair-dedup rules: large x large emits in one doc-id order only,
     EXCEPT counterparts living in the overflow tier (``is_overflow``), whose
     pairs with broadcast rows must emit regardless of order (the coarse
-    overflow join's probe side excludes split rows)."""
+    overflow join never sees the broadcast wrapped rows)."""
 
     o, l = o_side.alias("o"), l_side.alias("l")
     return o.join(
         F.broadcast(l),
         F.expr(
-            f"{_overlap('l', 'o')} AND o.doc_id != l.doc_id"
+            f"{_wrap_overlap('l', 'o')} AND o.doc_id != l.doc_id"
             " AND (NOT o.is_large OR o.is_overflow OR o.doc_id > l.doc_id)"
         ),
     ).selectExpr(*_pair("l", "o"))
@@ -254,42 +296,25 @@ def _overlap_pairs(
     ix: CellIndex, large_budget: int | None, overflow_level: int, overflow_salt: int
 ) -> DataFrame:
     """The overlap join body: small x small through :func:`_small_pairs`;
-    the large tier broadcast against :meth:`CellIndex.docs` (or, over
-    ``large_budget``, its non-split rows through :func:`_coarse_join`)."""
+    the large tier broadcast against :meth:`CellIndex.docs` in one
+    nested-loop join (or, over ``large_budget``, its non-split rows through
+    :func:`_coarse_join`).  Every doc is one row on either side, so no
+    pair needs a dedup."""
 
-    # Split-involved combinations are routed through SEPARATE (near-empty)
-    # joins and deduped there: a counterpart overlapping BOTH parts of a
-    # crossing box would otherwise emit the pair once per part combo.  The
-    # inputs are split BEFORE joining so the heavy non-split stream is joined
-    # exactly once with no dedup shuffle (filtering the join OUTPUT twice
-    # would re-execute the broadcast join per branch).
-    l_ns = ix.large.filter("NOT split")
-    l_s = ix.large.filter("split")
-    overflow = _over_budget(l_ns, large_budget)
-    # rows that live in the overflow tier (emitted there, so the split
-    # broadcast must emit their pairs with split rows regardless of doc-id
-    # order — the coarse join's probe side excludes split rows)
+    bcast, coarse = _large_tiers(ix, large_budget)
+    # rows that live in the overflow tier pair with each other in the
+    # coarse join, so the broadcast must emit their pairs with wrapped rows
+    # regardless of doc-id order
     other = ix.docs().withColumn(
-        "is_overflow", F.expr(f"{str(overflow).lower()} AND is_large AND NOT split")
+        "is_overflow", F.expr(f"{str(coarse is not None).lower()} AND is_large AND NOT split")
     )
-    if overflow:
-        large_pairs = (
-            _coarse_join(other.filter("NOT split"), "doc_id", l_ns, overflow_level, overflow_salt)
-            .filter("o.doc_id != l.doc_id AND (NOT o.is_overflow OR l.doc_id < o.doc_id)")
-            .selectExpr(*_pair("l", "o"))
-        )
-        # split tier (still broadcast — bounded): pairs with EVERYTHING,
-        # including overflow rows in either doc-id order
-        split_pairs = _ljoin_large(other, l_s)
-    else:
-        large_pairs = _ljoin_large(other.filter("NOT split"), l_ns)
-        split_pairs = _ljoin_large(other.filter("split"), l_ns).unionByName(
-            _ljoin_large(other, l_s)
-        )
-    return (
-        _small_pairs(ix)
-        .unionByName(large_pairs)
-        .unionByName(split_pairs.dropDuplicates(["a_id", "b_id"]))
+    pairs = _small_pairs(ix).unionByName(_ljoin_large(other, bcast))
+    if coarse is None:
+        return pairs
+    return pairs.unionByName(
+        _coarse_join(other.filter("NOT split"), "doc_id", coarse, overflow_level, overflow_salt)
+        .filter("o.doc_id != l.doc_id AND (NOT o.is_overflow OR l.doc_id < o.doc_id)")
+        .selectExpr(*_pair("l", "o"))
     )
 
 
@@ -309,9 +334,9 @@ def bbox_overlap_pairs(
     ``large_budget``: when set and the non-split large tier exceeds that many
     rows, the tier is NOT broadcast — it routes through the salted
     coarse-cell equi-join (:func:`_coarse_join`) so the broadcast size
-    stays bounded by the (rare) antimeridian-split rows alone.  Deciding
-    costs one ``limit(budget+1).count()`` job over the tier, so callers
-    should cache ``extents``; ``None`` (default) skips the probe.
+    stays bounded by the (rare) wrapped antimeridian-crossing rows alone.
+    Deciding costs one ``limit(budget+1).count()`` job over the tier, so
+    callers should cache ``extents``; ``None`` (default) skips the probe.
     """
 
     ix = CellIndex.build(extents, level, large_cap)
@@ -359,8 +384,8 @@ def _point_hits(
 ) -> DataFrame:
     """The point-in-bbox body: points probe the small tier on their one
     cell (salted when ``salt`` > 1) and the large tier by broadcast — or,
-    over ``large_budget``, on their one coarse cell, so no dedup is needed
-    either way."""
+    over ``large_budget``, its non-split rows on their one coarse cell — so
+    no dedup is needed either way."""
 
     if salt == "auto":
         salt = _cell_salt(ix.cells, salt_rows_per_shard)
@@ -372,17 +397,20 @@ def _point_hits(
         keys.append("osalt")
     small_hits = pts.join(idx, on=keys).filter(_contains()).select("point_id", "doc_id")
 
-    # split parts are plain rectangles for containment: no pair-dedup hazard
-    if _over_budget(ix.large, large_budget):
-        lidx, pts_c = _salt(
-            _explode_cover(ix.large.select("doc_id", *_BOX), overflow_level, "ccell"),
-            points.withColumn("ccell", point_cell_expr("lon", "lat", overflow_level)),
-            "point_id", overflow_salt,
-        )
-        large_hits = pts_c.join(lidx, on=["ccell", "osalt"]).filter(_contains())
-    else:
-        large_hits = points.join(F.broadcast(ix.large), F.expr(_contains()))
-    return small_hits.unionByName(large_hits.select("point_id", "doc_id"))
+    bcast, coarse = _large_tiers(ix, large_budget)
+    hits = small_hits.unionByName(
+        points.join(F.broadcast(bcast), F.expr(_contains())).select("point_id", "doc_id")
+    )
+    if coarse is None:
+        return hits
+    lidx, pts_c = _salt(
+        _explode_cover(coarse.select("doc_id", *_BOX), overflow_level, "ccell"),
+        points.withColumn("ccell", point_cell_expr("lon", "lat", overflow_level)),
+        "point_id", overflow_salt,
+    )
+    return hits.unionByName(
+        pts_c.join(lidx, on=["ccell", "osalt"]).filter(_contains()).select("point_id", "doc_id")
+    )
 
 
 def point_in_bbox(
@@ -404,10 +432,10 @@ def point_in_bbox(
     the input, same caveat as ``large_budget``) instead of a hand-picked
     constant.
 
-    ``large_budget``: over budget, the ENTIRE large tier (split parts are
-    plain rectangles for containment — no pair-dedup hazard) probes through
-    the salted coarse-cell equi-join instead of a broadcast: each point maps
-    to exactly one coarse cell, so no dedup is needed."""
+    ``large_budget``: over budget, the non-split large tier probes through
+    the salted coarse-cell equi-join instead of a broadcast (each point maps
+    to exactly one coarse cell, so no dedup is needed); the wrapped
+    antimeridian-crossing rows stay broadcast."""
 
     ix = CellIndex.build(extents, level, large_cap)
     return _point_hits(
@@ -594,33 +622,25 @@ def _tile_hits(
     overflow_salt: int = OVERFLOW_SALT,
 ) -> DataFrame:
     """The raster-tile join body: tile coverings join the small tier with
-    reference-point dedup, the non-split large tier by broadcast (or, over
-    ``large_budget``, through :func:`_coarse_join`)."""
+    reference-point dedup, the large tier in one broadcast (or, over
+    ``large_budget``, its non-split rows through :func:`_coarse_join`); a
+    crossing box is one wrapped row, so no tile reaches a doc twice."""
 
     tbox = tile_boxes(tiles)
     t, d = _explode_cover(tbox, ix.level, "cell").alias("t"), ix.cells.alias("d")
     small_hits = t.join(d, F.expr(_refine("t", "d", "cell", ix.level))).select("tile_id", "doc_id")
-    l_ns = ix.large.filter("NOT split")
-    if _over_budget(l_ns, large_budget):
-        large_hits = _coarse_join(tbox, "tile_id", l_ns, overflow_level, overflow_salt).select(
-            "o.tile_id", "l.doc_id"
-        )
-    else:
-        large_hits = (
-            tbox.alias("t")
-            .join(F.broadcast(l_ns.alias("d")), F.expr(_overlap("t", "d")))
-            .select("tile_id", "doc_id")
-        )
-    # a tile can overlap both parts of an antimeridian-crossing box; the
-    # split slice joins separately (near-empty input) and dedups there, so
-    # the non-split broadcast join runs once with no dedup shuffle
-    split_hits = (
+    bcast, coarse = _large_tiers(ix, large_budget)
+    hits = small_hits.unionByName(
         tbox.alias("t")
-        .join(F.broadcast(ix.large.filter("split").alias("d")), F.expr(_overlap("t", "d")))
+        .join(F.broadcast(bcast.alias("d")), F.expr(_wrap_overlap("t", "d")))
         .select("tile_id", "doc_id")
-        .dropDuplicates(["tile_id", "doc_id"])
     )
-    return small_hits.unionByName(large_hits).unionByName(split_hits)
+    if coarse is None:
+        return hits
+    return hits.unionByName(
+        _coarse_join(tbox, "tile_id", coarse, overflow_level, overflow_salt)
+        .select("o.tile_id", "l.doc_id")
+    )
 
 
 def tile_extent_join(
@@ -638,7 +658,8 @@ def tile_extent_join(
 
     ``large_budget``: over budget, the non-split large tier joins tiles
     through the salted coarse-cell equi-join with reference-point dedup
-    (split parts stay broadcast — bounded by crossing-box rarity)."""
+    (wrapped crossing rows stay broadcast — bounded by crossing-box
+    rarity)."""
 
     ix = CellIndex.build(extents, level, large_cap)
     return _tile_hits(tiles, ix, large_budget, overflow_level, overflow_salt)

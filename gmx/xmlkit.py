@@ -175,23 +175,5 @@ def append_at(parent: ET.Element, path: str, text: str | None = None, **attrs) -
     return el
 
 
-def write_value(parent: ET.Element, path: str, values: list[str] | str) -> None:
-    """Write one element per value at ``path`` (or an attribute for ``@`` paths)."""
-
-    vals = [values] if isinstance(values, str) else list(values)
-    vals = [v for v in vals if v]
-    if not vals:
-        return
-    base, attr = split_attr(path)
-    if attr is None:
-        for v in vals:
-            append_at(parent, base, text=v)
-    elif base:
-        target = ensure(parent, base)
-        target.set(attr, ",".join(vals))
-    else:
-        parent.set(attr, ",".join(vals))
-
-
 def to_string(el: ET.Element) -> str:
     return ET.tostring(el, encoding="unicode")

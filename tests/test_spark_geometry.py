@@ -166,6 +166,25 @@ def test_tile_join_exact(spark, extents, boxes):
     assert got == want
 
 
+def _lon_parts(w, e):
+    return [(w, e)] if w <= e else [(w, 180.0), (-180.0, e)]
+
+
+def _parts_overlap(a, b):
+    lon = any(pw <= qe and qw <= pe
+              for pw, pe in _lon_parts(a[0], a[2]) for qw, qe in _lon_parts(b[0], b[2]))
+    return lon and a[1] <= b[3] and b[1] <= a[3]
+
+
+def _box_meta(spark, boxes):
+    """A metadata frame with one (doc_id -> box) bounding box per row."""
+    return spark.createDataFrame(
+        [(d, "iso", tuple(str(v) for v in b)) for d, b in boxes.items()],
+        "doc_id string, standard string, "
+        "bounding_box struct<west:string,south:string,east:string,north:string>",
+    )
+
+
 def test_antimeridian_crossing_boxes(spark):
     """A west>east box splits into flagged parts; pair-emitting joins must
     yield each (a, b) exactly once even when a counterpart overlaps BOTH
@@ -178,12 +197,7 @@ def test_antimeridian_crossing_boxes(spark):
         "far": (0.0, 40.0, 10.0, 50.0),         # no overlap with cross
         "west2": (-179.0, -5.0, -175.0, 5.0),   # overlaps part 1 only
     }
-    meta = spark.createDataFrame(
-        [(d, "iso", tuple(str(v) for v in b)) for d, b in boxes.items()],
-        "doc_id string, standard string, "
-        "bounding_box struct<west:string,south:string,east:string,north:string>",
-    )
-    ext = extents_df(meta)
+    ext = extents_df(_box_meta(spark, boxes))
 
     parts = sorted(
         (r.part, r.west, r.east) for r in ext.filter("doc_id = 'cross'").collect()
@@ -191,21 +205,10 @@ def test_antimeridian_crossing_boxes(spark):
     assert parts == [(0, 170.0, 180.0), (1, -180.0, -170.0)]
     assert all(r.split for r in ext.filter("doc_id = 'cross'").collect())
 
-    def lon_parts(w, e):
-        return [(w, e)] if w <= e else [(w, 180.0), (-180.0, e)]
-
-    def olap(a, b):
-        lon = any(
-            pw <= qe and qw <= pe
-            for pw, pe in lon_parts(a[0], a[2])
-            for qw, qe in lon_parts(b[0], b[2])
-        )
-        return lon and a[1] <= b[3] and b[1] <= a[3]
-
     want = {
         (x, y)
         for x, y in itertools.combinations(sorted(boxes), 2)
-        if olap(boxes[x], boxes[y])
+        if _parts_overlap(boxes[x], boxes[y])
     }
     got = [(r.a_id, r.b_id) for r in bbox_overlap_pairs(ext).collect()]
     assert len(got) == len(set(got)), "duplicate pairs emitted"
@@ -359,28 +362,12 @@ def test_overflow_tier_with_split_boxes(spark):
         "west2": (-179.0, -5.0, -175.0, 5.0),
         "zband": (-180.0, -25.0, 180.0, 25.0),  # second overflow row, doc_id AFTER cross
     }
-    meta = spark.createDataFrame(
-        [(d, "iso", tuple(str(v) for v in b)) for d, b in boxes.items()],
-        "doc_id string, standard string, "
-        "bounding_box struct<west:string,south:string,east:string,north:string>",
-    )
-    ext = extents_df(meta)
-
-    def lon_parts(w, e):
-        return [(w, e)] if w <= e else [(w, 180.0), (-180.0, e)]
-
-    def olap(a, b):
-        lon = any(
-            pw <= qe and qw <= pe
-            for pw, pe in lon_parts(a[0], a[2])
-            for qw, qe in lon_parts(b[0], b[2])
-        )
-        return lon and a[1] <= b[3] and b[1] <= a[3]
+    ext = extents_df(_box_meta(spark, boxes))
 
     want = {
         (x, y)
         for x, y in itertools.combinations(sorted(boxes), 2)
-        if olap(boxes[x], boxes[y])
+        if _parts_overlap(boxes[x], boxes[y])
     }
     for budget in (None, 0):
         got = [
@@ -407,7 +394,7 @@ def test_overflow_tier_with_split_boxes(spark):
         (pid, d)
         for pid, x, y in ((1, 179.0, 0.0), (2, -179.0, 0.0), (3, 5.0, 45.0))
         for d, b in boxes.items()
-        if any(pw <= x <= pe for pw, pe in lon_parts(b[0], b[2])) and b[1] <= y <= b[3]
+        if _parts_overlap(b, (x, y, x, y))
     }
     got_pts = {
         (r.point_id, r.doc_id)
@@ -596,8 +583,9 @@ def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path):
 def test_cell_index_doc_view(spark, extents, tmp_path):
     """CellIndex.docs() yields every small-tier doc exactly once plus every
     large-tier row, for a built and for an opened index alike — on cell
-    edges, point boxes, the +-180/+-90 clamps and antimeridian splits — and
-    on an opened index it is a filter over the stored tables: no Exchange."""
+    edges, point boxes, the +-180/+-90 clamps and antimeridian-crossing
+    boxes, each of which is ONE wrapped row — and on an opened index it is
+    a filter over the stored tables: no Exchange."""
 
     from gmx.geometry.bucketed import open_cell_index, write_cell_index
     from gmx.geometry.joins import CellIndex
@@ -617,16 +605,21 @@ def test_cell_index_doc_view(spark, extents, tmp_path):
         "cross_line": (180.0, 0.0, -180.0, 5.0),  # split into two slivers
         "world": (-180.0, -90.0, 180.0, 90.0),    # large tier
     }
-    meta = spark.createDataFrame(
-        [(d, "iso", tuple(str(v) for v in b)) for d, b in boxes.items()],
-        "doc_id string, standard string, "
-        "bounding_box struct<west:string,south:string,east:string,north:string>",
-    )
+    meta = _box_meta(spark, boxes)
     small_ids = set(boxes) - {"cross", "cross_line", "world"}
 
     def rows(df):
         return sorted(tuple(r) for r in df.select("doc_id", "west", "south", "east", "north",
                                                   "split").collect())
+
+    def folded(ext):
+        """Extent rows with a crossing box's two parts as one wrapped row."""
+        by_doc = {}
+        for d, w, s, e, n, split in rows(ext):
+            if d in by_doc:  # part 0 is [west, 180], part 1 [-180, east]
+                w, e = max(w, by_doc[d][1]), min(e, by_doc[d][3])
+            by_doc[d] = (d, w, s, e, n, split)
+        return sorted(by_doc.values())
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for name, ext in (("gmx_test_docview", extents_df(meta)), ("gmx_test_docview_sf", extents)):
@@ -639,7 +632,7 @@ def test_cell_index_doc_view(spark, extents, tmp_path):
             assert len(small) == len(set(small))  # one row per small-tier doc
             assert set(small) == {r.doc_id for r in ix.cells.select("doc_id").collect()}
             assert rows(docs.filter("is_large")) == rows(ix.large)
-            assert rows(docs) == rows(ext)  # every extent row, once
+            assert rows(docs) == folded(ext)  # every doc, once
             if name == "gmx_test_docview":
                 assert set(small) == small_ids
 
@@ -651,6 +644,138 @@ def test_cell_index_doc_view(spark, extents, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(f"DROP TABLE IF EXISTS {name}_large")
+
+
+def test_wrapped_large_tier_matches_brute_force(spark, tmp_path):
+    """The large tier holds one row per doc, a crossing box as one wrapped
+    row (west > east), and bbox overlap, point-in-bbox and tile joins equal
+    brute force over the split parts — on the fly, from the index and with
+    large_budget=0 — each pair exactly once.  The served bbox and tile
+    plans join the large tier in ONE broadcast nested-loop join with no
+    pair-level aggregate."""
+
+    from gmx.geometry.bucketed import (
+        bbox_overlap_pairs_from_index,
+        open_cell_index,
+        point_in_bbox_from_index,
+        tile_extent_join_from_index,
+        write_cell_index,
+    )
+    from gmx.geometry.joins import CellIndex, _tile_hits
+
+    boxes = {
+        "band": (-180.0, -20.0, 180.0, 20.0),      # whole longitude range in 64 cells: small tier
+        "cross": (170.0, -10.0, -170.0, 10.0),
+        "cross2": (175.0, 0.0, -175.0, 30.0),      # crossing x crossing
+        "cross_line": (180.0, 0.0, -180.0, 5.0),   # west=180, east=-180: two slivers
+        "touch_e": (170.0, 40.0, -180.0, 50.0),    # part 1 is the line lon=-180
+        "touch_w": (180.0, -50.0, -170.0, -40.0),  # part 0 is the line lon=180
+        "east": (175.0, -5.0, 180.0, 5.0),         # touches 180 only
+        "west": (-180.0, -5.0, -175.0, 5.0),       # touches -180 only
+        "far": (0.0, 40.0, 10.0, 50.0),
+        "small_e": (172.0, 42.0, 174.0, 44.0),     # inside touch_e's part 0
+        "world": (-180.0, -90.0, 180.0, 90.0),     # crossing x whole world
+    }
+    pts = [
+        (1, 179.0, 0.0), (2, -179.0, 0.0), (3, 180.0, 0.0), (4, -180.0, 0.0),
+        (5, 180.0, 45.0), (6, -180.0, 45.0), (7, 180.0, -45.0), (8, -180.0, -45.0),
+        (9, 173.0, 43.0), (10, 5.0, 45.0), (11, 180.0, 2.0), (12, -180.0, 2.0),
+    ]
+    ext = extents_df(_box_meta(spark, boxes))
+    large = [tuple(r) for r in CellIndex.build(ext).large
+             .select("doc_id", "west", "south", "east", "north", "split").collect()]
+    assert len(large) == len({r[0] for r in large})  # one row per large doc
+    crossing = {d for d, b in boxes.items() if b[0] > b[2]}
+    assert {r[0] for r in large} == crossing | {"world"}
+    for d, *box, split in large:
+        assert (tuple(box), split) == (boxes[d], d in crossing)  # wrapped: the box itself
+
+    want = {(a, b) for a, b in itertools.combinations(sorted(boxes), 2)
+            if _parts_overlap(boxes[a], boxes[b])}
+    pdf = spark.createDataFrame(pts, "point_id long, lon double, lat double")
+    want_pts = {(k, d) for k, x, y in pts for d, b in boxes.items()
+                if _parts_overlap(b, (x, y, x, y))}
+    tiles = [(f"t{z}-{x}-{y}", z, x, y) for z in (0, 2, 3)
+             for x in range(2**z) for y in range(2**z)]
+    tdf = spark.createDataFrame(tiles, "tile_id string, z int, x int, y int")
+    want_tiles = set()
+    for t, z, x, y in tiles:
+        tw, ts = -180 + x * 360 / 2**z, -90 + y * 180 / 2**z
+        tbox = (tw, ts, tw + 360 / 2**z, ts + 180 / 2**z)
+        want_tiles |= {(t, d) for d, b in boxes.items() if _parts_overlap(tbox, b)}
+
+    table = "gmx_test_wrapidx"
+    for t in (table, f"{table}_large"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    write_cell_index(ext, table, str(tmp_path / "wrapidx"))
+    runs = {
+        "on the fly": (
+            lambda b: bbox_overlap_pairs(ext, large_budget=b),
+            lambda b: point_in_bbox(pdf, ext, large_budget=b),
+            lambda b: tile_extent_join(tdf, ext, large_budget=b),
+        ),
+        "from index": (
+            lambda b: bbox_overlap_pairs_from_index(spark, table, large_budget=b),
+            lambda b: point_in_bbox_from_index(spark, pdf, table, large_budget=b),
+            lambda b: _tile_hits(tdf, open_cell_index(spark, table), b),
+        ),
+    }
+    for source, (pairs, hits, tile_hits) in runs.items():
+        for budget in (None, 0):
+            at = (source, budget)
+            got = [(r.a_id, r.b_id) for r in pairs(budget).collect()]
+            assert len(got) == len(set(got)) and set(got) == want, at
+            got = [(r.point_id, r.doc_id) for r in hits(budget).collect()]
+            assert len(got) == len(set(got)) and set(got) == want_pts, at
+            got = [(r.tile_id, r.doc_id) for r in tile_hits(budget).collect()]
+            assert len(got) == len(set(got)) and set(got) == want_tiles, at
+
+    for served in (bbox_overlap_pairs_from_index(spark, table),
+                   tile_extent_join_from_index(spark, tdf, table)):
+        planned = served._jdf.queryExecution().executedPlan().toString()
+        served.collect()
+        # the finished adaptive plan prints its final and its initial plan
+        final = served._jdf.queryExecution().executedPlan().toString()
+        final = final.split("== Initial Plan ==")[0]
+        for plan in (planned, final):
+            assert plan.count("BroadcastNestedLoopJoin") == 1, plan[:3000]
+            assert "HashAggregate" not in plan, plan[:3000]
+    for t in (table, f"{table}_large"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_index_tables_one_file_per_bucket(spark, extents, tmp_path):
+    """Every table write_cell_index and write_centroid_index store holds at
+    most ``buckets`` data files, and every row of a bucketed table's file
+    hashes to the bucket id in that file's name: the tables are written
+    bucket-aligned, one file per bucket."""
+
+    import re
+
+    from gmx.geometry.bucketed import write_cell_index, write_centroid_index
+
+    buckets = 4
+    cell, cent = "gmx_test_layout_cell", "gmx_test_layout_cent"
+    for t in (cell, f"{cell}_large", cent):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    write_cell_index(extents, cell, str(tmp_path / "cell"), buckets=buckets)
+    write_centroid_index(extents, cent, str(tmp_path / "cent"), buckets=buckets)
+
+    # cell_large is not bucketed: its file count follows the partitioning
+    # of the extents, which for this fixture is below ``buckets``
+    for name, bucketed in (("cell", True), ("cell_large", False), ("cent", True)):
+        files = sorted((tmp_path / name).glob("*.parquet"))
+        assert 0 < len(files) <= buckets, (name, [f.name for f in files])
+        if not bucketed:
+            continue
+        ids = [int(re.fullmatch(r".*_(\d+)(?:\..*)?", f.name).group(1)) for f in files]
+        assert len(set(ids)) == len(ids), name  # one file per bucket
+        for f, bucket in zip(files, ids):
+            got = {r[0] for r in spark.read.parquet(str(f))
+                   .selectExpr(f"pmod(hash(cell), {buckets})").distinct().collect()}
+            assert got == {bucket}, (name, f.name)
+    for t in (cell, f"{cell}_large", cent):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path):
