@@ -98,8 +98,8 @@ def main() -> None:
     tiles = _tiles(spark)
 
     # index table names/paths: per (sf, scale) so parallel configurations
-    # never collide; bucket count fixed at 16 (matches the two-CPU task
-    # slots at local[32]; at corpus scale pick O(cluster cores))
+    # never collide; the writers default to one bucket per core of the
+    # session (at corpus scale pass buckets sized to the data)
     idx_dir = f"/tmp/gmx_bench_idx_{sf_name}_x{scale}"
     cell_tab, cent_tab = "gmx_bench_cell_idx", "gmx_bench_cent_idx"
 

@@ -11,8 +11,11 @@ Each bucketed table is shuffled to bucket alignment before it is written
 (``repartition(buckets, "cell")`` hashes exactly like ``bucketBy``), so
 every write task holds one bucket and writes ONE file: a table has at most
 ``buckets`` files, whatever the input's partitioning, and every reader
-opens that many.  Write parallelism therefore equals ``buckets``: pick
-about one bucket per core.
+opens that many.  Write parallelism and served-scan partitions therefore
+equal ``buckets``, which defaults to the session's parallelism (one bucket
+per core); at corpus scale pass ``buckets`` sized to the data.  The
+broadcast tier ``<table>_large`` is one small aggregate, so AQE coalesces
+it to one file (files near its coalescing size at corpus scale).
 
 This module only stores and opens indexes: :func:`write_cell_index` writes
 the two frames of ``joins.CellIndex.build`` and :func:`open_cell_index`
@@ -64,16 +67,20 @@ from gmx.session import app_scoped
 
 
 def _write_bucketed(
-    df: DataFrame, table: str, path: str, level: int, buckets: int, with_counts: bool = False
+    df: DataFrame, table: str, path: str, level: int, buckets: int | None,
+    with_counts: bool = False,
 ) -> None:
     """Write ``df`` as an external table bucketed and sorted by ``cell``,
-    one file per bucket (``buckets`` write tasks), recording the grid
-    level and bucket count as table properties (and the level in the
-    process memo).  ``with_counts`` also records the per-cell
-    row counts (``gmx.cell_counts``), aggregated over the written table:
+    one file per bucket (``buckets`` write tasks; ``None`` is one per
+    core), recording the grid level and the resolved bucket count as table
+    properties (and the level in the process memo).  ``with_counts`` also
+    records the per-cell row counts (``gmx.cell_counts``), aggregated over
+    the written table:
     grouping by the bucket column is one stage with no Exchange, and it
     counts exactly the rows readers will see."""
 
+    spark = df.sparkSession
+    buckets = buckets or spark.sparkContext.defaultParallelism
     (
         df.repartition(buckets, "cell")
         .write.mode("overwrite")
@@ -83,7 +90,6 @@ def _write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-    spark = df.sparkSession
     props = {"gmx.cell_level": level, "gmx.buckets": buckets}
     if with_counts:
         counts = cell_counts(spark.table(table))
@@ -102,14 +108,15 @@ def write_cell_index(
     path: str,
     level: int = DEFAULT_LEVEL,
     large_cap: int = DEFAULT_LARGE_CAP,
-    buckets: int = 16,
+    buckets: int | None = None,
 ) -> None:
     """Materialize ``CellIndex.build(extents, level, large_cap)``: the
     small-tier covering as a bucketed+sorted table, one file per bucket,
     the broadcast tier alongside as ``<table>_large`` (a tiny unbucketed
     table, one row per doc: a crossing box is one wrapped row).  The grid
-    level and bucket count are recorded as table properties.  The covering
-    is written by ``buckets`` tasks, so pick about one bucket per core."""
+    level and bucket count are recorded as table properties.  ``buckets``
+    defaults to one per core of the session; at corpus scale pass a count
+    sized to the data."""
 
     ix = CellIndex.build(extents, level, large_cap)
     _write_bucketed(ix.cells, table, path, level, buckets)
@@ -126,11 +133,12 @@ def write_centroid_index(
     table: str,
     path: str,
     level: int = 6,
-    buckets: int = 16,
+    buckets: int | None = None,
 ) -> None:
     """Materialize the kNN centroid index (doc_id, cx, cy, cell) bucketed +
     sorted by ``cell``, one file per bucket written by ``buckets`` tasks
-    (pick about one bucket per core), with its per-occupied-cell centroid
+    (default one per core of the session, as in :func:`write_cell_index`),
+    with its per-occupied-cell centroid
     counts recorded as table property ``gmx.cell_counts`` (one aggregate
     over the written table, run here once instead of on every kNN call).
 

@@ -130,7 +130,7 @@ class CellIndex:
     and every antimeridian-crossing box folded back from its two split
     parts into one wrapped row (west > east, ``split`` true); ``level`` is
     the grid level of ``cells``.  :meth:`build` computes both frames from
-    extents (the fold is one ``groupBy`` over the split slice only);
+    extents (the whole large tier is one ``groupBy("doc_id")``);
     ``gmx.geometry.bucketed.open_cell_index`` reads them back from the
     tables ``write_cell_index`` stored."""
 
@@ -143,19 +143,15 @@ class CellIndex:
         cls, extents: DataFrame, level: int = DEFAULT_LEVEL, large_cap: int = DEFAULT_LARGE_CAP
     ) -> CellIndex:
         ext = _with_tier(extents, level, large_cap)
-        # part 0 is [west, 180] and part 1 [-180, east]: max(west) and
-        # min(east) are the crossing box's own sides
-        wrapped = ext.filter("split").groupBy("doc_id").agg(
+        # one aggregate: a non-crossing doc's group is its one row; a
+        # crossing doc's part 0 is [west, 180] and part 1 [-180, east], so
+        # max(west) and min(east) are the crossing box's own sides
+        large = ext.filter("is_large").groupBy("doc_id").agg(
             F.expr("max(west) AS west"), F.expr("min(south) AS south"),
             F.expr("min(east) AS east"), F.expr("max(north) AS north"),
-            F.expr("true AS split"),
+            F.expr("bool_or(split) AS split"),
         )
-        return cls(
-            cover_cells(ext.filter("NOT is_large"), level),
-            ext.filter("is_large AND NOT split").select("doc_id", *_BOX, "split")
-            .unionByName(wrapped),
-            level,
-        )
+        return cls(cover_cells(ext.filter("NOT is_large"), level), large, level)
 
     def docs(self) -> DataFrame:
         """One row per extent: (doc_id, west, south, east, north, is_large,

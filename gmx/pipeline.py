@@ -4,8 +4,8 @@ Stage map (SURVEY.md §2/§3 EP1):
 - S1 ingest: span table scan; document text reassembled JVM-side with
   ``array_join(transform(filter(spans, ...)))`` — no Python touches the
   corpus until the single Arrow extraction pass.
-- S2 dispatch: ``standard`` via pure column expressions (root-tag regexp +
-  probe-node search), mirrored by the kernel's detect_standard.
+- S2 dispatch: ``standard`` from the parsed root inside the extraction pass
+  (the kernel's detect_standard: root tag + its direct children).
 - P1-P5/C1-C9 extraction: ONE ``mapInPandas`` pass per partition running the
   shared batch kernel (gmx.extract) — Arrow-batched, no per-row Python UDFs.
 - S3 catalog resolution: remote ISO-19110 attribute catalogs are sibling
@@ -96,30 +96,6 @@ def with_document_text(corpus: DataFrame) -> DataFrame:
         F.transform(
             F.filter("spans", lambda s: s["kind"] == F.lit("media")), lambda s: s["media_ref"]
         ).alias("media_refs"),
-    )
-
-
-# ------------------------------------------------------------- dispatch (S2)
-
-def with_standard(docs: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """Standard detection as pure column expressions (dispatch rules from
-    get_metadata_parser, metadata_parser.py:46-80): ISO roots MD_/MI_Metadata;
-    a <metadata>/<Metadata> root is ArcGIS iff a probe node occurs, else FGDC."""
-
-    root = F.regexp_extract(F.col(xml_col), r"<\s*([A-Za-z_][\w.]*)", 1)
-    has_probe = (
-        F.col(xml_col).contains("<dataIdInfo")
-        | F.col(xml_col).contains("<distInfo")
-        | F.col(xml_col).contains("<dqInfo")
-        | F.col(xml_col).contains("<Esri")
-    )
-    return docs.withColumn(
-        "standard",
-        F.when(root.isin("MD_Metadata", "MI_Metadata"), F.lit("iso"))
-        .when(root == "FC_FeatureCatalogue", F.lit("iso19110"))
-        .when(root.isin("metadata", "Metadata") & has_probe, F.lit("arcgis"))
-        .when(root.isin("metadata", "Metadata"), F.lit("fgdc"))
-        .otherwise(F.lit("")),
     )
 
 

@@ -745,35 +745,44 @@ def test_wrapped_large_tier_matches_brute_force(spark, tmp_path):
 
 
 def test_index_tables_one_file_per_bucket(spark, extents, tmp_path):
-    """Every table write_cell_index and write_centroid_index store holds at
-    most ``buckets`` data files, and every row of a bucketed table's file
-    hashes to the bucket id in that file's name: the tables are written
-    bucket-aligned, one file per bucket."""
+    """Every bucketed table write_cell_index and write_centroid_index store
+    holds at most ``buckets`` data files, and every row of its file hashes
+    to the bucket id in that file's name: the tables are written
+    bucket-aligned, one file per bucket.  The broadcast tier ``cell_large``
+    is one file whatever the input's partitioning.  Without ``buckets`` the
+    count is the session's parallelism, recorded as ``gmx.buckets``."""
 
     import re
 
     from gmx.geometry.bucketed import write_cell_index, write_centroid_index
 
-    buckets = 4
+    width = spark.sparkContext.defaultParallelism
     cell, cent = "gmx_test_layout_cell", "gmx_test_layout_cent"
-    for t in (cell, f"{cell}_large", cent):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    write_cell_index(extents, cell, str(tmp_path / "cell"), buckets=buckets)
-    write_centroid_index(extents, cent, str(tmp_path / "cent"), buckets=buckets)
+    for buckets in (4, None):
+        want = buckets or width
+        root = tmp_path / str(buckets)
+        # more input partitions than buckets: a per-partition write of the
+        # broadcast tier would leave several files
+        ext = extents.repartition(2 * want + 1)
+        for t in (cell, f"{cell}_large", cent):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        write_cell_index(ext, cell, str(root / "cell"), buckets=buckets)
+        write_centroid_index(ext, cent, str(root / "cent"), buckets=buckets)
+        for t in (cell, cent):
+            props = {r["key"]: r["value"]
+                     for r in spark.sql(f"SHOW TBLPROPERTIES {t}").collect()}
+            assert props["gmx.buckets"] == str(want), (t, props)
 
-    # cell_large is not bucketed: its file count follows the partitioning
-    # of the extents, which for this fixture is below ``buckets``
-    for name, bucketed in (("cell", True), ("cell_large", False), ("cent", True)):
-        files = sorted((tmp_path / name).glob("*.parquet"))
-        assert 0 < len(files) <= buckets, (name, [f.name for f in files])
-        if not bucketed:
-            continue
-        ids = [int(re.fullmatch(r".*_(\d+)(?:\..*)?", f.name).group(1)) for f in files]
-        assert len(set(ids)) == len(ids), name  # one file per bucket
-        for f, bucket in zip(files, ids):
-            got = {r[0] for r in spark.read.parquet(str(f))
-                   .selectExpr(f"pmod(hash(cell), {buckets})").distinct().collect()}
-            assert got == {bucket}, (name, f.name)
+        assert len(list((root / "cell_large").glob("*.parquet"))) == 1
+        for name in ("cell", "cent"):
+            files = sorted((root / name).glob("*.parquet"))
+            assert 0 < len(files) <= want, (name, [f.name for f in files])
+            ids = [int(re.fullmatch(r".*_(\d+)(?:\..*)?", f.name).group(1)) for f in files]
+            assert len(set(ids)) == len(ids), name  # one file per bucket
+            for f, bucket in zip(files, ids):
+                got = {r[0] for r in spark.read.parquet(str(f))
+                       .selectExpr(f"pmod(hash(cell), {want})").distinct().collect()}
+                assert got == {bucket}, (name, f.name)
     for t in (cell, f"{cell}_large", cent):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
