@@ -673,9 +673,10 @@ def ann_lsh_topk(spark, sf_dir):
 # dedup_minhash_lsh gate builds the byte-identical logical plan, so when a
 # clustering twin primed this memo first, Spark's CacheManager substitutes
 # the persisted subtree and serves that gate from cache — its RESULT is
-# identical either way (the gate checks values, not freshness), and the
-# band-join pipeline's cost is measured honestly in bench.py, which runs
-# minhash_dedup in its own session with no memo.  Keyed by the live
+# identical either way (the gate checks values, not freshness).  No gate
+# times the band join, and perfbench does not measure gmx.textops
+# (perfbench/README.md): time it with a call in a session of its own,
+# where no memo exists.  Keyed by the live
 # application (gmx.session.app_scoped): a DataFrame persisted under a
 # stopped session is never handed to a new one.
 _GATE_PAIRS: dict[tuple[str, str], DataFrame] = {}

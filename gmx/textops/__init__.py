@@ -3,7 +3,6 @@ from gmx.textops.dedup import (
     dup_clusters,
     exact_dup_groups,
     minhash_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_buckets,
     simhash_pairs,
@@ -23,13 +22,12 @@ from gmx.textops.similarity import (
     cosine_topk,
     embedding_near_dup,
     embedding_near_dup_lsh,
-    lsh_buckets,
 )
 
 __all__ = [
     "ann_ivf_topk", "ann_lsh_topk", "cosine_topk", "dup_clusters",
     "embedding_near_dup", "embedding_near_dup_lsh", "exact_dup_groups",
-    "lang_id", "lsh_buckets", "minhash_pairs", "minhash_signatures",
-    "ngram_jaccard_pairs", "quality_scores", "rolling_fingerprint",
-    "simhash_buckets", "simhash_pairs", "stratified_sample", "token_counts", "token_counts_regex",
+    "lang_id", "minhash_pairs", "ngram_jaccard_pairs", "quality_scores",
+    "rolling_fingerprint", "simhash_buckets", "simhash_pairs",
+    "stratified_sample", "token_counts", "token_counts_regex",
 ]

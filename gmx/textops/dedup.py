@@ -153,27 +153,6 @@ def _shingles(text_col: str, n: int = 3):
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", num_hashes: int = 16, shingle: int = 3,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """(doc_id, sig: array<long>): K minhashes over word-shingle hashes."""
-
-    sh = _shingles(text_col, shingle)
-    hashes = F.transform(sh, lambda s: _shingle_hash(s, hash_mode))
-    sig = F.array(*[
-        F.array_min(
-            F.transform(
-                hashes,
-                lambda h: F.pmod(h * F.lit(2 * i + 1).cast("long") + F.lit(7 * i + 3).cast("long"),
-                                 F.lit(MINHASH_PRIME).cast("long")),
-            )
-        )
-        for i in range(num_hashes)
-    ])
-    return docs.select("doc_id", sig.alias("sig"))
-
-
 def minhash_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -182,7 +161,6 @@ def minhash_pairs(
     shingle: int = 3,
     threshold: float = 0.5,
     hash_mode: str = "xxhash64",
-    verify_mode: str = "join_back",
 ) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
@@ -190,16 +168,11 @@ def minhash_pairs(
     candidates; candidates are verified with exact shingle Jaccard via an
     array intersection.  Returns (a_id, b_id, jaccard_per_mille).
 
-    ``verify_mode`` picks the shuffle trade (PLANS.md §11), matching
-    ngram_jaccard_pairs:
-    - "join_back" (default — the 100 TB shape): the band join moves only
-      (doc_id, band_key) ~16 B/doc/band; deduped candidate PAIRS then join
-      the shingle arrays back by doc id, so document bytes move once per
-      candidate side, not once per band.  At 10^12 docs the alternative
-      ships ~10 PB of shingle arrays through the band shuffle (PLANS §11).
-    - "ride": shingle arrays ride the band explode — one fewer corpus
-      shuffle, only sane when documents are tiny.  Identical results
-      (pytest-pinned).
+    The band join moves keys only, (doc_id, band key) ~16 B/doc/band;
+    deduped candidate PAIRS then join the shingle arrays back by doc id
+    (:func:`_jaccard_pairs`), so document bytes move once per candidate
+    side, not once per band.  Carrying the arrays through the band shuffle
+    instead would ship ~10 PB at 10^12 docs (PLANS §11).
     """
 
     rows = num_hashes // bands
@@ -244,39 +217,8 @@ def minhash_pairs(
             F.xxhash64(F.lit(b), *[F.element_at("sig", b * rows + r + 1) for r in range(rows)])
             for b in range(bands)
         ])
-    if verify_mode == "join_back":
-        keys = d.select("doc_id", F.explode(band_keys).alias("band_key"))
-        a, b = keys.alias("a"), keys.alias("b")
-        pairs = (
-            a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        sh = d.select("doc_id", "shingles")
-        cand = (
-            pairs.join(sh.withColumnRenamed("doc_id", "a_id").withColumnRenamed("shingles", "sa"), "a_id")
-            .join(sh.withColumnRenamed("doc_id", "b_id").withColumnRenamed("shingles", "sb"), "b_id")
-        )
-    else:
-        exploded = d.select("doc_id", "shingles", F.explode(band_keys).alias("band_key"))
-        a, b = exploded.alias("a"), exploded.alias("b")
-        cand = (
-            a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(
-                F.col("a.doc_id").alias("a_id"),
-                F.col("b.doc_id").alias("b_id"),
-                F.col("a.shingles").alias("sa"),
-                F.col("b.shingles").alias("sb"),
-            )
-            .dropDuplicates(["a_id", "b_id"])
-        )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.size("sa") + F.size("sb") - inter
-    jac = (inter.cast("long") * 1000 / union).cast("long")
-    return (
-        cand.select("a_id", "b_id", jac.alias("jaccard_per_mille"))
-        .filter(F.col("jaccard_per_mille") >= int(threshold * 1000))
-    )
+    keys = d.select("doc_id", F.explode(band_keys).alias("key"))
+    return _jaccard_pairs(keys, d, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -285,7 +227,6 @@ def ngram_jaccard_pairs(
     shingle: int = 3,
     threshold: float = 0.5,
     df_cap: int = 10_000,
-    verify_mode: str = "join_back",
 ) -> DataFrame:
     """N-gram Jaccard near-dup pairs via a df-pruned shingle inverted index.
 
@@ -296,8 +237,8 @@ def ngram_jaccard_pairs(
     inverted-index pruning).  The hot-shingle set has at most
     total_occurrences/df_cap entries — tiny — and rides a broadcast anti-join.
 
-    Verification is EXACT: the full (unpruned) shingle arrays ride the
-    explode, and each candidate pair's Jaccard is computed with
+    Verification is EXACT: the full (unpruned) shingle arrays are joined
+    back onto the candidate pairs, and each pair's Jaccard is computed with
     array_intersect over them — pruning can never produce a false positive or
     a wrong score.  The only approximation is a missed pair whose *entire*
     intersection is stop shingles; with Jaccard >= t a pair shares at least
@@ -305,63 +246,47 @@ def ngram_jaccard_pairs(
     one document — document + cap choice make it negligible, and the planted
     hot-shingle test pins the behavior.
 
-    ``verify_mode`` picks the shuffle trade (PLANS.md §11), mirroring
-    minhash_pairs:
-    - "join_back" (default — the 100 TB shape): the inverted index carries
-      KEYS ONLY (doc_id, shingle); deduped candidate pairs then join the
-      full shingle arrays back by doc id, so each document's array moves
-      once per candidate side instead of once per shingle.  Without this, a
-      doc with S shingles ships S copies of its S-element array into the
-      self-join — O(S²) bytes per doc.
-    - "ride": arrays ride the explode (one fewer corpus shuffle; only sane
-      when documents are tiny).  Identical results (pytest-pinned)."""
+    The inverted index carries KEYS ONLY, (doc_id, shingle), as in
+    :func:`minhash_pairs`: each document's array moves once per candidate
+    side instead of once per shingle.  Carrying the arrays through the
+    explode would ship S copies of a doc's S-element array into the
+    self-join — O(S²) bytes per doc."""
 
     sh = _shingles(text_col, shingle)
     base = docs.select("doc_id", sh.alias("shingles"))
     # df from a lean (shingle-only) projection so the count shuffle carries
     # no arrays; distinct-per-doc shingles make count(*) the document freq
     hot = (
-        base.select(F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
+        base.select(F.explode("shingles").alias("key"))
+        .groupBy("key")
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") > df_cap)
-        .select("shingle")
+        .select("key")
     )
-    if verify_mode == "join_back":
-        keys = (
-            base.select("doc_id", F.explode("shingles").alias("shingle"))
-            .join(F.broadcast(hot), "shingle", "left_anti")
-        )
-        a, b = keys.alias("a"), keys.alias("b")
-        pairs = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-            .dropDuplicates(["a_id", "b_id"])
-        )
-        cand = (
-            pairs.join(
-                base.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sa")), "a_id"
-            )
-            .join(
-                base.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sb")), "b_id"
-            )
-        )
-    else:
-        inv = (
-            base.select("doc_id", "shingles", F.explode("shingles").alias("shingle"))
-            .join(F.broadcast(hot), "shingle", "left_anti")
-        )
-        a, b = inv.alias("a"), inv.alias("b")
-        cand = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(
-                F.col("a.doc_id").alias("a_id"),
-                F.col("b.doc_id").alias("b_id"),
-                F.col("a.shingles").alias("sa"),
-                F.col("b.shingles").alias("sb"),
-            )
-            .dropDuplicates(["a_id", "b_id"])
-        )
+    keys = (
+        base.select("doc_id", F.explode("shingles").alias("key"))
+        .join(F.broadcast(hot), "key", "left_anti")
+    )
+    return _jaccard_pairs(keys, base, threshold)
+
+
+def _jaccard_pairs(keys: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
+    """The shared verify of the band-join dedup operators: a keys-only
+    self-join of (doc_id, key) on key with a.doc_id < b.doc_id, deduped to
+    candidate pairs, then each side's (doc_id, shingles) array joined back
+    by id and the exact Jaccard kept at ``threshold``.  Returns (a_id,
+    b_id, jaccard_per_mille)."""
+
+    a, b = keys.alias("a"), keys.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .dropDuplicates(["a_id", "b_id"])
+    )
+    cand = (
+        pairs.join(shingles.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sa")), "a_id")
+        .join(shingles.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("sb")), "b_id")
+    )
     inter = F.size(F.array_intersect("sa", "sb"))
     union = F.size("sa") + F.size("sb") - inter
     jac = (inter.cast("long") * 1000 / union).cast("long")
@@ -379,35 +304,31 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 20, mode: str = "auto") -> D
 
     Two loop bodies, identical results (pytest-pinned equal):
 
-    - label propagation (``mode='label'``): each round every node takes the
-      minimum of its own label and its neighbors' labels (one equi-join +
-      map-side-combined min agg per round), terminating when a round
-      changes nothing (cheap ``limit(1).isEmpty`` probe, like kNN's
-      escalation).  Rounds needed = graph diameter; near-dup clusters are
-      shallow (most are cliques or stars from one shared band), so this
-      converges in 2-4 rounds.
+    - ``mode='auto'`` (default): label propagation — each round every node
+      takes the minimum of its own label and its neighbors' labels (one
+      equi-join + map-side-combined min agg per round), terminating when a
+      round changes nothing (cheap ``limit(1).isEmpty`` probe).  Rounds
+      needed = graph diameter; near-dup clusters are shallow (most are
+      cliques or stars from one shared band), so this converges in 2-4
+      rounds.  If the round budget exhausts (a deep component), it FALLS
+      BACK to the star body instead of aborting: the common case stays
+      cheap and the adversarial case stays correct.  The fallback is
+      WARM-STARTED: each (node, partial-label) pair is a max_iters-hop
+      shortcut edge unioned into the star input, so the star rounds see an
+      effective depth ~max_iters times smaller — label-propagation work is
+      reused, not discarded.  Correct because a label is always a node of
+      the same component (labels only travel along edges), so shortcuts
+      change no component; the star body's own O(log^2 n) convergence then
+      yields the identical minima (round count asserted strictly below
+      scratch in tests).
     - ``mode='star'``: large-star/small-star alternation (Kiveris et al.,
       "Connected Components in MapReduce and Beyond", SoCC'14) —
       O(log^2 n) rounds regardless of diameter, the right body for
       adversarial long chains (chained boilerplate near-dups in crawl
       data), where label propagation needs diameter rounds.  Each
       half-round is one groupBy-min + one equi-join over the (shrinking)
-      edge set.
-
-    ``mode='auto'`` (default) runs label propagation — the cheaper body on
-    the shallow graphs dedup actually produces — and, if the round budget
-    exhausts (a deep component), FALLS BACK to the star body instead of
-    aborting: the common case stays cheap and the adversarial case stays
-    correct.  The fallback is WARM-STARTED (r4 verdict #4): each (node,
-    partial-label) pair is a max_iters-hop shortcut edge unioned into the
-    star input, so the star rounds see an effective depth ~max_iters times
-    smaller — label-propagation work is reused, not discarded.  Correct
-    because a label is always a node of the same component (labels only
-    travel along edges), so shortcuts change no component; the star body's
-    own O(log^2 n) convergence then yields the identical minima (round
-    count asserted strictly below scratch in tests).  Explicit
-    ``mode='label'``/``'star'`` raise loudly (RuntimeError) on
-    non-convergence — never a silently split component.
+      edge set.  It raises loudly (RuntimeError) if ``max_iters`` rounds
+      do not converge — never a silently split component.
 
     Only documents that appear in some pair are emitted (singletons are
     their own cluster by definition — emitting 10^12 identity rows would
@@ -467,36 +388,27 @@ def dup_clusters(pairs: DataFrame, max_iters: int = 20, mode: str = "auto") -> D
         if converged:
             break
     seed_labels.unpersist()
-    if not converged:
+    if converged:
+        out = labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_rep"))
+    else:
         # exiting via range exhaustion means labels are still moving: some
-        # component's min-hop radius exceeds max_iters and the assignment
-        # would be silently WRONG (split components).  In auto mode the
-        # diameter-proof star body takes over, WARM-STARTED (r4 verdict
-        # #4): every (node, partial-label) pair is a max_iters-hop SHORTCUT
-        # edge (the label is a node of the same component — labels only
-        # travel along edges), so unioning them into the star input cuts
-        # the effective depth by ~max_iters and the star rounds with it
-        # (round-count asserted < scratch in tests).  Components are
-        # unchanged (shortcuts connect already-connected nodes), so the
-        # result is provably identical to scratch.  Otherwise fail loudly.
-        if mode == "auto":
-            shortcuts = labels.filter(F.col("node") != F.col("lbl")).select(
-                F.col("node").alias("a_id"), F.col("lbl").alias("b_id")
-            )
-            warm = pairs.select("a_id", "b_id").unionByName(shortcuts)
-            # the star body persists + counts its input eagerly at entry,
-            # so the label checkpoint is read exactly once more
-            out = _dup_clusters_star(warm, max_iters)
-            edges.unpersist()
-            return out
-        edges.unpersist()
-        raise RuntimeError(
-            f"dup_clusters did not converge within max_iters={max_iters}; "
-            "a component's radius exceeds the round budget — raise max_iters "
-            "or use mode='star' (O(log^2 n) rounds at any diameter)"
+        # component's min-hop radius exceeds max_iters.  The diameter-proof
+        # star body takes over, WARM-STARTED: every (node, partial-label)
+        # pair is a max_iters-hop SHORTCUT edge (the label is a node of the
+        # same component — labels only travel along edges), so unioning
+        # them into the star input cuts the effective depth by ~max_iters
+        # and the star rounds with it (round-count asserted < scratch in
+        # tests).  Components are unchanged (shortcuts connect
+        # already-connected nodes), so the result is identical to scratch.
+        shortcuts = labels.filter(F.col("node") != F.col("lbl")).select(
+            F.col("node").alias("a_id"), F.col("lbl").alias("b_id")
         )
+        warm = pairs.select("a_id", "b_id").unionByName(shortcuts)
+        # the star body persists + counts its input eagerly at entry, so
+        # the label checkpoint is read exactly once more
+        out = _dup_clusters_star(warm, max_iters)
     edges.unpersist()
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_rep"))
+    return out
 
 
 def _dup_clusters_star(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
@@ -516,7 +428,7 @@ def _dup_clusters_star(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     component min) in O(log^2 n) rounds.  Convergence is detected by exact
     edge-set equality (count + exceptAll probe — sound, never heuristic);
     exhaustion of ``max_iters`` raises rather than emitting split
-    components, same contract as the label-propagation body."""
+    components."""
 
     global _LAST_STAR_ROUNDS
     edges = (
@@ -559,7 +471,7 @@ def _dup_clusters_star(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     for _ in range(max_iters):
         # localCheckpoint truncates lineage: one round references the prior
         # edge set ~6x, so composed plans would grow 6^rounds (see the
-        # label-mode comment; same GraphFrames-style pattern)
+        # label-propagation comment; same GraphFrames-style pattern)
         new_edges = small_star(large_star(edges)).localCheckpoint()
         rounds += 1
         n_new = new_edges.count()

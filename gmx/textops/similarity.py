@@ -194,7 +194,6 @@ def ann_lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     hash_mode: str = "xxhash64",
-    candidate_mode: str = "join_back",
 ) -> DataFrame:
     """Approximate top-k via multi-band (OR-amplified) hyperplane LSH:
     corpus and queries each explode into ``bands`` band keys; a neighbor is a
@@ -204,13 +203,10 @@ def ann_lsh_topk(
     recall >= 0.9 vs the exact cosine_topk is asserted in tests.
     Deterministic (fixed pseudo-random planes).
 
-    ``candidate_mode`` (PLANS.md §11): "join_back" (default, matching the
-    MinHash and n-gram paths) shuffles only (id, band_key) per band and
-    joins vectors back onto the deduped candidate pairs — at corpus scale
-    the band shuffle carries ~16 B/doc/band instead of band x vector
-    bytes; "ride" carries vectors through the band explode (no join-back),
-    cheaper only when vectors are tiny relative to the keys.  Identical
-    results (mode-equality pytest)."""
+    The band join carries keys only, (id, band_key) ~16 B/doc/band, like
+    the MinHash and n-gram paths; vectors join back onto the deduped
+    candidate pairs, so at corpus scale the band shuffle does not carry
+    band x vector bytes (PLANS §11)."""
 
     from pyspark.sql import Window
 
@@ -223,47 +219,28 @@ def ann_lsh_topk(
     )
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
 
-    if candidate_mode == "join_back":
-        keys = base.select(
-            "nid", F.explode(_band_keys(F.col("nvec"), bands, band_bits, hash_mode)).alias("band_key")
-        )
-        qkeys = keys.filter(F.pmod(F.col("nid"), F.lit(query_mod)) == 0).select(
-            F.col("nid").alias("qid"), F.col("band_key").alias("qkey")
-        )
-        pairs = (
-            keys.join(qkeys, (F.col("band_key") == F.col("qkey")) & (F.col("qid") != F.col("nid")))
-            .select("qid", "nid")
-            .dropDuplicates(["qid", "nid"])
-        )
-        scored = (
-            pairs.join(base, "nid")
-            .join(
-                base.select(
-                    F.col("nid").alias("qid"), F.col("nvec").alias("qvec"),
-                    F.col("nnorm").alias("qnorm"),
-                ),
-                "qid",
-            )
-            .select("qid", "nid", score.alias("score"))
-        )
-    else:
-        idx = base.select(
-            "nid", "nvec", "nnorm",
-            F.explode(_band_keys(F.col("nvec"), bands, band_bits, hash_mode)).alias("band_key"),
-        )
-        queries = (
-            idx.filter(F.pmod(F.col("nid"), F.lit(query_mod)) == 0)
-            .select(
+    keys = base.select(
+        "nid", F.explode(_band_keys(F.col("nvec"), bands, band_bits, hash_mode)).alias("band_key")
+    )
+    qkeys = keys.filter(F.pmod(F.col("nid"), F.lit(query_mod)) == 0).select(
+        F.col("nid").alias("qid"), F.col("band_key").alias("qkey")
+    )
+    pairs = (
+        keys.join(qkeys, (F.col("band_key") == F.col("qkey")) & (F.col("qid") != F.col("nid")))
+        .select("qid", "nid")
+        .dropDuplicates(["qid", "nid"])
+    )
+    scored = (
+        pairs.join(base, "nid")
+        .join(
+            base.select(
                 F.col("nid").alias("qid"), F.col("nvec").alias("qvec"),
-                F.col("nnorm").alias("qnorm"), F.col("band_key").alias("qkey"),
-            )
+                F.col("nnorm").alias("qnorm"),
+            ),
+            "qid",
         )
-        scored = (
-            idx.join(queries, (F.col("band_key") == F.col("qkey")) & (F.col("qid") != F.col("nid")))
-            .dropDuplicates(["qid", "nid"])
-            .select("qid", "nid", score.alias("score"))
-        )
-
+        .select("qid", "nid", score.alias("score"))
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -511,15 +488,3 @@ def _band_keys(qcol, bands: int, band_bits: int, hash_mode: str = "xxhash64"):
             ).otherwise(F.lit(0).cast("long"))
         keys.append(sig)
     return F.array(*keys)
-
-
-def lsh_buckets(embeddings: DataFrame, planes: int = 16, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Random-hyperplane LSH signature: bit p = sign(dot(vec, plane_p)).
-    Returns (vec_id, bucket) — the single-band signature (AND-amplification
-    only); multi-band blocking composes these via :func:`_band_keys`."""
-
-    q = _quantized(F.col(vec_col))
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        bucket = bucket + F.when(_plane_dot(q, p) > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return embeddings.select(F.col(id_col).alias("vec_id"), bucket.alias("bucket"))

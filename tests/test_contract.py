@@ -49,9 +49,14 @@ def test_gate_memos_scoped_to_application(spark, sf_dir, monkeypatch):
     pairs.unpersist()
 
 
-@pytest.mark.parametrize("name", ["spatial_knn", "spatial_knn_indexed"])
-def test_knn_queries_match_oracle(spark, sf_dir, name):
-    """Both kNN contract queries hash-equal their DuckDB twins."""
+@pytest.mark.parametrize("name", [
+    "spatial_knn", "spatial_knn_indexed",
+    "dedup_minhash_lsh", "dedup_ngram_jaccard", "ann_lsh_topk",
+    "dedup_clusters", "dedup_clusters_star",
+])
+def test_queries_match_oracle(spark, sf_dir, name):
+    """These contract queries hash-equal their DuckDB twins: both kNN
+    queries and the band-join dedup, ANN LSH and clustering queries."""
     import duckdb
 
     from tools.check_correctness import TABLES, frame_hash

@@ -89,17 +89,18 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
     assert (0, 1) in uncapped and len(uncapped) == 50 * 49 // 2 + 1
 
 
-def test_minhash_verify_modes_agree(docs):
-    """The scale-trade variants (arrays riding the band explode vs keys-only
-    join + join-back-by-id) are the same operator: identical pair sets and
-    scores (PLANS.md §11)."""
+def test_minhash_pairs_verify_matches_ngram_jaccard(docs):
+    """The production (xxhash64) MinHash path emits pairs, and every pair
+    carries the exact Jaccard the uncapped n-gram operator computes for it:
+    both end in the same exact verify, so LSH can only miss pairs, never
+    mis-score one."""
     from gmx.textops import minhash_pairs
 
-    ride = {(r.a_id, r.b_id, r.jaccard_per_mille)
-            for r in minhash_pairs(docs, threshold=0.1).collect()}
-    jb = {(r.a_id, r.b_id, r.jaccard_per_mille)
-          for r in minhash_pairs(docs, threshold=0.1, verify_mode="join_back").collect()}
-    assert ride == jb and ride
+    mh = {(r.a_id, r.b_id, r.jaccard_per_mille)
+          for r in minhash_pairs(docs, threshold=0.1).collect()}
+    exact = {(r.a_id, r.b_id, r.jaccard_per_mille)
+             for r in ngram_jaccard_pairs(docs, threshold=0.1, df_cap=10**9).collect()}
+    assert mh and mh <= exact
 
 
 def test_cosine_topk_matches_numpy(spark, sf_dir):
@@ -155,23 +156,6 @@ def test_ann_lsh_recall_vs_exact(spark, sf_dir):
     # neighbors (cos ~0.35-0.5, per-plane agreement ~0.61) the union of band
     # matches recovers >=0.9 of the exact top-k (deterministic planes)
     assert recall >= 0.9, recall
-
-
-def test_ann_lsh_candidate_modes_agree(spark, sf_dir):
-    """ride vs join_back candidate generation: identical ranked results."""
-    from gmx.textops.similarity import ann_lsh_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    ride = {(r.query_id, r.rank, r.neighbor_id)
-            for r in ann_lsh_topk(emb, candidate_mode="ride").collect()}
-    jb = {(r.query_id, r.rank, r.neighbor_id)
-          for r in ann_lsh_topk(emb, candidate_mode="join_back").collect()}
-    # join_back is the default (corpus-scale shuffle shape); both modes agree
-    import inspect
-
-    sig = inspect.signature(ann_lsh_topk)
-    assert sig.parameters["candidate_mode"].default == "join_back"
-    assert ride == jb and ride
 
 
 def test_embedding_near_dup_lsh_equals_exact(spark):
@@ -306,9 +290,9 @@ def test_dup_clusters_connected_components(spark):
 
 def test_dup_clusters_star_handles_adversarial_chain(spark):
     """A chain of 200 near-dups (min-hop radius 199 — the chained-boilerplate
-    shape routine in crawl data): label propagation within the default round
-    budget must fail LOUDLY, never split the component; the star body
-    converges in O(log^2 n) rounds and assigns one cluster."""
+    shape routine in crawl data): the star body converges in O(log^2 n)
+    rounds and assigns one cluster, and a round budget too small for it
+    fails LOUDLY, never splitting the component."""
     import pytest
 
     from gmx.textops.dedup import dup_clusters
@@ -318,7 +302,7 @@ def test_dup_clusters_star_handles_adversarial_chain(spark):
     pdf = spark.createDataFrame(pairs, "a_id long, b_id long")
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        dup_clusters(pdf, max_iters=5, mode="label").collect()
+        dup_clusters(pdf, max_iters=2, mode="star").collect()
 
     from gmx.textops import dedup as dedup_mod
 
