@@ -51,14 +51,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gmx.geometry.cellgrid import DEFAULT_LEVEL
 from gmx.geometry.joins import (
-    DEFAULT_LARGE_CAP,
-    OVERFLOW_LEVEL,
-    OVERFLOW_SALT,
     CellIndex,
     _knn_probe,
     _overlap_pairs,
     _point_hits,
-    _small_pairs,
     _tile_hits,
     cell_counts,
     centroids,
@@ -107,18 +103,17 @@ def write_cell_index(
     table: str,
     path: str,
     level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
     buckets: int | None = None,
 ) -> None:
-    """Materialize ``CellIndex.build(extents, level, large_cap)``: the
-    small-tier covering as a bucketed+sorted table, one file per bucket,
-    the broadcast tier alongside as ``<table>_large`` (a tiny unbucketed
-    table, one row per doc: a crossing box is one wrapped row).  The grid
-    level and bucket count are recorded as table properties.  ``buckets``
-    defaults to one per core of the session; at corpus scale pass a count
-    sized to the data."""
+    """Materialize ``CellIndex.build(extents, level)``: the small-tier
+    covering as a bucketed+sorted table, one file per bucket, the broadcast
+    tier alongside as ``<table>_large`` (a tiny unbucketed table, one row
+    per doc: a crossing box is one wrapped row).  The grid level and bucket
+    count are recorded as table properties.  ``buckets`` defaults to one
+    per core of the session; at corpus scale pass a count sized to the
+    data."""
 
-    ix = CellIndex.build(extents, level, large_cap)
+    ix = CellIndex.build(extents, level)
     _write_bucketed(ix.cells, table, path, level, buckets)
     (
         ix.large.write.mode("overwrite")
@@ -252,54 +247,26 @@ def open_cell_index(spark: SparkSession, table: str) -> CellIndex:
     return CellIndex(spark.table(table), spark.table(f"{table}_large"), index_level(spark, table))
 
 
-def index_self_join(spark: SparkSession, table: str) -> DataFrame:
-    """The small x small overlap pairs from the bucketed index alone —
-    both join inputs are bucketed scans of the same table, so the physical
-    plan contains NO Exchange (asserted in tests): the per-query shuffle is
-    gone."""
-
-    return _small_pairs(open_cell_index(spark, table))
-
-
-def bbox_overlap_pairs_from_index(
-    spark: SparkSession,
-    table: str,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-) -> DataFrame:
+def bbox_overlap_pairs_from_index(spark: SparkSession, table: str) -> DataFrame:
     """``bbox_overlap_pairs`` over the stored index: the small x small join
     consumes bucket metadata (no Exchange under either input, asserted in
     tests) and the large tier's doc view is a filter over the index, so
-    the query pays no shuffle for the small tier.  Over ``large_budget``
-    the non-split large tier takes the salted coarse-cell join; its
-    ``limit(budget+1).count()`` probe scans the stored ``<table>_large``."""
+    the query pays no shuffle for the small tier.  The large-tier route
+    reads the size estimate of the stored ``<table>_large`` (file sizes,
+    no job)."""
 
-    ix = open_cell_index(spark, table)
-    return _overlap_pairs(ix, large_budget, overflow_level, overflow_salt)
+    return _overlap_pairs(open_cell_index(spark, table))
 
 
-def point_in_bbox_from_index(
-    spark: SparkSession,
-    points: DataFrame,
-    table: str,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-) -> DataFrame:
+def point_in_bbox_from_index(spark: SparkSession, points: DataFrame, table: str) -> DataFrame:
     """``point_in_bbox`` over the stored index: the index side reads WITHOUT
     an Exchange (bucket metadata); only the (small) point stream shuffles
     to the index's bucketing."""
 
-    ix = open_cell_index(spark, table)
-    return _point_hits(points, ix, large_budget, overflow_level, overflow_salt)
+    return _point_hits(points, open_cell_index(spark, table))
 
 
-def tile_extent_join_from_index(
-    spark: SparkSession,
-    tiles: DataFrame,
-    table: str,
-) -> DataFrame:
+def tile_extent_join_from_index(spark: SparkSession, tiles: DataFrame, table: str) -> DataFrame:
     """``tile_extent_join`` over the stored index: the (big) index side of
     the cell equi-join reads WITHOUT an Exchange (bucket metadata); only
     the tiny exploded tile stream shuffles."""

@@ -4,8 +4,9 @@ Every cell join runs over one :class:`CellIndex` value — the exploded
 small-tier covering, the broadcast tier and the grid level — built from
 extents on the fly (:meth:`CellIndex.build`) or opened from the bucketed
 tables (``gmx.geometry.bucketed.open_cell_index``).  Each join (overlap,
-points, tiles) has ONE body over that value, so the tiering, salting and
-count-budgeted overflow below live in one place.
+points, tiles) has ONE body over that value, so the tiering and the
+large-tier route below live in one place.  No join takes a tuning
+parameter: each decision reads what the data and the session already say.
 
 All operators follow the same scale pattern (SURVEY.md §2.7):
 
@@ -21,23 +22,23 @@ Skew handling ("hot cells from whole-world boxes", the north rule's named
 hazard; the corpus plants one whole-world bbox per 97 docs):
 
 - **Cell-splitting / tiering**: extents whose covering would exceed
-  ``large_cap`` cells (whole-world and near-global boxes) are pulled OUT of
-  the exploded index entirely and joined via ONE broadcast nested-loop pass
-  per join — so hot cells never materialize in the shuffle.  At 100 TB the
-  large tier is a tiny fraction (must fit broadcast; the cap is configurable
-  and the tier is counted so a runaway fraction is observable in metrics).
-  Antimeridian-crossing boxes ride the same tier as ONE wrapped row each
-  (west > east: the box holds [west, 180] and [-180, east]) with
-  wrap-aware predicates, so no counterpart can reach a doc twice and no
-  join needs a pair dedup.
-- **Salting**: ``salt`` replicates index rows S ways and routes probes by
-  ``pmod(hash(key), S)`` for residual per-cell hotspots.
-- **AQE**: runtime skew-join splitting for anything left.
+  ``DEFAULT_LARGE_CAP`` cells (whole-world and near-global boxes) are
+  pulled OUT of the exploded index entirely and joined via ONE broadcast
+  nested-loop pass per join — so hot cells never materialize in the
+  shuffle (:func:`tier_stats` counts the tier, so a runaway fraction is
+  observable).  Antimeridian-crossing boxes ride the same tier as ONE
+  wrapped row each (west > east: the box holds [west, 180] and
+  [-180, east]) with wrap-aware predicates, so no counterpart can reach a
+  doc twice and no join needs a pair dedup.
+- **Large-tier route**: when Spark's own broadcast rule would refuse the
+  tier (its plan size estimate is over ``autoBroadcastJoinThreshold``),
+  its non-split rows take a salted coarse-cell equi-join instead
+  (:func:`_large_tiers`).
+- **AQE**: runtime skew-join splitting for residual per-cell hotspots.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 import numpy as np
@@ -58,24 +59,20 @@ from gmx.geometry.cellgrid import (
 
 DEFAULT_LARGE_CAP = 64  # coverings above this many cells go to the broadcast tier
 
-# Count-budgeted overflow (the 10^12-doc mechanism, PLANS.md §11): when the
-# broadcast tier exceeds ``large_budget`` rows it cannot be a broadcast —
-# ~400 GB at a 10^12-doc whole-world fraction of 1/97.  Over budget, the
-# non-split large extents are routed through a COARSE-cell equi-join
-# instead: both sides explode their covering at OVERFLOW_LEVEL (whole-world
-# = 16 cells at level 2), the index side is salted OVERFLOW_SALT ways for
+# Coarse large-tier route (the 10^12-doc mechanism, PLANS.md §11): a tier
+# Spark would not broadcast (~400 GB at a 10^12-doc whole-world fraction of
+# 1/97) routes its non-split rows through a COARSE-cell equi-join instead:
+# both sides explode their covering at OVERFLOW_LEVEL (whole-world = 16
+# cells at level 2), the large side is salted OVERFLOW_SALT ways for
 # parallelism beyond the handful of coarse keys, and the same exact refine +
-# reference-point dedup applies.  Budget=None (default) skips the tier-count
-# job entirely and keeps the plain broadcast — callers at corpus scale set a
-# budget (and should cache the extents input, since deciding costs one count
-# over it).
+# reference-point dedup applies.
 OVERFLOW_LEVEL = 2
 OVERFLOW_SALT = 8
 
 _BOX = ["west", "south", "east", "north"]
 
 
-def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
+def _with_tier(extents: DataFrame, level: int) -> DataFrame:
     e = extents
     if "split" not in e.columns:  # extents not built by extents_df carry no parts
         e = e.withColumn("split", F.lit(False))
@@ -83,20 +80,18 @@ def _with_tier(extents: DataFrame, level: int, large_cap: int) -> DataFrame:
     # tier: they are as rare as whole-world boxes, and the exploded index
     # and its reference-point dedup then only ever see west <= east
     return e.withColumn("n_cells", covering_size_expr(*_BOX, level)).withColumn(
-        "is_large", F.expr(f"n_cells > {large_cap} OR split")
+        "is_large", F.expr(f"n_cells > {DEFAULT_LARGE_CAP} OR split")
     )
 
 
-def tier_stats(
-    extents: DataFrame, level: int = DEFAULT_LEVEL, large_cap: int = DEFAULT_LARGE_CAP
-) -> DataFrame:
+def tier_stats(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     """Observability for the two-tier join strategy: per (is_large, split)
     tier — row count, total and max covering-cell count.  These are the
     numbers that tell you whether the broadcast tier still fits a broadcast
     at your corpus scale (a runaway whole-world fraction shows up here
     before it shows up as an OOM)."""
 
-    ext = _with_tier(extents, level, large_cap)
+    ext = _with_tier(extents, level)
     return ext.groupBy("is_large", "split").agg(
         F.count("*").alias("n_extents"),
         F.sum("n_cells").alias("total_cells"),
@@ -126,11 +121,11 @@ class CellIndex:
 
     ``cells`` is the exploded small-tier covering (one row per doc and
     cell); ``large`` is the broadcast tier (doc_id, west, south, east,
-    north, split), one row per doc: coverings above ``large_cap`` cells,
-    and every antimeridian-crossing box folded back from its two split
-    parts into one wrapped row (west > east, ``split`` true); ``level`` is
-    the grid level of ``cells``.  :meth:`build` computes both frames from
-    extents (the whole large tier is one ``groupBy("doc_id")``);
+    north, split), one row per doc: coverings above ``DEFAULT_LARGE_CAP``
+    cells, and every antimeridian-crossing box folded back from its two
+    split parts into one wrapped row (west > east, ``split`` true);
+    ``level`` is the grid level of ``cells``.  :meth:`build` computes both
+    frames from extents (the whole large tier is one ``groupBy("doc_id")``);
     ``gmx.geometry.bucketed.open_cell_index`` reads them back from the
     tables ``write_cell_index`` stored."""
 
@@ -139,10 +134,8 @@ class CellIndex:
     level: int
 
     @classmethod
-    def build(
-        cls, extents: DataFrame, level: int = DEFAULT_LEVEL, large_cap: int = DEFAULT_LARGE_CAP
-    ) -> CellIndex:
-        ext = _with_tier(extents, level, large_cap)
+    def build(cls, extents: DataFrame, level: int = DEFAULT_LEVEL) -> CellIndex:
+        ext = _with_tier(extents, level)
         # one aggregate: a non-crossing doc's group is its one row; a
         # crossing doc's part 0 is [west, 180] and part 1 [-180, east], so
         # max(west) and min(east) are the crossing box's own sides
@@ -222,52 +215,55 @@ def _pair(a: str, b: str) -> list[str]:
             f"greatest({a}.doc_id, {b}.doc_id) AS b_id"]
 
 
-def _large_tiers(ix: CellIndex, budget: int | None) -> tuple[DataFrame, DataFrame | None]:
+def _large_tiers(ix: CellIndex) -> tuple[DataFrame, DataFrame | None]:
     """The large-tier rows to broadcast, and those to route through
-    :func:`_coarse_join` instead (``None`` when there are none).  Over
-    ``budget`` non-split rows — decided by one ``limit(budget+1).count()``
-    job, none when there is no budget — only the wrapped rows stay
-    broadcast: they have no coarse covering, and they are bounded by
-    crossing-box rarity."""
+    :func:`_coarse_join` instead (``None`` when there are none).  The tier
+    is broadcast exactly when Spark's own ``canBroadcastBySize`` rule
+    would broadcast it: its optimized plan's size estimate is at most the
+    session's ``autoBroadcastJoinThreshold`` (so ``-1`` refuses).  The
+    estimate comes from file sizes and plan shape, so deciding launches no
+    job.  Otherwise only the wrapped rows stay broadcast: they have no
+    coarse covering, and they are bounded by crossing-box rarity."""
 
-    flat = ix.large.filter("NOT split")
-    if budget is not None and flat.limit(budget + 1).count() > budget:
-        return ix.large.filter("split"), flat
-    return ix.large, None
+    limit = ix.large.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    size = ix.large._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if 0 <= size <= limit:
+        return ix.large, None
+    return ix.large.filter("split"), ix.large.filter("NOT split")
 
 
-def _salt(index: DataFrame, probe: DataFrame, key: str, salt: int) -> tuple[DataFrame, DataFrame]:
-    """Fragment-replicate salting: ``index`` rows replicate ``salt`` ways,
-    each ``probe`` row routes to one replica by ``key`` hash; both sides
-    gain the ``osalt`` join key."""
+def _salt(index: DataFrame, probe: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
+    """Fragment-replicate salting: ``index`` rows replicate
+    ``OVERFLOW_SALT`` ways, each ``probe`` row routes to one replica by
+    ``key`` hash; both sides gain the ``osalt`` join key."""
 
     return (
-        index.withColumn("osalt", F.expr(f"explode(sequence(0, {salt - 1}))")),
-        probe.withColumn("osalt", F.expr(f"pmod(hash({key}), {salt})")),
+        index.withColumn("osalt", F.expr(f"explode(sequence(0, {OVERFLOW_SALT - 1}))")),
+        probe.withColumn("osalt", F.expr(f"pmod(hash({key}), {OVERFLOW_SALT})")),
     )
 
 
-def _coarse_join(probe: DataFrame, key: str, large: DataFrame, level: int, salt: int) -> DataFrame:
-    """The over-budget stand-in for a large-tier broadcast: ``large``
-    explodes its coarse covering and replicates ``salt`` ways, ``probe``
-    boxes explode theirs and route by ``key`` hash, and overlapping boxes
-    meet in their coarse reference cell only.  Sides are aliased ``o``
-    (probe) and ``l`` (large)."""
+def _coarse_join(probe: DataFrame, key: str, large: DataFrame) -> DataFrame:
+    """The stand-in for a large-tier broadcast Spark would refuse:
+    ``large`` explodes its coarse covering and replicates, ``probe`` boxes
+    explode theirs and route by ``key`` hash, and overlapping boxes meet in
+    their coarse reference cell only.  Sides are aliased ``o`` (probe) and
+    ``l`` (large)."""
 
     lidx, oidx = _salt(
-        _explode_cover(large.select("doc_id", *_BOX), level, "ccell"),
-        _explode_cover(probe, level, "ccell"), key, salt,
+        _explode_cover(large.select("doc_id", *_BOX), OVERFLOW_LEVEL, "ccell"),
+        _explode_cover(probe, OVERFLOW_LEVEL, "ccell"), key,
     )
     l, o = lidx.alias("l"), oidx.alias("o")
-    return o.join(l, F.expr(f"{_refine('o', 'l', 'ccell', level)} AND o.osalt = l.osalt"))
+    return o.join(l, F.expr(f"{_refine('o', 'l', 'ccell', OVERFLOW_LEVEL)} AND o.osalt = l.osalt"))
 
 
 def _ljoin_large(o_side: DataFrame, l_side: DataFrame) -> DataFrame:
     """Broadcast join of large-tier rows against a counterpart stream with
     the pair-dedup rules: large x large emits in one doc-id order only,
-    EXCEPT counterparts living in the overflow tier (``is_overflow``), whose
+    EXCEPT counterparts living in the coarse route (``is_overflow``), whose
     pairs with broadcast rows must emit regardless of order (the coarse
-    overflow join never sees the broadcast wrapped rows)."""
+    join never sees the broadcast wrapped rows)."""
 
     o, l = o_side.alias("o"), l_side.alias("l")
     return o.join(
@@ -288,17 +284,15 @@ def _small_pairs(ix: CellIndex) -> DataFrame:
     ).selectExpr("a.doc_id AS a_id", "b.doc_id AS b_id")
 
 
-def _overlap_pairs(
-    ix: CellIndex, large_budget: int | None, overflow_level: int, overflow_salt: int
-) -> DataFrame:
+def _overlap_pairs(ix: CellIndex) -> DataFrame:
     """The overlap join body: small x small through :func:`_small_pairs`;
     the large tier broadcast against :meth:`CellIndex.docs` in one
-    nested-loop join (or, over ``large_budget``, its non-split rows through
-    :func:`_coarse_join`).  Every doc is one row on either side, so no
+    nested-loop join (or its non-split rows through :func:`_coarse_join`,
+    see :func:`_large_tiers`).  Every doc is one row on either side, so no
     pair needs a dedup."""
 
-    bcast, coarse = _large_tiers(ix, large_budget)
-    # rows that live in the overflow tier pair with each other in the
+    bcast, coarse = _large_tiers(ix)
+    # rows that live in the coarse route pair with each other in the
     # coarse join, so the broadcast must emit their pairs with wrapped rows
     # regardless of doc-id order
     other = ix.docs().withColumn(
@@ -308,135 +302,55 @@ def _overlap_pairs(
     if coarse is None:
         return pairs
     return pairs.unionByName(
-        _coarse_join(other.filter("NOT split"), "doc_id", coarse, overflow_level, overflow_salt)
+        _coarse_join(other.filter("NOT split"), "doc_id", coarse)
         .filter("o.doc_id != l.doc_id AND (NOT o.is_overflow OR l.doc_id < o.doc_id)")
         .selectExpr(*_pair("l", "o"))
     )
 
 
-def bbox_overlap_pairs(
-    extents: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-) -> DataFrame:
+def bbox_overlap_pairs(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     """All distinct overlapping pairs (a_id < b_id) among extents.
 
     small x small: cell equi-join + reference-point dedup (no distinct).
-    large x anything: broadcast nested-loop over the (tiny) large tier.
+    large x anything: broadcast nested-loop over the (tiny) large tier, or,
+    when Spark would not broadcast the tier, the salted coarse-cell
+    equi-join for its non-split rows (:func:`_large_tiers`)."""
 
-    ``large_budget``: when set and the non-split large tier exceeds that many
-    rows, the tier is NOT broadcast — it routes through the salted
-    coarse-cell equi-join (:func:`_coarse_join`) so the broadcast size
-    stays bounded by the (rare) wrapped antimeridian-crossing rows alone.
-    Deciding costs one ``limit(budget+1).count()`` job over the tier, so
-    callers should cache ``extents``; ``None`` (default) skips the probe.
-    """
-
-    ix = CellIndex.build(extents, level, large_cap)
-    return _overlap_pairs(ix, large_budget, overflow_level, overflow_salt)
+    return _overlap_pairs(CellIndex.build(extents, level))
 
 
-def _cell_salt(cells: DataFrame, rows_per_shard: int, max_salt: int = 32) -> int:
-    mx = cells.groupBy("cell").count().agg(F.max("count")).first()[0] or 0
-    return max(1, min(max_salt, math.ceil(mx / rows_per_shard)))
-
-
-def recommend_salt(
-    extents: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
-    rows_per_shard: int = 50_000,
-    max_salt: int = 32,
-) -> int:
-    """Derive the small-tier join salt from the OBSERVED hot-cell occupancy
-    instead of a hand-picked constant: the salt exists to split one hot
-    cell's join work across tasks, so the right value is
-    ceil(max cell occupancy / rows_per_shard), clamped to [1, max_salt].
-
-    The signal is the same (cell, count) histogram ``spatial_cell_histogram``
-    exposes for observability — one map-side-combined aggregate over the
-    exploded small-tier covering (the large/whole-world tier is already
-    pulled out by ``large_cap`` and never lands in the salted join).
-    ``rows_per_shard`` is the index-rows-per-(cell,salt)-shard target a
-    task should handle comfortably; at corpus scale compute this once per
-    index build, not per query (it is one eager Spark job — cache
-    ``extents``, like the ``large_budget`` probe)."""
-
-    cells = CellIndex.build(extents, level, large_cap).cells
-    return _cell_salt(cells, rows_per_shard, max_salt)
-
-
-def _point_hits(
-    points: DataFrame,
-    ix: CellIndex,
-    large_budget: int | None,
-    overflow_level: int,
-    overflow_salt: int,
-    salt: int | str | None = None,
-    salt_rows_per_shard: int = 50_000,
-) -> DataFrame:
+def _point_hits(points: DataFrame, ix: CellIndex) -> DataFrame:
     """The point-in-bbox body: points probe the small tier on their one
-    cell (salted when ``salt`` > 1) and the large tier by broadcast — or,
-    over ``large_budget``, its non-split rows on their one coarse cell — so
-    no dedup is needed either way."""
+    cell and the large tier by broadcast — or, when Spark would not
+    broadcast it, its non-split rows on their one coarse cell — so no
+    dedup is needed either way."""
 
-    if salt == "auto":
-        salt = _cell_salt(ix.cells, salt_rows_per_shard)
-    idx = ix.cells
     pts = points.withColumn("cell", point_cell_expr("lon", "lat", ix.level))
-    keys = ["cell"]
-    if salt and salt > 1:
-        idx, pts = _salt(idx, pts, "point_id", salt)
-        keys.append("osalt")
-    small_hits = pts.join(idx, on=keys).filter(_contains()).select("point_id", "doc_id")
+    small_hits = pts.join(ix.cells, on="cell").filter(_contains()).select("point_id", "doc_id")
 
-    bcast, coarse = _large_tiers(ix, large_budget)
+    bcast, coarse = _large_tiers(ix)
     hits = small_hits.unionByName(
         points.join(F.broadcast(bcast), F.expr(_contains())).select("point_id", "doc_id")
     )
     if coarse is None:
         return hits
     lidx, pts_c = _salt(
-        _explode_cover(coarse.select("doc_id", *_BOX), overflow_level, "ccell"),
-        points.withColumn("ccell", point_cell_expr("lon", "lat", overflow_level)),
-        "point_id", overflow_salt,
+        _explode_cover(coarse.select("doc_id", *_BOX), OVERFLOW_LEVEL, "ccell"),
+        points.withColumn("ccell", point_cell_expr("lon", "lat", OVERFLOW_LEVEL)),
+        "point_id",
     )
     return hits.unionByName(
         pts_c.join(lidx, on=["ccell", "osalt"]).filter(_contains()).select("point_id", "doc_id")
     )
 
 
-def point_in_bbox(
-    points: DataFrame,
-    extents: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
-    salt: int | str | None = None,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-    salt_rows_per_shard: int = 50_000,
-) -> DataFrame:
+def point_in_bbox(points: DataFrame, extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     """(point_id, doc_id) pairs where the point lies inside the doc extent
-    (closed intervals).  Two-tier like the overlap join; optional salting
-    replicates the small-tier index ``salt`` ways for residual hot cells.
-    ``salt="auto"`` derives the factor from the measured hot-cell occupancy
-    (:func:`recommend_salt` — one eager aggregate over ``extents``; cache
-    the input, same caveat as ``large_budget``) instead of a hand-picked
-    constant.
+    (closed intervals).  Two-tier like the overlap join: each point maps to
+    exactly one cell (and one coarse cell), so no dedup is needed; residual
+    hot cells are split by AQE's skew join."""
 
-    ``large_budget``: over budget, the non-split large tier probes through
-    the salted coarse-cell equi-join instead of a broadcast (each point maps
-    to exactly one coarse cell, so no dedup is needed); the wrapped
-    antimeridian-crossing rows stay broadcast."""
-
-    ix = CellIndex.build(extents, level, large_cap)
-    return _point_hits(
-        points, ix, large_budget, overflow_level, overflow_salt, salt, salt_rows_per_shard
-    )
+    return _point_hits(points, CellIndex.build(extents, level))
 
 
 def centroids(extents: DataFrame, level: int) -> DataFrame:
@@ -610,22 +524,16 @@ def tile_boxes(tiles: DataFrame) -> DataFrame:
     )
 
 
-def _tile_hits(
-    tiles: DataFrame,
-    ix: CellIndex,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-) -> DataFrame:
+def _tile_hits(tiles: DataFrame, ix: CellIndex) -> DataFrame:
     """The raster-tile join body: tile coverings join the small tier with
-    reference-point dedup, the large tier in one broadcast (or, over
-    ``large_budget``, its non-split rows through :func:`_coarse_join`); a
-    crossing box is one wrapped row, so no tile reaches a doc twice."""
+    reference-point dedup, the large tier in one broadcast (or its
+    non-split rows through :func:`_coarse_join`, see :func:`_large_tiers`);
+    a crossing box is one wrapped row, so no tile reaches a doc twice."""
 
     tbox = tile_boxes(tiles)
     t, d = _explode_cover(tbox, ix.level, "cell").alias("t"), ix.cells.alias("d")
     small_hits = t.join(d, F.expr(_refine("t", "d", "cell", ix.level))).select("tile_id", "doc_id")
-    bcast, coarse = _large_tiers(ix, large_budget)
+    bcast, coarse = _large_tiers(ix)
     hits = small_hits.unionByName(
         tbox.alias("t")
         .join(F.broadcast(bcast.alias("d")), F.expr(_wrap_overlap("t", "d")))
@@ -633,29 +541,12 @@ def _tile_hits(
     )
     if coarse is None:
         return hits
-    return hits.unionByName(
-        _coarse_join(tbox, "tile_id", coarse, overflow_level, overflow_salt)
-        .select("o.tile_id", "l.doc_id")
-    )
+    return hits.unionByName(_coarse_join(tbox, "tile_id", coarse).select("o.tile_id", "l.doc_id"))
 
 
-def tile_extent_join(
-    tiles: DataFrame,
-    extents: DataFrame,
-    level: int = DEFAULT_LEVEL,
-    large_cap: int = DEFAULT_LARGE_CAP,
-    large_budget: int | None = None,
-    overflow_level: int = OVERFLOW_LEVEL,
-    overflow_salt: int = OVERFLOW_SALT,
-) -> DataFrame:
+def tile_extent_join(tiles: DataFrame, extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     """(tile_id, doc_id) pairs where a raster tile's footprint overlaps a doc
     extent.  ``tiles`` needs (tile_id, z, x, y) on the equirectangular grid;
-    the tile bbox is closed-form, then the same tiered filter-and-refine.
+    the tile bbox is closed-form, then the same tiered filter-and-refine."""
 
-    ``large_budget``: over budget, the non-split large tier joins tiles
-    through the salted coarse-cell equi-join with reference-point dedup
-    (wrapped crossing rows stay broadcast — bounded by crossing-box
-    rarity)."""
-
-    ix = CellIndex.build(extents, level, large_cap)
-    return _tile_hits(tiles, ix, large_budget, overflow_level, overflow_salt)
+    return _tile_hits(tiles, CellIndex.build(extents, level))

@@ -444,7 +444,7 @@ def spatial_place_keyword_cells(spark, sf_dir):
 
 def spatial_cell_histogram(spark, sf_dir):
     """Hot-cell observability: docs per covering cell at the join level —
-    the histogram the skew-tiering decisions (large-cap, salting) read;
+    the load AQE's skew join splits at run time (no join reads it);
     partial aggregation makes this one cheap shuffle of (cell, count)."""
     return (
         cover_cells(_extents(spark, sf_dir), level=TILE_Z)
@@ -459,11 +459,10 @@ def spatial_bbox_overlap_join(spark, sf_dir):
 
 
 def spatial_point_in_bbox(spark, sf_dir):
-    """Point-in-polygon (bbox) join; the small-tier salt is derived from the
-    measured hot-cell occupancy (joins.recommend_salt) rather than a
-    hand-picked constant — at gate scale it resolves to 1, on a corpus with
-    a planted hot cell it scales up (pytest-pinned)."""
-    return point_in_bbox(_points(spark, sf_dir), _extents(spark, sf_dir), salt="auto")
+    """Point-in-polygon (bbox) join: each point probes its one cell of the
+    small tier and the large tier by broadcast; residual hot cells are
+    split at run time by AQE's skew join."""
+    return point_in_bbox(_points(spark, sf_dir), _extents(spark, sf_dir))
 
 
 def spatial_knn(spark, sf_dir):

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -18,6 +19,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """A context manager setting ``autoBroadcastJoinThreshold=-1``: Spark
+    broadcasts no join side by size, so the spatial joins route their
+    large tier through the coarse cells."""
+
+    @contextmanager
+    def refused():
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    return refused
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,5 @@
-"""Driver-contract consistency checks (cheap; full oracle comparison runs in
-tools/check_correctness.py and in the driver itself)."""
+"""Driver-contract checks: every query hash-equals its DuckDB twin, the
+comparison tools/check_correctness.py runs."""
 
 from __future__ import annotations
 
@@ -8,20 +8,26 @@ import pytest
 import __spark_entry__ as entry
 
 
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    import duckdb
+
+    from tools.check_correctness import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def test_oracle_keys_subset_of_queries():
     # every contract query has a DuckDB twin, and every twin a query
     assert set(entry.oracle_sql()) == set(entry.queries())
 
 
-def test_oracle_sql_is_runnable_duckdb(sf_dir):
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+def test_oracle_sql_is_runnable_duckdb(duck):
     for name, sql in entry.oracle_sql().items():
-        n = con.sql(f"SELECT count(*) FROM ({sql})").fetchone()[0]
+        n = duck.sql(f"SELECT count(*) FROM ({sql})").fetchone()[0]
         assert n >= 0, name
 
 
@@ -49,23 +55,62 @@ def test_gate_memos_scoped_to_application(spark, sf_dir, monkeypatch):
     pairs.unpersist()
 
 
-@pytest.mark.parametrize("name", [
-    "spatial_knn", "spatial_knn_indexed",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "ann_lsh_topk",
-    "dedup_clusters", "dedup_clusters_star",
-])
-def test_queries_match_oracle(spark, sf_dir, name):
-    """These contract queries hash-equal their DuckDB twins: both kNN
-    queries and the band-join dedup, ANN LSH and clustering queries."""
-    import duckdb
+def _assert_matches_oracle(duck, df, name):
+    from tools.check_correctness import frame_hash
 
-    from tools.check_correctness import TABLES, frame_hash
-
-    df = entry.queries()[name](spark, sf_dir)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    want = con.sql(entry.oracle_sql()[name])
+    want = duck.sql(entry.oracle_sql()[name])
     assert frame_hash(df.columns, [tuple(r) for r in df.collect()]) == frame_hash(
         want.columns, want.fetchall()
     )
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+# the six cell joins: three on the fly, three served from the bucketed index
+SPATIAL_JOINS = [
+    "spatial_bbox_overlap_join", "spatial_point_in_bbox", "spatial_raster_tile_join",
+    "spatial_bbox_overlap_indexed", "spatial_point_in_bbox_indexed", "spatial_tile_join_indexed",
+]
+
+
+@pytest.mark.parametrize("name", sorted(entry.queries()))
+def test_queries_match_oracle(spark, sf_dir, duck, name):
+    """Every contract query hash-equals its DuckDB twin.  At the session's
+    broadcast threshold the spatial joins broadcast their large tier: no
+    coarse-cell join (``ccell``) in their plans."""
+
+    df = entry.queries()[name](spark, sf_dir)
+    if name in SPATIAL_JOINS:
+        assert "ccell" not in _plan(df)
+    _assert_matches_oracle(duck, df, name)
+
+
+@pytest.mark.parametrize("name", SPATIAL_JOINS)
+def test_spatial_joins_match_oracle_without_broadcast(spark, sf_dir, duck, no_broadcast, name):
+    """With broadcasts refused (``autoBroadcastJoinThreshold=-1``) the
+    large tier takes the salted coarse-cell route, and each spatial join
+    still hash-equals its DuckDB twin."""
+
+    with no_broadcast():
+        df = entry.queries()[name](spark, sf_dir)
+        assert "ccell" in _plan(df)
+        _assert_matches_oracle(duck, df, name)
+
+
+def test_spatial_joins_take_no_tuning_parameter():
+    """No public spatial join takes a tuning knob: every parameter is an
+    input, the session, the index table, the grid level or kNN's k."""
+    import inspect
+
+    import gmx.geometry as G
+    from gmx.geometry import bucketed
+
+    joins = [G.bbox_overlap_pairs, G.point_in_bbox, G.tile_extent_join, G.knn_points,
+             bucketed.bbox_overlap_pairs_from_index, bucketed.point_in_bbox_from_index,
+             bucketed.tile_extent_join_from_index, bucketed.knn_from_index]
+    assert {f.__name__ for f in joins[:4]} <= set(G.__all__)
+    allowed = {"points", "extents", "tiles", "spark", "table", "k", "level"}
+    for f in joins:
+        assert set(inspect.signature(f).parameters) <= allowed, f.__name__

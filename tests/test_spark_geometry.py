@@ -60,7 +60,6 @@ def test_point_in_bbox_exact(extents, boxes, points):
         if w <= x <= e and s <= y <= n
     }
     assert {(r.point_id, r.doc_id) for r in point_in_bbox(df, extents).collect()} == want
-    assert {(r.point_id, r.doc_id) for r in point_in_bbox(df, extents, salt=4).collect()} == want
 
 
 def knn_oracle(pts, boxes, k=5):
@@ -291,11 +290,12 @@ def test_extents_plan_is_one_extraction_pass(spark, sf_dir, tmp_path):
     assert "Union" not in plan and "Generate" in plan, plan
 
 
-def test_count_budgeted_overflow_tier(extents, boxes, points, spark):
-    """large_budget=0 forces the whole-world tier (planted 1/97 in the
-    corpus) off the broadcast and through the salted coarse-cell equi-join;
-    results must be identical to the broadcast path for all three joins, and
-    the overflow plan must actually contain the coarse-cell join (ccell)."""
+def test_count_budgeted_overflow_tier(extents, boxes, points, spark, no_broadcast):
+    """With broadcasts refused (no_broadcast) the whole-world tier (planted
+    1/97 in the corpus) leaves the broadcast for the salted coarse-cell
+    equi-join; results must be identical to the broadcast path for all
+    three joins, and the forced plan must actually contain the coarse-cell
+    join (ccell)."""
 
     want = {
         (a, b)
@@ -303,14 +303,15 @@ def test_count_budgeted_overflow_tier(extents, boxes, points, spark):
         if boxes[a][0] <= boxes[b][2] and boxes[b][0] <= boxes[a][2]
         and boxes[a][1] <= boxes[b][3] and boxes[b][1] <= boxes[a][3]
     }
-    over = bbox_overlap_pairs(extents, large_budget=0)
-    got = [(r.a_id, r.b_id) for r in over.collect()]
-    assert len(got) == len(set(got)), "overflow path emitted duplicate pairs"
+    with no_broadcast():
+        over = bbox_overlap_pairs(extents)
+        got = [(r.a_id, r.b_id) for r in over.collect()]
+    assert len(got) == len(set(got)), "coarse route emitted duplicate pairs"
     assert set(got) == want
     plan = over._jdf.queryExecution().optimizedPlan().toString()
     assert "ccell" in plan  # the coarse join is really in the plan
     default_plan = bbox_overlap_pairs(extents)._jdf.queryExecution().optimizedPlan().toString()
-    assert "ccell" not in default_plan  # and absent under the budget-less default
+    assert "ccell" not in default_plan  # and absent at the session's threshold
 
     pts, df = points
     want_pts = {
@@ -319,10 +320,8 @@ def test_count_budgeted_overflow_tier(extents, boxes, points, spark):
         for d, (w, s, e, n) in boxes.items()
         if w <= x <= e and s <= y <= n
     }
-    got_pts = {
-        (r.point_id, r.doc_id)
-        for r in point_in_bbox(df, extents, large_budget=0).collect()
-    }
+    with no_broadcast():
+        got_pts = {(r.point_id, r.doc_id) for r in point_in_bbox(df, extents).collect()}
     assert got_pts == want_pts
 
     tiles = [(f"t3-{x}-{y}", 3, x, y) for x in range(8) for y in range(8)]
@@ -334,25 +333,20 @@ def test_count_budgeted_overflow_tier(extents, boxes, points, spark):
         for d, (w, s, e, n) in boxes.items():
             if tw <= e and w <= te and ts <= n and s <= tn:
                 want_tiles.add((t, d))
-    got_tiles = [
-        (r.tile_id, r.doc_id)
-        for r in tile_extent_join(tdf, extents, large_budget=0).collect()
-    ]
+    with no_broadcast():
+        got_tiles = [(r.tile_id, r.doc_id) for r in tile_extent_join(tdf, extents).collect()]
     assert len(got_tiles) == len(set(got_tiles))
     assert set(got_tiles) == want_tiles
 
-    # under budget: the probe runs but the broadcast path is kept
-    assert set(
-        (r.a_id, r.b_id)
-        for r in bbox_overlap_pairs(extents, large_budget=10**9).collect()
-    ) == want
+    # at the session's threshold the tier fits and the broadcast path is kept
+    assert {(r.a_id, r.b_id) for r in bbox_overlap_pairs(extents).collect()} == want
 
 
-def test_overflow_tier_with_split_boxes(spark):
-    """Forced overflow on a corpus that ALSO has antimeridian-split parts:
-    the split slice stays broadcast and pair emission remains exactly-once
-    even when a counterpart overlaps both parts and an overflow row pairs
-    with a split row in either doc-id order."""
+def test_overflow_tier_with_split_boxes(spark, no_broadcast):
+    """The forced coarse route on a corpus that ALSO has antimeridian-split
+    parts: the split slice stays broadcast and pair emission remains
+    exactly-once even when a counterpart overlaps both parts and a
+    coarse-route row pairs with a split row in either doc-id order."""
 
     boxes = {
         "band": (-180.0, -20.0, 180.0, 20.0),   # whole-world -> overflow tier
@@ -369,21 +363,19 @@ def test_overflow_tier_with_split_boxes(spark):
         for x, y in itertools.combinations(sorted(boxes), 2)
         if _parts_overlap(boxes[x], boxes[y])
     }
-    for budget in (None, 0):
-        got = [
-            (r.a_id, r.b_id)
-            for r in bbox_overlap_pairs(ext, large_budget=budget).collect()
-        ]
-        assert len(got) == len(set(got)), f"duplicates at budget={budget}"
-        assert set(got) == want, f"wrong pairs at budget={budget}"
+    got = [(r.a_id, r.b_id) for r in bbox_overlap_pairs(ext).collect()]
+    assert len(got) == len(set(got)), "duplicates at the session's threshold"
+    assert set(got) == want, "wrong pairs at the session's threshold"
+    with no_broadcast():
+        got = [(r.a_id, r.b_id) for r in bbox_overlap_pairs(ext).collect()]
+    assert len(got) == len(set(got)), "duplicates with broadcasts refused"
+    assert set(got) == want, "wrong pairs with broadcasts refused"
 
     tdf = spark.createDataFrame(
         [("t0-0-0", 0, 0, 0)], "tile_id string, z int, x int, y int"
     )
-    tj = [
-        (r.tile_id, r.doc_id)
-        for r in tile_extent_join(tdf, ext, large_budget=0).collect()
-    ]
+    with no_broadcast():
+        tj = [(r.tile_id, r.doc_id) for r in tile_extent_join(tdf, ext).collect()]
     assert sorted(tj) == sorted({("t0-0-0", d) for d in boxes})
 
     pdf = spark.createDataFrame(
@@ -396,10 +388,8 @@ def test_overflow_tier_with_split_boxes(spark):
         for d, b in boxes.items()
         if _parts_overlap(b, (x, y, x, y))
     }
-    got_pts = {
-        (r.point_id, r.doc_id)
-        for r in point_in_bbox(pdf, ext, large_budget=0).collect()
-    }
+    with no_broadcast():
+        got_pts = {(r.point_id, r.doc_id) for r in point_in_bbox(pdf, ext).collect()}
     assert got_pts == want_pts
 
 
@@ -424,9 +414,9 @@ def test_tier_stats_observability(extents, spark):
 
 
 def test_aqe_skew_join_splits_planted_hot_cell(spark):
-    """Turns the documented skew story into a proven one: with salting OFF
-    and one planted hot cell (every extent in the same half-degree cell),
-    AQE's skew-join must split the hot partition — asserted by reading
+    """Turns the documented skew story into a proven one: with one planted
+    hot cell (every extent in the same half-degree cell), AQE's skew-join
+    must split the hot partition — asserted by reading
     `skew=true` out of the final adaptive physical plan.  Thresholds are
     lowered to test scale; production relies on the same mechanism at its
     defaults (gmx/session.py enables AQE + skewJoin)."""
@@ -460,7 +450,7 @@ def test_aqe_skew_join_splits_planted_hot_cell(spark):
             "0.12 + id * 1e-7 AS lon",
             "0.12 + id * 1e-7 AS lat",
         )
-        out = point_in_bbox(pts, ext, salt=None)
+        out = point_in_bbox(pts, ext)
         # collect() drives THIS DataFrame's QueryExecution, so its adaptive
         # plan is final afterwards (count() would execute a sibling plan)
         assert len(out.collect()) > 0
@@ -475,52 +465,18 @@ def test_aqe_skew_join_splits_planted_hot_cell(spark):
                 spark.conf.set(k, v)
 
 
-def test_auto_salt_from_cell_histogram(spark, extents):
-    """The join salt is derived from the measured hot-cell occupancy, not a
-    hand-picked constant: a planted hot cell (20k extents in one cell) makes
-    recommend_salt scale the factor up; the uniform sf corpus resolves to 1;
-    and point_in_bbox(salt='auto') returns the same rows as unsalted."""
-
-    from gmx.geometry.joins import recommend_salt
-
-    ext = spark.range(20_000).selectExpr(
-        "concat('d-', id) AS doc_id",
-        "0.1 + (id % 100) * 0.0004 AS west",
-        "0.1 + (id % 100) * 0.0004 AS south",
-        "0.1001 + (id % 100) * 0.0004 AS east",
-        "0.1001 + (id % 100) * 0.0004 AS north",
-    ).cache()
-    s = recommend_salt(ext, rows_per_shard=1_000)
-    assert s == 20  # ceil(20000 / 1000): every extent lands in one cell
-    assert recommend_salt(ext, rows_per_shard=1_000, max_salt=8) == 8
-    # the uniform small corpus needs no salt at the production shard target
-    assert recommend_salt(extents) == 1
-
-    pts = spark.range(50).selectExpr(
-        "id AS point_id",
-        "0.12 + id * 1e-7 AS lon",
-        "0.12 + id * 1e-7 AS lat",
-    )
-    unsalted = {(r.point_id, r.doc_id) for r in point_in_bbox(pts, ext).collect()}
-    auto = {
-        (r.point_id, r.doc_id)
-        for r in point_in_bbox(pts, ext, salt="auto", salt_rows_per_shard=1_000).collect()
-    }
-    assert auto == unsalted and len(auto) > 0
-    ext.unpersist()
-
-
-def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path):
+def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path, no_broadcast):
     """Bucketed index tables make repeated spatial joins shuffle-free: the
     index self-join's physical plan has NO Exchange (bucket metadata
     co-locates both sides), and results equal the on-the-fly joins."""
 
     from gmx.geometry.bucketed import (
         bbox_overlap_pairs_from_index,
-        index_self_join,
+        open_cell_index,
         point_in_bbox_from_index,
         write_cell_index,
     )
+    from gmx.geometry.joins import _small_pairs
 
     table = "gmx_test_cellidx"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -529,15 +485,11 @@ def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path):
 
     # at corpus scale the index self-join is a sort-merge join; the test
     # table is broadcast-sized, so pin SMJ to expose the bucketed scan
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        sj = index_self_join(spark, table)
+    with no_broadcast():
+        sj = _small_pairs(open_cell_index(spark, table))
         plan = sj._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:3000]  # the whole point of bucketing
-        assert "Bucketed: true" in plan, plan[:3000]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert "Exchange" not in plan, plan[:3000]  # the whole point of bucketing
+    assert "Bucketed: true" in plan, plan[:3000]
 
     want = {
         (a, b)
@@ -580,7 +532,7 @@ def test_bucketed_cell_index_joins(spark, extents, boxes, points, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {table}_large")
 
 
-def test_cell_index_doc_view(spark, extents, tmp_path):
+def test_cell_index_doc_view(spark, extents, tmp_path, no_broadcast):
     """CellIndex.docs() yields every small-tier doc exactly once plus every
     large-tier row, for a built and for an opened index alike — on cell
     edges, point boxes, the +-180/+-90 clamps and antimeridian-crossing
@@ -621,7 +573,6 @@ def test_cell_index_doc_view(spark, extents, tmp_path):
             by_doc[d] = (d, w, s, e, n, split)
         return sorted(by_doc.values())
 
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for name, ext in (("gmx_test_docview", extents_df(meta)), ("gmx_test_docview_sf", extents)):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(f"DROP TABLE IF EXISTS {name}_large")
@@ -636,32 +587,29 @@ def test_cell_index_doc_view(spark, extents, tmp_path):
             if name == "gmx_test_docview":
                 assert set(small) == small_ids
 
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = open_cell_index(spark, name).docs()._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan[:3000]
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+        with no_broadcast():
+            docs = open_cell_index(spark, name).docs()
+            plan = docs._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan[:3000]
         spark.sql(f"DROP TABLE IF EXISTS {name}")
         spark.sql(f"DROP TABLE IF EXISTS {name}_large")
 
 
-def test_wrapped_large_tier_matches_brute_force(spark, tmp_path):
+def test_wrapped_large_tier_matches_brute_force(spark, tmp_path, no_broadcast):
     """The large tier holds one row per doc, a crossing box as one wrapped
     row (west > east), and bbox overlap, point-in-bbox and tile joins equal
-    brute force over the split parts — on the fly, from the index and with
-    large_budget=0 — each pair exactly once.  The served bbox and tile
-    plans join the large tier in ONE broadcast nested-loop join with no
-    pair-level aggregate."""
+    brute force over the split parts — on the fly, from the index, and
+    with broadcasts refused (no_broadcast) — each pair exactly once.  The
+    served bbox and tile plans join the large tier in ONE broadcast
+    nested-loop join with no pair-level aggregate."""
 
     from gmx.geometry.bucketed import (
         bbox_overlap_pairs_from_index,
-        open_cell_index,
         point_in_bbox_from_index,
         tile_extent_join_from_index,
         write_cell_index,
     )
-    from gmx.geometry.joins import CellIndex, _tile_hits
+    from gmx.geometry.joins import CellIndex
 
     boxes = {
         "band": (-180.0, -20.0, 180.0, 20.0),      # whole longitude range in 64 cells: small tier
@@ -710,25 +658,29 @@ def test_wrapped_large_tier_matches_brute_force(spark, tmp_path):
     write_cell_index(ext, table, str(tmp_path / "wrapidx"))
     runs = {
         "on the fly": (
-            lambda b: bbox_overlap_pairs(ext, large_budget=b),
-            lambda b: point_in_bbox(pdf, ext, large_budget=b),
-            lambda b: tile_extent_join(tdf, ext, large_budget=b),
+            lambda: bbox_overlap_pairs(ext),
+            lambda: point_in_bbox(pdf, ext),
+            lambda: tile_extent_join(tdf, ext),
         ),
         "from index": (
-            lambda b: bbox_overlap_pairs_from_index(spark, table, large_budget=b),
-            lambda b: point_in_bbox_from_index(spark, pdf, table, large_budget=b),
-            lambda b: _tile_hits(tdf, open_cell_index(spark, table), b),
+            lambda: bbox_overlap_pairs_from_index(spark, table),
+            lambda: point_in_bbox_from_index(spark, pdf, table),
+            lambda: tile_extent_join_from_index(spark, tdf, table),
         ),
     }
-    for source, (pairs, hits, tile_hits) in runs.items():
-        for budget in (None, 0):
-            at = (source, budget)
-            got = [(r.a_id, r.b_id) for r in pairs(budget).collect()]
-            assert len(got) == len(set(got)) and set(got) == want, at
-            got = [(r.point_id, r.doc_id) for r in hits(budget).collect()]
-            assert len(got) == len(set(got)) and set(got) == want_pts, at
-            got = [(r.tile_id, r.doc_id) for r in tile_hits(budget).collect()]
-            assert len(got) == len(set(got)) and set(got) == want_tiles, at
+
+    def check(pairs, hits, tile_hits, at):
+        got = [(r.a_id, r.b_id) for r in pairs().collect()]
+        assert len(got) == len(set(got)) and set(got) == want, at
+        got = [(r.point_id, r.doc_id) for r in hits().collect()]
+        assert len(got) == len(set(got)) and set(got) == want_pts, at
+        got = [(r.tile_id, r.doc_id) for r in tile_hits().collect()]
+        assert len(got) == len(set(got)) and set(got) == want_tiles, at
+
+    for source, joins in runs.items():
+        check(*joins, (source, "broadcast"))
+        with no_broadcast():
+            check(*joins, (source, "coarse"))
 
     for served in (bbox_overlap_pairs_from_index(spark, table),
                    tile_extent_join_from_index(spark, tdf, table)):
@@ -787,10 +739,11 @@ def test_index_tables_one_file_per_bucket(spark, extents, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path):
-    """The count-budgeted overflow tier works on the bucketed-index path
-    too: with large_budget=0 the whole-world tier routes through the salted
-    coarse-cell equi-join instead of a broadcast, with identical results."""
+def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path, no_broadcast):
+    """The coarse large-tier route works on the bucketed-index path too:
+    with broadcasts refused (no_broadcast) the whole-world tier routes
+    through the salted coarse-cell equi-join instead of a broadcast, with
+    identical results."""
 
     from gmx.geometry.bucketed import (
         bbox_overlap_pairs_from_index,
@@ -805,22 +758,23 @@ def test_bucketed_index_forced_overflow(spark, extents, points, tmp_path):
     assert spark.table(f"{table}_large").count() > 0  # whole-world boxes exist
 
     base = {(r.a_id, r.b_id) for r in bbox_overlap_pairs_from_index(spark, table).collect()}
-    ovf = [(r.a_id, r.b_id)
-           for r in bbox_overlap_pairs_from_index(spark, table, large_budget=0).collect()]
+    with no_broadcast():
+        ovf = [(r.a_id, r.b_id) for r in bbox_overlap_pairs_from_index(spark, table).collect()]
     assert len(ovf) == len(set(ovf))  # coarse reference-point dedup holds
     assert set(ovf) == base
 
     _, df = points
     base_pts = {(r.point_id, r.doc_id)
                 for r in point_in_bbox_from_index(spark, df, table).collect()}
-    ovf_pts = {(r.point_id, r.doc_id)
-               for r in point_in_bbox_from_index(spark, df, table, large_budget=0).collect()}
+    with no_broadcast():
+        ovf_pts = {(r.point_id, r.doc_id)
+                   for r in point_in_bbox_from_index(spark, df, table).collect()}
     assert ovf_pts == base_pts
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(f"DROP TABLE IF EXISTS {table}_large")
 
 
-def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path):
+def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path, no_broadcast):
     """At write levels 5, 6 and 7, knn_from_index, sized by the cell counts
     the writer recorded, equals both knn_points (counts aggregated on the
     fly) and the brute-force oracle — also for points far from every
@@ -864,25 +818,19 @@ def test_bucketed_centroid_index_knn(spark, extents, boxes, points, tmp_path):
 
     # plan check on the first-round probe join shape: points side shuffles
     # to the index's bucketing, index side scans its buckets directly
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        from pyspark.sql import functions as F
-        from gmx.geometry.cellgrid import covering_expr
+    from gmx.geometry.cellgrid import covering_expr
 
-        idx = spark.table(table)
+    with no_broadcast():
         probe = df.select(
             "point_id",
             F.explode(
                 covering_expr("lon - 1", "lat - 1", "lon + 1", "lat + 1", 6)
             ).alias("cell"),
-        ).join(idx, on="cell")
+        ).join(spark.table(table), on="cell")
         plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan, plan[:3000]
-        # exactly one Exchange (the probe side); none above the bucketed scan
-        assert plan.count("Exchange hashpartitioning") == 1, plan[:3000]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert "Bucketed: true" in plan, plan[:3000]
+    # exactly one Exchange (the probe side); none above the bucketed scan
+    assert plan.count("Exchange hashpartitioning") == 1, plan[:3000]
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 

@@ -239,11 +239,13 @@ def test_ann_ivf_trained_centroids_improve_recall(spark, sf_dir):
     emb.unpersist()
 
 
-def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
+@pytest.mark.parametrize("hash_mode", ["poly", "xxhash64"])
+def test_simhash_pairs_complete_vs_bruteforce(spark, docs, hash_mode):
     """The 4x16-bit band join finds EVERY pair within hamming <= 3
-    (pigeonhole guarantee, not a probabilistic bound): compare against a
-    brute-force popcount over all simhash pairs — planted duplicate and
-    near-duplicate texts guarantee hits exist."""
+    (pigeonhole guarantee, not a probabilistic bound) under the portable
+    and the production (default) hash: compare against a brute-force
+    popcount over all simhash pairs — planted duplicate and near-duplicate
+    texts guarantee hits exist."""
     from itertools import combinations
 
     from pyspark.sql import functions as F
@@ -260,7 +262,7 @@ def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
     )
     d = docs.select("doc_id", "text").unionByName(planted)
 
-    sims = {r.doc_id: r.simhash for r in simhash_buckets(d, hash_mode="poly").collect()}
+    sims = {r.doc_id: r.simhash for r in simhash_buckets(d, hash_mode=hash_mode).collect()}
     want = {
         (min(a, b), max(a, b), bin((sims[a] ^ sims[b]) & (2**64 - 1)).count("1"))
         for a, b in combinations(sims, 2)
@@ -268,7 +270,7 @@ def test_simhash_pairs_complete_vs_bruteforce(spark, docs):
     }
     assert (9_000_001, 9_000_002, 0) in want  # planted hit really exists
     got = {(r.a_id, r.b_id, r.hamming)
-           for r in simhash_pairs(d, hash_mode="poly").collect()}
+           for r in simhash_pairs(d, hash_mode=hash_mode).collect()}
     assert got == want
 
 
