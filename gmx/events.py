@@ -1,6 +1,7 @@
 """Event-stream operators over the ``events`` table: windowed aggregation
 (batch + Structured Streaming with watermark) and gap-based sessionization
-(batch window functions + a stateful-streaming twin).
+(batch window functions + a watermarked stateful-streaming twin that emits
+closed sessions only).
 
 Determinism notes: all time arithmetic is in integer microseconds
 (unix_micros / epoch_us) so Spark and the DuckDB oracle agree exactly;
@@ -126,61 +127,6 @@ SESSION_OUT_SCHEMA = T.StructType([
 ])
 
 
-def sessionize_stateful(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Custom stateful operator: the same sessionization as an
-    ``applyInPandasWithState`` group map — the shape a continuous stream
-    needs (per-user open-session state carried between micro-batches).
-    Streaming-only (Spark rejects stateful group maps in batch); drive it via
-    :func:`sessionize_stream`, which the tests compare against the batch
-    :func:`sessionize` result."""
-
-    gap_us = gap_minutes * 60_000_000
-
-    def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            start_us, end_us, n_events, seq = state.get
-        else:
-            start_us = end_us = -1
-            n_events = 0
-            seq = 0
-        out = []
-        ts = sorted(
-            t
-            for pdf in pdfs
-            for t in (pdf["ts"].astype("int64") // 1000).tolist()  # ns -> us
-        )
-        for t in ts:
-            if start_us < 0:
-                start_us, end_us, n_events = t, t, 1
-            elif t - end_us > gap_us:
-                out.append((user_id, seq, n_events, start_us, end_us))
-                seq += 1
-                start_us, end_us, n_events = t, t, 1
-            else:
-                end_us = t
-                n_events += 1
-        # batch mode: flush the open session too (a true stream would keep it
-        # in state and time it out via the watermark clock)
-        out.append((user_id, seq, n_events, start_us, end_us))
-        state.update((start_us, end_us, n_events, seq))
-        yield pd.DataFrame(
-            out, columns=["user_id", "session_seq", "n_events", "start_us", "end_us"]
-        )
-
-    return (
-        events.select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def sessionize_stateful_watermarked(
     events: DataFrame,
     gap_minutes: int = 30,
@@ -189,10 +135,8 @@ def sessionize_stateful_watermarked(
 ) -> DataFrame:
     """TRUE stream-semantics sessionization: emits CLOSED sessions only.
 
-    Unlike :func:`sessionize_stateful` (which flushes the open session at
-    every drain — right for a one-shot batch drain, wrong for a continuous
-    stream), this variant keeps each user's open session in state and closes
-    it in exactly two ways:
+    The streaming twin of the batch :func:`sessionize`: it keeps each
+    user's open session in state and closes it in exactly two ways:
 
     1. a later event for the same user arrives with a gap > ``gap_minutes``;
     2. the event-time watermark passes ``session_end + gap`` — an
@@ -315,33 +259,6 @@ def sessionize_stream_watermarked(
         sessionize_stateful_watermarked(
             events, gap_minutes, watermark, idle_state_retention_minutes
         )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_minutes: int = 30,
-) -> None:
-    """Run the stateful sessionizer over a file stream (drains available
-    input, then stops).  One drain over a complete event set produces the
-    same sessions as the batch window-function plan."""
-
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(events_dir)
-    q = (
-        sessionize_stateful(events, gap_minutes)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)

@@ -14,8 +14,9 @@ every write task holds one bucket and writes ONE file: a table has at most
 opens that many.  Write parallelism and served-scan partitions therefore
 equal ``buckets``, which defaults to the session's parallelism (one bucket
 per core); at corpus scale pass ``buckets`` sized to the data.  The
-broadcast tier ``<table>_large`` is one small aggregate, so AQE coalesces
-it to one file (files near its coalescing size at corpus scale).
+broadcast tier ``<table>_large`` is written through a rebalance, so AQE
+coalesces it to one file at small scale and to files near its advisory
+partition size at corpus scale.
 
 This module only stores and opens indexes: :func:`write_cell_index` writes
 the two frames of ``joins.CellIndex.build`` and :func:`open_cell_index`
@@ -107,16 +108,17 @@ def write_cell_index(
 ) -> None:
     """Materialize ``CellIndex.build(extents, level)``: the small-tier
     covering as a bucketed+sorted table, one file per bucket, the broadcast
-    tier alongside as ``<table>_large`` (a tiny unbucketed table, one row
-    per doc: a crossing box is one wrapped row).  The grid level and bucket
-    count are recorded as table properties.  ``buckets`` defaults to one
+    tier alongside as ``<table>_large`` (a small unbucketed table, one row
+    per doc: a crossing box is one wrapped row; AQE sizes its files).  The
+    grid level and bucket count are recorded as table properties.  ``buckets`` defaults to one
     per core of the session; at corpus scale pass a count sized to the
     data."""
 
     ix = CellIndex.build(extents, level)
     _write_bucketed(ix.cells, table, path, level, buckets)
     (
-        ix.large.write.mode("overwrite")
+        ix.large.hint("rebalance")
+        .write.mode("overwrite")
         .option("path", f"{path}_large")
         .format("parquet")
         .saveAsTable(f"{table}_large")
@@ -137,8 +139,9 @@ def write_centroid_index(
     counts recorded as table property ``gmx.cell_counts`` (one aggregate
     over the written table, run here once instead of on every kNN call).
 
-    One row per doc (antimeridian boxes contribute their eastern part, same
-    convention as :func:`gmx.geometry.joins.knn_points`); the finer default
+    One row per doc (a wrapped antimeridian box contributes the centre of
+    its eastern side, same convention as
+    :func:`gmx.geometry.joins.knn_points`); the finer default
     level matches kNN's probe grid, not the covering index's.  Repeated kNN
     workloads then read the centroid side of every probe join without an
     Exchange — only the (small) point stream shuffles."""

@@ -80,28 +80,42 @@ def cells_for_ranges_sql(ix0: str, ix1: str, iy0: str, iy1: str, level: int) -> 
     """Array<long> of cell ids for an inclusive index-range window — built
     with sequence + nested transform + flatten so the generated code is a
     loop, not an unrolled expression (unrolling blows janino's 64KB method
-    limit for large windows).  The lambda variables carry a ``_gmx_``
-    prefix so they cannot shadow a data column the bounds refer to."""
+    limit for large windows).  Column indices wrap modulo the grid width,
+    so a window may run past the last column into the first.  The lambda
+    variables carry a ``_gmx_`` prefix so they cannot shadow a data column
+    the bounds refer to."""
 
-    cell = cell_id_sql(level, "_gmx_ix", "_gmx_iy")
+    cell = cell_id_sql(level, f"_gmx_ix % {nx(level)}", "_gmx_iy")
     return (
         f"flatten(transform(sequence({ix0}, {ix1}), _gmx_ix -> "
         f"transform(sequence({iy0}, {iy1}), _gmx_iy -> {cell})))"
     )
 
 
+def _last_column_sql(west: str, east: str, level: int) -> str:
+    """The last column of a box's covering, counted past the grid's last
+    column for a wrapped box (west > east): its columns are
+    [ix(west), n-1] then [0, ix(east)], at most n distinct ones."""
+
+    n, ix0, ix1 = nx(level), cell_ix_sql(west, level), cell_ix_sql(east, level)
+    return f"CASE WHEN ({west}) > ({east}) THEN least({ix1} + {n}, {ix0} + {n - 1}) ELSE {ix1} END"
+
+
 def covering_sql(west: str, south: str, east: str, north: str, level: int) -> str:
-    """Array<long> of cell ids covering a bbox at ``level``."""
+    """Array<long> of distinct cell ids covering a bbox at ``level``; a
+    wrapped box (west > east) covers both sides of the antimeridian."""
 
     return cells_for_ranges_sql(
-        cell_ix_sql(west, level), cell_ix_sql(east, level),
+        cell_ix_sql(west, level), _last_column_sql(west, east, level),
         cell_iy_sql(south, level), cell_iy_sql(north, level), level,
     )
 
 
 def covering_size_sql(west: str, south: str, east: str, north: str, level: int) -> str:
+    """The number of cells :func:`covering_sql` yields."""
+
     return (
-        f"({cell_ix_sql(east, level)} - {cell_ix_sql(west, level)} + 1)"
+        f"({_last_column_sql(west, east, level)} - {cell_ix_sql(west, level)} + 1)"
         f" * ({cell_iy_sql(north, level)} - {cell_iy_sql(south, level)} + 1)"
     )
 

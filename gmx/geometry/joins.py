@@ -49,7 +49,7 @@ from gmx.geometry.cellgrid import (
     CELL_BASE,
     DEFAULT_LEVEL,
     cells_for_ranges_sql,
-    covering_size_expr,
+    covering_size_sql,
     covering_sql,
     np_cell_id,
     nx,
@@ -73,15 +73,15 @@ _BOX = ["west", "south", "east", "north"]
 
 
 def _with_tier(extents: DataFrame, level: int) -> DataFrame:
-    e = extents
-    if "split" not in e.columns:  # extents not built by extents_df carry no parts
-        e = e.withColumn("split", F.lit(False))
-    # antimeridian-crossing boxes (split parts) always ride the broadcast
-    # tier: they are as rare as whole-world boxes, and the exploded index
-    # and its reference-point dedup then only ever see west <= east
-    return e.withColumn("n_cells", covering_size_expr(*_BOX, level)).withColumn(
-        "is_large", F.expr(f"n_cells > {DEFAULT_LARGE_CAP} OR split")
-    )
+    """(doc_id, box, split, n_cells, is_large) from any extents frame:
+    ``split`` marks a wrapped (antimeridian-crossing, west > east) box.
+    Wrapped boxes always ride the broadcast tier: they are as rare as
+    whole-world boxes, and the exploded index and its reference-point dedup
+    then only ever see west <= east."""
+
+    return extents.selectExpr(
+        "doc_id", *_BOX, "west > east AS split", f"{covering_size_sql(*_BOX, level)} AS n_cells"
+    ).selectExpr("*", f"n_cells > {DEFAULT_LARGE_CAP} OR split AS is_large")
 
 
 def tier_stats(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
@@ -106,13 +106,12 @@ def _explode_cover(df: DataFrame, level: int, name: str) -> DataFrame:
 
 
 def cover_cells(extents: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
-    """Exploded (cell, doc) covering index — the tile-assignment operator.
-    ``part``/``split`` columns (antimeridian parts from extents_df) pass
-    through when present; the two parts of a crossing box cover disjoint
-    longitude ranges, so a (doc, cell) row never duplicates."""
+    """Exploded (doc_id, west, south, east, north, cell) covering index —
+    the tile-assignment operator.  A wrapped box covers the cells on both
+    sides of the antimeridian, each once, so a (doc, cell) row never
+    duplicates."""
 
-    extra = [c for c in ("part", "split") if c in extents.columns]
-    return _explode_cover(extents.select("doc_id", *_BOX, *extra), level, "cell")
+    return _explode_cover(extents.select("doc_id", *_BOX), level, "cell")
 
 
 @dataclass(frozen=True)
@@ -122,10 +121,10 @@ class CellIndex:
     ``cells`` is the exploded small-tier covering (one row per doc and
     cell); ``large`` is the broadcast tier (doc_id, west, south, east,
     north, split), one row per doc: coverings above ``DEFAULT_LARGE_CAP``
-    cells, and every antimeridian-crossing box folded back from its two
-    split parts into one wrapped row (west > east, ``split`` true);
-    ``level`` is the grid level of ``cells``.  :meth:`build` computes both
-    frames from extents (the whole large tier is one ``groupBy("doc_id")``);
+    cells, and every antimeridian-crossing box as its one wrapped row
+    (west > east, ``split`` true); ``level`` is the grid level of
+    ``cells``.  :meth:`build` computes both frames from extents (the large
+    tier is a filter and a projection, no shuffle);
     ``gmx.geometry.bucketed.open_cell_index`` reads them back from the
     tables ``write_cell_index`` stored."""
 
@@ -136,14 +135,7 @@ class CellIndex:
     @classmethod
     def build(cls, extents: DataFrame, level: int = DEFAULT_LEVEL) -> CellIndex:
         ext = _with_tier(extents, level)
-        # one aggregate: a non-crossing doc's group is its one row; a
-        # crossing doc's part 0 is [west, 180] and part 1 [-180, east], so
-        # max(west) and min(east) are the crossing box's own sides
-        large = ext.filter("is_large").groupBy("doc_id").agg(
-            F.expr("max(west) AS west"), F.expr("min(south) AS south"),
-            F.expr("min(east) AS east"), F.expr("max(north) AS north"),
-            F.expr("bool_or(split) AS split"),
-        )
+        large = ext.filter("is_large").select("doc_id", *_BOX, "split")
         return cls(cover_cells(ext.filter("NOT is_large"), level), large, level)
 
     def docs(self) -> DataFrame:
@@ -354,14 +346,13 @@ def point_in_bbox(points: DataFrame, extents: DataFrame, level: int = DEFAULT_LE
 
 
 def centroids(extents: DataFrame, level: int) -> DataFrame:
-    """The kNN centroid index (doc_id, cx, cy, cell), one row per doc: an
-    antimeridian-crossing box is represented by its eastern-hemisphere part
-    (part 0, [west, 180]) — deterministic and single-rowed, so a doc can
-    never appear twice in one point's top k."""
+    """The kNN centroid index (doc_id, cx, cy, cell), one row per extent
+    row: a wrapped (antimeridian-crossing) box is represented by the centre
+    of its eastern-hemisphere side, [west, 180] — deterministic and
+    single-rowed, so a doc can never appear twice in one point's top k."""
 
-    base_ext = extents.filter("part = 0") if "part" in extents.columns else extents
-    return base_ext.selectExpr(
-        "doc_id", "(west + east) / 2 AS cx", "(south + north) / 2 AS cy"
+    return extents.selectExpr(
+        "doc_id", "(west + if(west > east, 180.0D, east)) / 2 AS cx", "(south + north) / 2 AS cy"
     ).withColumn("cell", point_cell_expr("cx", "cy", level))
 
 

@@ -407,9 +407,13 @@ SELECT printf('doc-%08d', doc_id) AS doc_id FROM documents WHERE 1=0"""
     o["update_preserve_violations"] = """
 SELECT printf('doc-%08d', doc_id) AS doc_id FROM documents WHERE 1=0"""
 
+    # the corpus has no violation; of gmx.queries.QUARANTINE_PLANTS only the
+    # out-of-range box is quarantined (the crossing box is valid)
     o["validate_quarantine"] = """
 SELECT printf('doc-%08d', doc_id) AS doc_id, '' AS property, '' AS rule
-FROM documents WHERE 1=0"""
+FROM documents WHERE 1=0
+UNION ALL
+SELECT 'planted-out-of-range', 'bounding_box', 'out_of_range'"""
 
     ix0, ix1 = _IX.format(v="wh"), _IX.format(v="eh")
     iy0, iy1 = _IY.format(v="sh"), _IY.format(v="nh")

@@ -220,8 +220,9 @@ def events_sliding_counts(spark, sf_dir):
 
 
 def events_sessionize(spark, sf_dir):
-    """Gap-based sessionization (window functions; stateful streaming twin in
-    gmx.events.sessionize_stateful)."""
+    """Gap-based sessionization (window functions; the watermarked stateful
+    streaming twin is gmx.events.sessionize_stateful_watermarked, gated by
+    events_sessionize_stream)."""
     from gmx.events import sessionize
 
     return sessionize(spark.read.parquet(f"{sf_dir}/events.parquet"))
@@ -411,14 +412,43 @@ def update_preserve_violations(spark, sf_dir):
     return j.filter(bad).select("doc_id")
 
 
+# Documents planted next to the corpus by validate_quarantine (doc_id ->
+# west, south, east, north): the report must quarantine the out-of-range box
+# and must NOT quarantine the antimeridian-crossing one (west > east is a
+# valid box, SURVEY §2.7).  The oracle twin expects exactly the first.
+QUARANTINE_PLANTS = {
+    "planted-out-of-range": ("-190.5", "-10.0", "-170.0", "10.0"),
+    "planted-crossing": ("170.0", "-10.0", "-170.0", "10.0"),
+}
+
+
+def _planted_corpus(spark):
+    """Span-corpus rows of the planted documents: corpus doc 3 (fgdc, no
+    raster tile, no catalog, no violation) with each planted box."""
+    from gmx.corpus import make_record
+    from gmx.schema import CORPUS_SCHEMA
+    from gmx.serialize import serialize
+
+    rows = []
+    for doc_id, box in QUARANTINE_PLANTS.items():
+        rec = make_record(3)
+        rec["bounding_box"] = dict(zip(("west", "south", "east", "north"), box))
+        rows.append((doc_id, [("text", serialize(rec, "fgdc"), "", 0)]))
+    return spark.createDataFrame(rows, CORPUS_SCHEMA)
+
+
 def validate_quarantine(spark, sf_dir):
     """Q3-Q8 quarantine: corpus rows violating validation rules (none in the
-    synthetic corpus; rule behavior is covered by tests/test_validate_convert)."""
+    synthetic corpus; rule behavior is covered by tests/test_validate_convert),
+    plus the QUARANTINE_PLANTS documents run through the same extraction, so
+    a report that emits nothing, or quarantines a crossing box, fails."""
+    from gmx.pipeline import metadata_from_corpus
     from gmx.validate import validation_report
 
-    return validation_report(cached_metadata(spark, sf_dir)).select(
-        "doc_id", "property", "rule"
+    meta = cached_metadata(spark, sf_dir).unionByName(
+        metadata_from_corpus(_planted_corpus(spark), persist=False)
     )
+    return validation_report(meta).select("doc_id", "property", "rule")
 
 
 # --------------------------------------------------------- spatial queries

@@ -1,6 +1,6 @@
 """Event-stream operators: windowed aggregation (batch == watermarked
-stream), sessionization (window-function plan == stateful streaming twin ==
-python oracle)."""
+stream), sessionization (window-function plan == python oracle; the
+watermarked stateful streaming twin emits its closed subset)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 
 from gmx.events import (
     sessionize,
-    sessionize_stream,
     stream_windowed_event_counts,
     windowed_event_counts,
 )
@@ -173,19 +172,6 @@ def test_watermarked_sessionizer_resumes_from_checkpoint(spark, tmp_path):
         (1, 0, 2, us(1000), us(1600)),  # closed by event 4 after restart
         (2, 0, 1, us(-1000), us(-1000)),  # closed by the restored watermark
     }
-
-
-def test_stateful_sessionizer_equals_batch(spark, sf_dir, events, tmp_path):
-    src = str(tmp_path / "se_src")
-    out = str(tmp_path / "se_out")
-    ckpt = str(tmp_path / "se_ckpt")
-    events.write.mode("overwrite").parquet(src)
-    sessionize_stream(spark, src, out, ckpt)
-    got = {(r.user_id, r.session_seq, r.n_events, r.start_us, r.end_us)
-           for r in spark.read.parquet(out).collect()}
-    want = {(r.user_id, r.session_seq, r.n_events, r.start_us, r.end_us)
-            for r in sessionize(events).collect()}
-    assert got == want
 
 
 def test_sessionize_stream_gate_query_matches_closed_subset(spark, sf_dir, events):

@@ -4,6 +4,7 @@ our-strategy (f): join row counts + tile assignments vs a single-node oracle).""
 from __future__ import annotations
 
 import itertools
+import math
 
 import pytest
 from hypothesis import example, given, settings, strategies as st
@@ -185,24 +186,40 @@ def _box_meta(spark, boxes):
 
 
 def test_antimeridian_crossing_boxes(spark):
-    """A west>east box splits into flagged parts; pair-emitting joins must
-    yield each (a, b) exactly once even when a counterpart overlaps BOTH
-    parts (the duplicate hazard the split introduces)."""
+    """A west>east box is ONE wrapped extent row; pair-emitting joins must
+    yield each (a, b) exactly once even when a counterpart overlaps both
+    sides of the antimeridian, its covering holds each cell once, and the
+    joins answer the same for a plain caller-built extents frame."""
 
     boxes = {
-        "band": (-180.0, -20.0, 180.0, 20.0),   # overlaps both parts of cross
+        "band": (-180.0, -20.0, 180.0, 20.0),   # overlaps both sides of cross
         "cross": (170.0, -10.0, -170.0, 10.0),  # antimeridian-crossing
-        "east": (175.0, -5.0, 179.0, 5.0),      # overlaps part 0 only
+        "east": (175.0, -5.0, 179.0, 5.0),      # overlaps cross's eastern side only
         "far": (0.0, 40.0, 10.0, 50.0),         # no overlap with cross
-        "west2": (-179.0, -5.0, -175.0, 5.0),   # overlaps part 1 only
+        "west2": (-179.0, -5.0, -175.0, 5.0),   # overlaps cross's western side only
+        "wide": (10.0, -10.0, 5.0, 10.0),       # crossing, both sides in grid column 8
     }
     ext = extents_df(_box_meta(spark, boxes))
 
-    parts = sorted(
-        (r.part, r.west, r.east) for r in ext.filter("doc_id = 'cross'").collect()
-    )
-    assert parts == [(0, 170.0, 180.0), (1, -180.0, -170.0)]
-    assert all(r.split for r in ext.filter("doc_id = 'cross'").collect())
+    crossing = [tuple(r) for r in ext.filter("west > east")
+                .select("doc_id", "west", "south", "east", "north").collect()]
+    assert sorted(crossing) == [(d, *boxes[d]) for d in ("cross", "wide")]
+    assert ext.count() == len(boxes)  # one row per doc
+
+    # the covering of a wrapped box: every cell of either side, each once
+    cells = [(r.doc_id, r.cell) for r in cover_cells(ext, 4).collect()]
+    assert len(cells) == len(set(cells)), "duplicate (doc, cell) rows"
+
+    def span(lo, hi, offset, width):  # level-4 grid indices of [lo, hi]
+        first, last = (min(math.floor((v + offset) / width * 16), 15) for v in (lo, hi))
+        return range(first, last + 1)
+
+    want_cells = set()
+    for d, (w, s, e, n) in boxes.items():
+        for pw, pe in _lon_parts(w, e):
+            want_cells |= {(d, (4 * 2**28 + x) * 2**28 + y)
+                           for x in span(pw, pe, 180, 360) for y in span(s, n, 90, 180)}
+    assert set(cells) == want_cells
 
     want = {
         (x, y)
@@ -219,12 +236,25 @@ def test_antimeridian_crossing_boxes(spark):
     tj = [(r.tile_id, r.doc_id) for r in tile_extent_join(tdf, ext).collect()]
     assert sorted(tj) == sorted({("t0-0-0", d) for d in boxes})
 
-    # kNN: the split doc appears at most once per point (part-0 centroid)
+    # kNN: a crossing doc appears at most once per point (one centroid)
     pdf = spark.createDataFrame(
-        [(1, 179.0, 0.0), (2, -179.0, 0.0)], "point_id long, lon double, lat double"
+        [(1, 179.0, 0.0), (2, -179.0, 0.0), (3, 7.0, 0.0)], "point_id long, lon double, lat double"
     )
     res = knn_points(pdf, ext, k=3).collect()
-    assert len(res) == len({(r.point_id, r.doc_id) for r in res}) == 6
+    assert len(res) == len({(r.point_id, r.doc_id) for r in res}) == 9
+    # the same boxes as a plain caller-built frame, with no derived columns
+    plain = spark.createDataFrame(
+        [(d, *b) for d, b in boxes.items()],
+        "doc_id string, west double, south double, east double, north double",
+    )
+    for join in (
+        bbox_overlap_pairs,
+        lambda e: point_in_bbox(pdf, e),
+        lambda e: knn_points(pdf, e, k=3),
+    ):
+        assert sorted(tuple(r) for r in join(plain).collect()) == sorted(
+            tuple(r) for r in join(ext).collect()
+        )
 
 
 _COORD = st.one_of(
@@ -234,8 +264,9 @@ _COORD = st.one_of(
 )
 
 
-def _py_extents(rows, split_antimeridian):
-    """Pure-Python model of extents_df over (doc_id, standard, box) rows."""
+def _py_extents(rows):
+    """Pure-Python model of extents_df over (doc_id, standard, box) rows: a
+    crossing box (west > east) stays one row."""
     out = []
     for doc_id, standard, box in rows:
         try:
@@ -244,14 +275,7 @@ def _py_extents(rows, split_antimeridian):
             continue
         if not (-180 <= w <= 180 and -180 <= e <= 180 and s >= -90 and n <= 90 and s <= n):
             continue
-        if not split_antimeridian:
-            if w <= e:
-                out.append((doc_id, standard, w, s, e, n))
-        elif w > e:
-            out += [(doc_id, standard, w, s, 180.0, n, 0, True),
-                    (doc_id, standard, -180.0, s, e, n, 1, True)]
-        else:
-            out.append((doc_id, standard, w, s, e, n, 0, False))
+        out.append((doc_id, standard, w, s, e, n))
     return sorted(out)
 
 
@@ -261,9 +285,9 @@ def _py_extents(rows, split_antimeridian):
 @example(boxes=[("10", "5", "20", "1"), ("200", "0", "10", "1"), ("0", "-91", "1", "0"),
                 ("0", "0", "1", "91"), ("junk", "0", "1", "1"), (None, "0", "1", "1")])
 def test_extents_match_python_split(spark, boxes):
-    """extents_df rows equal a pure-Python validate-and-split, with and
-    without the antimeridian split: crossing boxes, the 180/-180 edges,
-    non-numeric strings, nulls, out-of-range values and south > north."""
+    """extents_df rows equal a pure-Python validation: crossing boxes (kept
+    as one wrapped row), the 180/-180 edges, non-numeric strings, nulls,
+    out-of-range values and south > north."""
 
     rows = [(f"doc-{i}", "iso", b) for i, b in enumerate(boxes)] + [("doc-null", "iso", None)]
     meta = spark.createDataFrame(
@@ -271,14 +295,13 @@ def test_extents_match_python_split(spark, boxes):
         "doc_id string, standard string, "
         "bounding_box struct<west:string,south:string,east:string,north:string>",
     )
-    for split in (True, False):
-        got = sorted(tuple(r) for r in extents_df(meta, split_antimeridian=split).collect())
-        assert got == _py_extents(rows, split)
+    got = sorted(tuple(r) for r in extents_df(meta).collect())
+    assert got == _py_extents(rows)
 
 
 def test_extents_plan_is_one_extraction_pass(spark, sf_dir, tmp_path):
-    """The antimeridian split is one Generate over ONE extraction node: an
-    unpersisted metadata input is not re-run per branch of a union."""
+    """Extents read ONE extraction node: an unpersisted metadata input is
+    not re-run per branch of a union."""
     from gmx import pipeline as P
 
     P.corpus_df(spark, sf_dir).write.parquet(str(tmp_path / "corpus"))
@@ -287,7 +310,7 @@ def test_extents_plan_is_one_extraction_pass(spark, sf_dir, tmp_path):
 
     plan = ext._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
-    assert "Union" not in plan and "Generate" in plan, plan
+    assert "Union" not in plan, plan
 
 
 def test_count_budgeted_overflow_tier(extents, boxes, points, spark, no_broadcast):
@@ -343,14 +366,15 @@ def test_count_budgeted_overflow_tier(extents, boxes, points, spark, no_broadcas
 
 
 def test_overflow_tier_with_split_boxes(spark, no_broadcast):
-    """The forced coarse route on a corpus that ALSO has antimeridian-split
-    parts: the split slice stays broadcast and pair emission remains
-    exactly-once even when a counterpart overlaps both parts and a
-    coarse-route row pairs with a split row in either doc-id order."""
+    """The forced coarse route on a corpus that ALSO has antimeridian-
+    crossing boxes: the wrapped (split) rows stay broadcast and pair
+    emission remains exactly-once even when a counterpart overlaps both
+    sides and a coarse-route row pairs with a wrapped row in either doc-id
+    order."""
 
     boxes = {
         "band": (-180.0, -20.0, 180.0, 20.0),   # whole-world -> overflow tier
-        "cross": (170.0, -10.0, -170.0, 10.0),  # split parts (broadcast)
+        "cross": (170.0, -10.0, -170.0, 10.0),  # wrapped row (broadcast)
         "east": (175.0, -5.0, 179.0, 5.0),
         "far": (0.0, 40.0, 10.0, 50.0),
         "west2": (-179.0, -5.0, -175.0, 5.0),
@@ -410,7 +434,7 @@ def test_tier_stats_observability(extents, spark):
         "bounding_box struct<west:string,south:string,east:string,north:string>",
     )
     cross = {(r.is_large, r.split) for r in tier_stats(extents_df(meta)).collect()}
-    assert cross == {(True, True)}  # both parts routed to the broadcast tier
+    assert cross == {(True, True)}  # the wrapped row rides the broadcast tier
 
 
 def test_aqe_skew_join_splits_planted_hot_cell(spark):
@@ -553,8 +577,8 @@ def test_cell_index_doc_view(spark, extents, tmp_path, no_broadcast):
         "pt_sw": (-180.0, -90.0, -180.0, -90.0),
         "ne": (170.0, 80.0, 180.0, 90.0),
         "sw": (-180.0, -90.0, -170.0, -80.0),
-        "cross": (170.0, -10.0, -170.0, 10.0),    # antimeridian split
-        "cross_line": (180.0, 0.0, -180.0, 5.0),  # split into two slivers
+        "cross": (170.0, -10.0, -170.0, 10.0),    # antimeridian-crossing
+        "cross_line": (180.0, 0.0, -180.0, 5.0),  # two slivers, one wrapped row
         "world": (-180.0, -90.0, 180.0, 90.0),    # large tier
     }
     meta = _box_meta(spark, boxes)
@@ -563,15 +587,6 @@ def test_cell_index_doc_view(spark, extents, tmp_path, no_broadcast):
     def rows(df):
         return sorted(tuple(r) for r in df.select("doc_id", "west", "south", "east", "north",
                                                   "split").collect())
-
-    def folded(ext):
-        """Extent rows with a crossing box's two parts as one wrapped row."""
-        by_doc = {}
-        for d, w, s, e, n, split in rows(ext):
-            if d in by_doc:  # part 0 is [west, 180], part 1 [-180, east]
-                w, e = max(w, by_doc[d][1]), min(e, by_doc[d][3])
-            by_doc[d] = (d, w, s, e, n, split)
-        return sorted(by_doc.values())
 
     for name, ext in (("gmx_test_docview", extents_df(meta)), ("gmx_test_docview_sf", extents)):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -583,7 +598,8 @@ def test_cell_index_doc_view(spark, extents, tmp_path, no_broadcast):
             assert len(small) == len(set(small))  # one row per small-tier doc
             assert set(small) == {r.doc_id for r in ix.cells.select("doc_id").collect()}
             assert rows(docs.filter("is_large")) == rows(ix.large)
-            assert rows(docs) == folded(ext)  # every doc, once
+            # every doc, once: its extent row itself
+            assert rows(docs) == rows(ext.selectExpr("*", "west > east AS split"))
             if name == "gmx_test_docview":
                 assert set(small) == small_ids
 
@@ -598,7 +614,7 @@ def test_cell_index_doc_view(spark, extents, tmp_path, no_broadcast):
 def test_wrapped_large_tier_matches_brute_force(spark, tmp_path, no_broadcast):
     """The large tier holds one row per doc, a crossing box as one wrapped
     row (west > east), and bbox overlap, point-in-bbox and tile joins equal
-    brute force over the split parts — on the fly, from the index, and
+    brute force over its two longitude ranges — on the fly, from the index, and
     with broadcasts refused (no_broadcast) — each pair exactly once.  The
     served bbox and tile plans join the large tier in ONE broadcast
     nested-loop join with no pair-level aggregate."""
@@ -616,12 +632,12 @@ def test_wrapped_large_tier_matches_brute_force(spark, tmp_path, no_broadcast):
         "cross": (170.0, -10.0, -170.0, 10.0),
         "cross2": (175.0, 0.0, -175.0, 30.0),      # crossing x crossing
         "cross_line": (180.0, 0.0, -180.0, 5.0),   # west=180, east=-180: two slivers
-        "touch_e": (170.0, 40.0, -180.0, 50.0),    # part 1 is the line lon=-180
-        "touch_w": (180.0, -50.0, -170.0, -40.0),  # part 0 is the line lon=180
+        "touch_e": (170.0, 40.0, -180.0, 50.0),    # western side is the line lon=-180
+        "touch_w": (180.0, -50.0, -170.0, -40.0),  # eastern side is the line lon=180
         "east": (175.0, -5.0, 180.0, 5.0),         # touches 180 only
         "west": (-180.0, -5.0, -175.0, 5.0),       # touches -180 only
         "far": (0.0, 40.0, 10.0, 50.0),
-        "small_e": (172.0, 42.0, 174.0, 44.0),     # inside touch_e's part 0
+        "small_e": (172.0, 42.0, 174.0, 44.0),     # inside touch_e's eastern side
         "world": (-180.0, -90.0, 180.0, 90.0),     # crossing x whole world
     }
     pts = [
@@ -914,8 +930,6 @@ def test_cover_cells_match_oracle(spark, extents, boxes):
     np_cell_ix, np_cell_iy) on adversarial coordinates: +-180 and +-90,
     exact cell edges, values just outside the globe (clamped into the edge
     cells) and null coordinates."""
-
-    import math
 
     import numpy as np
 
