@@ -18,12 +18,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def windowed_event_counts(events: DataFrame, minutes: int = 5) -> DataFrame:
-    """Tumbling-window counts per event type (batch plan — window() compiles
-    to a partial-aggregated hash agg, map-side combined)."""
+def _window_counts(events: DataFrame, window) -> DataFrame:
+    """(window_start_us, event_type, n, min_event_id, max_event_id) per
+    (``window``, event type): the one aggregate body of the batch and
+    streaming window operators."""
 
-    w = F.window("ts", f"{minutes} minutes")
-    return events.groupBy(w.alias("w"), "event_type").agg(
+    return events.groupBy(window.alias("w"), "event_type").agg(
         F.count("*").alias("n"),
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
@@ -33,6 +33,13 @@ def windowed_event_counts(events: DataFrame, minutes: int = 5) -> DataFrame:
     )
 
 
+def windowed_event_counts(events: DataFrame, minutes: int = 5) -> DataFrame:
+    """Tumbling-window counts per event type (batch plan — window() compiles
+    to a partial-aggregated hash agg, map-side combined)."""
+
+    return _window_counts(events, F.window("ts", f"{minutes} minutes"))
+
+
 def sliding_event_counts(
     events: DataFrame, minutes: int = 10, slide_minutes: int = 5
 ) -> DataFrame:
@@ -40,14 +47,8 @@ def sliding_event_counts(
     one row per (event, covering window) — still a single partial-aggregated
     hash agg, the fan-out (len/slide rows per event) happens map-side."""
 
-    w = F.window("ts", f"{minutes} minutes", f"{slide_minutes} minutes")
-    return events.groupBy(w.alias("w"), "event_type").agg(
-        F.count("*").alias("n"),
-        F.min("event_id").alias("min_event_id"),
-        F.max("event_id").alias("max_event_id"),
-    ).select(
-        F.unix_micros(F.col("w.start").cast("timestamp")).alias("window_start_us"),
-        "event_type", "n", "min_event_id", "max_event_id",
+    return _window_counts(
+        events, F.window("ts", f"{minutes} minutes", f"{slide_minutes} minutes")
     )
 
 
@@ -67,18 +68,8 @@ def stream_windowed_event_counts(
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string"
     ).parquet(events_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", f"{minutes} minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("event_id").alias("min_event_id"),
-            F.max("event_id").alias("max_event_id"),
-        )
-        .select(
-            F.unix_micros(F.col("w.start").cast("timestamp")).alias("window_start_us"),
-            "event_type", "n", "min_event_id", "max_event_id",
-        )
+    agg = _window_counts(
+        events.withWatermark("ts", watermark), F.window("ts", f"{minutes} minutes")
     )
     q = (
         agg.writeStream.format("parquet")

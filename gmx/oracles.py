@@ -13,6 +13,8 @@ so DuckDB and Spark agree bit-for-bit; see gmx.corpus docstring.
 
 from __future__ import annotations
 
+import itertools
+
 CELL_BASE = 268435456  # 2^28, matches gmx.geometry.cellgrid.CELL_BASE
 Z = 4
 NX = 1 << Z
@@ -58,6 +60,140 @@ _IY = f"least((({{v}}+180)*{NX})//360, {NX - 1})"
 
 def _cell(ix: str, iy: str) -> str:
     return f"(CAST({Z} AS BIGINT)*{CELL_BASE} + ({ix}))*{CELL_BASE} + ({iy})"
+
+
+# --- Spark's xxhash64 (XXH64, seed 42) as one DuckDB expression -------------
+# Arithmetic is UHUGEINT masked to 64 bits (a mask and shifts, not a 128-bit
+# modulo, which is about 40x slower).  Each sub-expression used twice is bound
+# once as a lambda variable (``_let``), so the SQL text grows linearly.
+
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_MASK = f"{(1 << 64) - 1}::UHUGEINT"
+_names = itertools.count()
+
+
+def _u(k: int) -> str:
+    return f"{k % (1 << 64)}::UHUGEINT"
+
+
+def _let(expr: str, body) -> str:
+    """``body(v)`` with a fresh variable ``v`` bound to ``expr`` once."""
+
+    v = f"_x{next(_names)}"
+    return f"list_transform([{expr}], {v} -> {body(v)})[1]"
+
+
+def _fold(init: str, lo: str, hi: str, item, step) -> str:
+    """Left fold of ``step(acc, item(j))`` over j in [lo, hi), from ``init``."""
+
+    j, a, x = (f"_x{next(_names)}" for _ in range(3))
+    items = f"list_transform(range({lo}, {hi}), {j} -> {item(j)})"
+    return f"list_reduce(list_prepend({init}, {items}), ({a}, {x}) -> {step(a, x)})"
+
+
+def _mul(a: str, k: int) -> str:
+    return f"((({a}) * {_u(k)}) & {_MASK})"
+
+
+def _add(a: str, b: str) -> str:
+    return f"((({a}) + ({b})) & {_MASK})"
+
+
+def _rotl(x: str, r: int) -> str:
+    return _let(x, lambda v: f"((({v} << {r}) & {_MASK}) | ({v} >> {64 - r}))")
+
+
+def _round(acc: str, w: str) -> str:
+    return _mul(_rotl(_add(acc, _mul(w, _P2)), 31), _P1)
+
+
+def _word(h: str, k: str) -> str:
+    """Mix one 8-byte little-endian word (also Spark's ``hashLong`` body)."""
+
+    return _add(_mul(_rotl(f"xor({h}, {_round(_u(0), k)})", 27), _P1), _u(_P4))
+
+
+def _int(h: str, k: str) -> str:
+    """Mix one 4-byte word (also Spark's ``hashInt`` body)."""
+
+    return _add(_mul(_rotl(f"xor({h}, {_mul(k, _P1)})", 23), _P2), _u(_P3))
+
+
+def _byte(h: str, b: str) -> str:
+    return _mul(_rotl(f"xor({h}, {_mul(b, _P5)})", 11), _P1)
+
+
+def _fmix(h: str) -> str:
+    h = _let(h, lambda v: f"xor({v}, {v} >> 33)")
+    h = _let(_mul(h, _P2), lambda v: f"xor({v}, {v} >> 29)")
+    return _let(_mul(h, _P3), lambda v: f"xor({v}, {v} >> 32)")
+
+
+def _le(hx: str, off: str, nbytes: int) -> str:
+    """The little-endian ``nbytes`` word at byte ``off`` of hex string ``hx``."""
+
+    hexs = " || ".join(
+        f"substr({hx}, 2*({off})+{2 * i + 1}, 2)" for i in reversed(range(nbytes))
+    )
+    return f"('0x' || {hexs})::UBIGINT::UHUGEINT"
+
+
+def _hash_string(s: str, seed: str) -> str:
+    """Spark's ``hashUnsafeBytes`` over the UTF-8 bytes of ``s``."""
+
+    def body(sd, hx, n):
+        inits = [_add(sd, _u(_P1 + _P2)), _add(sd, _u(_P2)), sd, _add(sd, _u(-_P1))]
+        lanes = [
+            _fold(inits[k], "0", f"{n} // 32", lambda j, k=k: _le(hx, f"32*{j}+{8 * k}", 8), _round)
+            for k in range(4)
+        ]
+
+        def merge(v):
+            h = _add(_add(_rotl(v[0], 1), _rotl(v[1], 7)), _add(_rotl(v[2], 12), _rotl(v[3], 18)))
+            for x in v:
+                h = _add(_mul(f"xor({h}, {_round(_u(0), x)})", _P1), _u(_P4))
+            return h
+
+        stripes = _let(lanes[0], lambda a: _let(lanes[1], lambda b: _let(
+            lanes[2], lambda c: _let(lanes[3], lambda d: merge([a, b, c, d])))))
+        h = f"(CASE WHEN {n} >= 32 THEN {stripes} ELSE {_add(sd, _u(_P5))} END)"
+        h = _add(h, f"{n}::UHUGEINT")
+        h = _fold(h, f"4*({n} // 32)", f"{n} // 8", lambda j: _le(hx, f"8*{j}", 8), _word)
+        h = _fold(h, "0", f"({n} % 8) // 4", lambda j: _le(hx, f"8*({n} // 8)", 4), _int)
+        h = _fold(
+            h, f"8*({n} // 8) + 4*(({n} % 8) // 4)", n,
+            lambda j: f"('0x' || substr({hx}, 2*{j}+1, 2))::INTEGER::UHUGEINT", _byte,
+        )
+        return _fmix(h)
+
+    return _let(seed, lambda sd: _let(f"hex(encode({s}))", lambda hx: _let(
+        f"len({hx}) // 2", lambda n: body(sd, hx, n))))
+
+
+def xxhash64_sql(*cols: tuple[str, str]) -> str:
+    """DuckDB expression equal to Spark's ``xxhash64(c1, c2, ...)`` (seed 42)
+    as a signed BIGINT.  Each ``(expr, kind)`` column hashes with the
+    previous result as its seed; ``kind`` is ``"string"`` (UTF-8 bytes),
+    ``"int"`` (``hashInt``) or ``"long"`` (``hashLong``)."""
+
+    h = _u(42)
+    for expr, kind in cols:
+        if kind == "string":
+            h = _hash_string(expr, h)
+        elif kind == "int":
+            k = f"(({expr})::BIGINT & 4294967295)::UHUGEINT"
+            h = _fmix(_int(_add(h, _u(_P5 + 4)), k))
+        else:
+            k = f"(({expr})::HUGEINT & {(1 << 64) - 1})::UHUGEINT"
+            h = _fmix(_word(_add(h, _u(_P5 + 8)), k))
+    # DuckDB evaluates both CASE branches, so the sign fix subtracts in HUGEINT
+    return _let(h, lambda v: (
+        f"({v}::HUGEINT - CASE WHEN {v} >= {_u(1 << 63)} "
+        f"THEN {1 << 64}::HUGEINT ELSE 0 END)::BIGINT"))
 
 
 def _ivf_twin_sql(train_iters: int = 1, lists: int = 16, nprobe: int = 4) -> str:
@@ -401,8 +537,12 @@ SELECT did AS doc_id, '{_std}' AS standard,
        printf('Place %d|Region %d', i%7, i%5) AS place
 FROM ext"""
 
+    # the corpus round-trips; only gmx.queries.SPAN_PLANT (one span, which
+    # respan splits per section) is a violation
     o["spans_roundtrip_violations"] = """
-SELECT printf('doc-%08d', doc_id) AS doc_id FROM documents WHERE 1=0"""
+SELECT printf('doc-%08d', doc_id) AS doc_id FROM documents WHERE 1=0
+UNION ALL
+SELECT 'planted-single-span'"""
 
     o["update_preserve_violations"] = """
 SELECT printf('doc-%08d', doc_id) AS doc_id FROM documents WHERE 1=0"""
@@ -633,29 +773,29 @@ v AS (
 SELECT a_id, b_id, CAST(inter*1000 // (na+nb-inter) AS BIGINT) AS jaccard_per_mille
 FROM v WHERE inter*1000 // (na+nb-inter) >= 100"""
 
-    # full MinHash-LSH dataflow with the portable polynomial shingle hash:
-    # shingles -> 16 permuted minhashes -> 4 band keys -> candidates sharing
-    # any band -> exact Jaccard verify — mirrors minhash_pairs(hash_mode=poly).
-    # The CTE chain is shared with dedup_clusters (which clusters the same
-    # pair set).
-    minhash_cte = """w AS (SELECT doc_id, string_split(text,' ') AS words FROM documents),
+    # full MinHash-LSH dataflow: shingles -> xxhash64 mod 2^31-1 -> 16
+    # permuted minhashes -> 4 band keys xxhash64(b, 4 minhashes) ->
+    # candidates sharing any band -> exact Jaccard verify — mirrors
+    # minhash_pairs.  The CTE chain is shared with dedup_clusters (which
+    # clusters the same pair set).
+    band_keys_mh = ", ".join(
+        xxhash64_sql((str(b), "int"), *[(f"sg[{4 * b + r + 1}]", "long") for r in range(4)])
+        for b in range(4)
+    )
+    minhash_cte = f"""w AS (SELECT doc_id, string_split(text,' ') AS words FROM documents),
 s AS (SELECT doc_id,
         CASE WHEN len(words)>=3
              THEN list_distinct([array_to_string(words[i:i+2],' ') for i in range(1,len(words)-1)])
              ELSE [array_to_string(words,' ')] END AS sh
       FROM w),
-h AS (SELECT doc_id, sh,
-        [list_reduce(list_prepend(0::BIGINT,
-            list_transform(regexp_split_to_array(g,''), c -> unicode(c)::BIGINT)),
-            (a,x) -> (a*1000003+x) % 2147483647) for g in sh] AS hs
+h AS MATERIALIZED (SELECT doc_id, sh,
+        [(x + 2147483647) % 2147483647
+         for x in [({xxhash64_sql(("g", "string"))}) % 2147483647 for g in sh]] AS hs
       FROM s),
 sig AS (SELECT doc_id, sh,
         [list_min([(h*(2*i+1)+7*i+3) % 2147483647 for h in hs]) for i in range(0,16)] AS sg
       FROM h),
-bk AS (SELECT doc_id, sh, UNNEST(
-         [list_reduce(list_prepend(b::BIGINT, sg[b*4+1:b*4+4]),
-                      (a,x) -> (a*1000003+x) % 1099511627776) for b in range(0,4)]) AS key
-      FROM sig),
+bk AS (SELECT doc_id, sh, UNNEST([{band_keys_mh}]) AS key FROM sig),
 cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id, a.sh AS sa, b.sh AS sb
          FROM bk a JOIN bk b ON a.key = b.key AND a.doc_id < b.doc_id)"""
 
@@ -672,7 +812,7 @@ WHERE len(list_intersect(sa,sb))*1000 // (len(sa)+len(sb)-len(list_intersect(sa,
     # component (matches min-label propagation exactly at convergence)
     o["dedup_clusters"] = f"""
 WITH RECURSIVE {minhash_cte},
-p AS (SELECT a_id, b_id FROM cand
+p AS MATERIALIZED (SELECT a_id, b_id FROM cand
       WHERE len(list_intersect(sa,sb))*1000 // (len(sa)+len(sb)-len(list_intersect(sa,sb))) >= 100),
 eg AS (SELECT a_id AS src, b_id AS dst FROM p
        UNION SELECT b_id, a_id FROM p),
@@ -707,30 +847,24 @@ k AS (
 SELECT doc_id, lang_guess, CAST(sample_bucket AS BIGINT) AS sample_bucket
 FROM k WHERE sample_bucket < CASE WHEN lang_guess = 'en' THEN 500 ELSE 100 END"""
 
-    # 64-bit SimHash from two 32-bit codepoint polynomials (bits 0-31 /
-    # 32-63), sign-aggregated per bit; bucket = top 16 bits (computed from
-    # the per-bit signs to avoid unsigned-shift semantics differences)
+    # 64-bit SimHash: bit b is the sign of the per-token votes on bit b of
+    # the token's xxhash64; bucket = top 16 bits (computed from the per-bit
+    # signs to avoid unsigned-shift semantics differences)
+    def bit_vote(b: int) -> str:
+        return f"list_sum([CASE WHEN (x >> {b}) & 1 = 1 THEN 1 ELSE -1 END for x in hs]) > 0"
+
     bit_terms = " + ".join(
-        f"(CASE WHEN list_sum([CASE WHEN (h{'lo' if b < 32 else 'hi'}[i] >> {b % 32}) & 1 = 1 "
-        f"THEN 1 ELSE -1 END for i in range(1, len(hlo)+1)]) > 0 THEN "
+        f"(CASE WHEN {bit_vote(b)} THEN "
         + (f"{1 << b}::BIGINT" if b < 63 else "(-9223372036854775807 - 1)")
         + " ELSE 0 END)"
         for b in range(64)
     )
     bucket_terms = " + ".join(
-        f"(CASE WHEN list_sum([CASE WHEN (hhi[i] >> {b % 32}) & 1 = 1 "
-        f"THEN 1 ELSE -1 END for i in range(1, len(hlo)+1)]) > 0 THEN {1 << (b - 48)}::BIGINT ELSE 0 END)"
+        f"(CASE WHEN {bit_vote(b)} THEN {1 << (b - 48)}::BIGINT ELSE 0 END)"
         for b in range(48, 64)
     )
-    simhash_h_cte = """t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-h AS (SELECT doc_id,
-        [list_reduce(list_prepend(0::BIGINT,
-            list_transform(regexp_split_to_array(tk,''), c -> unicode(c)::BIGINT)),
-            (a,x) -> (a*1000003+x) % 4294967296) for tk in toks] AS hlo,
-        [list_reduce(list_prepend(0::BIGINT,
-            list_transform(regexp_split_to_array(tk,''), c -> unicode(c)::BIGINT)),
-            (a,x) -> (a*999983+x) % 4294967296) for tk in toks] AS hhi
-      FROM t)"""
+    simhash_h_cte = f"""t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+h AS MATERIALIZED (SELECT doc_id, [{xxhash64_sql(("tk", "string"))} for tk in toks] AS hs FROM t)"""
     o["dedup_simhash"] = f"""
 WITH {simhash_h_cte}
 SELECT doc_id, {bit_terms} AS simhash, {bucket_terms} AS bucket FROM h"""
@@ -785,30 +919,39 @@ SELECT qid AS query_id, rank, nid AS neighbor_id FROM (
            ORDER BY CAST(dot AS DOUBLE)/sqrt(CAST(qn*nn AS DOUBLE)) DESC, nid ASC) AS rank
   FROM p) WHERE rank <= 5"""
 
-    # ann_lsh_topk twin (portable plane family): 24 bands x 4 sign bits,
-    # sign(p, dim) = bit 8 of xor(p*73856093, dim*19349663); candidates share
-    # any band key, exact integer scoring, (score desc, nid) ranking
-    def plane_sum(p: int) -> str:
-        return (
-            "list_sum([CASE WHEN (xor({pm}, (i-1)*19349663) >> 8) & 1 = 0 "
-            "THEN v[i] ELSE -v[i] END for i in range(1, len(v)+1)])"
-        ).format(pm=p * 73856093)
-
-    band_keys = ", ".join(
-        "(" + str(b * 16) + " + " + " + ".join(
-            f"(CASE WHEN {plane_sum(b * 4 + r)} > 0 THEN {1 << r} ELSE 0 END)"
-            for r in range(4)
-        ) + ")::BIGINT"
-        for b in range(24)
-    )
-    o["ann_lsh_topk"] = f"""
-WITH q AS (
+    # ann_lsh_topk twin: 24 bands x 4 sign bits, plane p's sign on 0-based
+    # dimension i = parity of xxhash64(p::INT, i::INT) (planes CTE, built once);
+    # candidates share any band key, exact integer scoring, (score desc, nid)
+    # ranking
+    def lsh_ctes(bands: int, bits: int) -> str:
+        sign = f"CASE WHEN {xxhash64_sql(('p', 'int'), ('i', 'int'))} % 2 = 0 THEN 1 ELSE -1 END"
+        keys = ", ".join(
+            f"({b << bits} + " + " + ".join(
+                f"(CASE WHEN d[{b * bits + r + 1}] > 0 THEN {1 << r} ELSE 0 END)"
+                for r in range(bits)
+            ) + ")::BIGINT"
+            for b in range(bands)
+        )
+        return f"""q AS (
   SELECT vec_id,
          [CAST(floor(CAST(embedding[i] AS DOUBLE)*1000 + 0.5) AS BIGINT)
           for i in range(1, len(embedding)+1)] AS v
   FROM embeddings),
 n AS (SELECT vec_id, v, CAST(list_sum([x*x for x in v]) AS BIGINT) AS nrm FROM q),
-pk AS (SELECT vec_id, v, nrm, UNNEST([{band_keys}]) AS key FROM n),
+planes AS (
+  SELECT list(sg ORDER BY p) AS sgs FROM (
+    SELECT p, list({sign} ORDER BY i) AS sg
+    FROM (SELECT range::INT AS p FROM range({bands * bits})),
+         (SELECT unnest(range(dim))::INT AS i FROM (SELECT max(len(v)) AS dim FROM n))
+    GROUP BY p)),
+pk AS (
+  SELECT vec_id, v, nrm, UNNEST([{keys}]) AS key
+  FROM (SELECT vec_id, v, nrm,
+               [list_sum([v[i]*sg[i] for i in range(1, len(v)+1)]) for sg in sgs] AS d
+        FROM n, planes))"""
+
+    o["ann_lsh_topk"] = f"""
+WITH {lsh_ctes(24, 4)},
 cand AS (
   SELECT DISTINCT a.vec_id AS qid, b.vec_id AS nid
   FROM pk a JOIN pk b ON a.key = b.key AND a.vec_id % 100 = 0 AND b.vec_id <> a.vec_id),
@@ -821,25 +964,12 @@ scored AS (
   FROM cand c JOIN n qn ON qn.vec_id = c.qid JOIN n nn ON nn.vec_id = c.nid)
 SELECT qid AS query_id, rank, nid AS neighbor_id FROM scored WHERE rank <= 5"""
 
-    # embedding_near_dup_lsh twin (portable plane family): 8 bands x 8 sign
+    # embedding_near_dup_lsh twin: the same plane family at 8 bands x 8 sign
     # bits (key = band*256 + bits, plane index = band*8 + bit), candidates
     # share any band key, then the SAME exact integer predicate as the
     # grid-exact path (threshold 0.35 -> 1225) — no false positives ever
-    band_keys_nd = ", ".join(
-        "(" + str(b * 256) + " + " + " + ".join(
-            f"(CASE WHEN {plane_sum(b * 8 + r)} > 0 THEN {1 << r} ELSE 0 END)"
-            for r in range(8)
-        ) + ")::BIGINT"
-        for b in range(8)
-    )
     o["dedup_embedding_lsh"] = f"""
-WITH q AS (
-  SELECT vec_id,
-         [CAST(floor(CAST(embedding[i] AS DOUBLE)*1000 + 0.5) AS BIGINT)
-          for i in range(1, len(embedding)+1)] AS v
-  FROM embeddings),
-n AS (SELECT vec_id, v, CAST(list_sum([x*x for x in v]) AS BIGINT) AS nrm FROM q),
-pk AS (SELECT vec_id, UNNEST([{band_keys_nd}]) AS key FROM n),
+WITH {lsh_ctes(8, 8)},
 cand AS (
   SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
   FROM pk a JOIN pk b ON a.key = b.key AND a.vec_id < b.vec_id),
@@ -851,11 +981,10 @@ p AS (
 SELECT a_id, b_id FROM p
 WHERE dot > 0 AND 10000*dot*dot >= 1225*na*nb"""
 
-    # ann_ivf_topk twin (assign_mode='int', train_iters=1): stride-sampled
-    # seed centroids (vec_id % 37, first 16 by id), then ONE exact-integer
-    # Lloyd iteration (r4 verdict #6 — the gated path now trains): nearest
-    # list by the monotone image of cosine sign(dot)*dot^2/|c|^2 over
-    # QUANTIZED integers (one IEEE divide, ties on centroid index);
+    # ann_ivf_topk twin (train_iters=1): stride-sampled seed centroids
+    # (vec_id % 37, first 16 by id), then ONE exact-integer Lloyd iteration:
+    # nearest list by the monotone image of cosine sign(dot)*dot^2/|c|^2
+    # over QUANTIZED integers (one IEEE divide, ties on centroid index);
     # per-(list, dim) SUM/COUNT are exact BIGINTs and each trained
     # coordinate is floor(double(sum)/count + 0.5) — bit-identical to the
     # Spark driver's float(s)/float(c) computation; empty lists keep their

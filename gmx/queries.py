@@ -9,6 +9,11 @@ never cause a false mismatch.  SURVEY.md §2 operator ids noted per query.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from gmx.cache import cached_metadata
@@ -35,6 +40,16 @@ from gmx.textops import (
 
 TILE_Z = 4
 KNN_K = 5
+
+
+@functools.cache
+def _gate_root() -> str:
+    """The process's one directory for the files gates write (index tables,
+    the streaming gate's source and checkpoint), removed at exit; a rebuilt
+    index table overwrites its own path under it."""
+    root = tempfile.mkdtemp(prefix="gmx_gate_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def _join(col, sep: str = "|"):
@@ -248,12 +263,11 @@ def events_sessionize_stream(spark, sf_dir):
 
     import glob
     import os
-    import tempfile
     import time as _time
 
     from gmx.events import sessionize_stream_watermarked
 
-    base = tempfile.mkdtemp(prefix="gmx_sess_stream_")
+    base = tempfile.mkdtemp(prefix="sess_stream_", dir=_gate_root())
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -337,16 +351,29 @@ def convert_to_arcgis(spark, sf_dir):
     return _convert_query(spark, sf_dir, "arcgis")
 
 
+# The document planted next to the corpus by spans_roundtrip_violations: its
+# whole text is ONE span, and respan splits it per section, so the gate must
+# report it.  The oracle twin expects exactly this violation.
+SPAN_PLANT = "planted-single-span"
+
+
 def spans_roundtrip_violations(spark, sf_dir):
     """THE end-to-end invariant (BASELINE.json input_hint): for every corpus
     document, extract -> re-serialize -> re-split must reproduce the original
     span sequence (kind, text, media_ref, offset, order) exactly.  Returns
-    the violating doc_ids — empty when the engine is correct."""
+    the violating doc_ids: none of the corpus when the engine is correct,
+    plus the SPAN_PLANT document, so a gate that compares nothing fails."""
     from gmx import pipeline
     from gmx.convert import respan_df
 
-    corpus = pipeline.corpus_df(spark, sf_dir).withColumnRenamed("spans", "orig_spans")
-    regen = respan_df(cached_metadata(spark, sf_dir))
+    planted = _planted_corpus(spark, {SPAN_PLANT: None})
+    corpus = (
+        pipeline.corpus_df(spark, sf_dir).unionByName(planted)
+        .withColumnRenamed("spans", "orig_spans")
+    )
+    regen = respan_df(cached_metadata(spark, sf_dir).unionByName(
+        pipeline.metadata_from_corpus(planted, persist=False)
+    ))
     joined = regen.join(corpus, "doc_id")
     return joined.filter(F.col("spans") != F.col("orig_spans")).select("doc_id")
 
@@ -422,17 +449,19 @@ QUARANTINE_PLANTS = {
 }
 
 
-def _planted_corpus(spark):
-    """Span-corpus rows of the planted documents: corpus doc 3 (fgdc, no
-    raster tile, no catalog, no violation) with each planted box."""
+def _planted_corpus(spark, plants: dict):
+    """Span-corpus rows of planted documents (doc_id -> box, or None to keep
+    the record's own): corpus doc 3 (fgdc, no raster tile, no catalog, no
+    violation), its whole text one span."""
     from gmx.corpus import make_record
     from gmx.schema import CORPUS_SCHEMA
     from gmx.serialize import serialize
 
     rows = []
-    for doc_id, box in QUARANTINE_PLANTS.items():
+    for doc_id, box in plants.items():
         rec = make_record(3)
-        rec["bounding_box"] = dict(zip(("west", "south", "east", "north"), box))
+        if box is not None:
+            rec["bounding_box"] = dict(zip(("west", "south", "east", "north"), box))
         rows.append((doc_id, [("text", serialize(rec, "fgdc"), "", 0)]))
     return spark.createDataFrame(rows, CORPUS_SCHEMA)
 
@@ -446,7 +475,7 @@ def validate_quarantine(spark, sf_dir):
     from gmx.validate import validation_report
 
     meta = cached_metadata(spark, sf_dir).unionByName(
-        metadata_from_corpus(_planted_corpus(spark), persist=False)
+        metadata_from_corpus(_planted_corpus(spark, QUARANTINE_PLANTS), persist=False)
     )
     return validation_report(meta).select("doc_id", "property", "rule")
 
@@ -520,18 +549,17 @@ _GATE_INDEXES: set[tuple[str, str]] = set()
 
 def _gate_index(spark, sf_dir, kind: str) -> str:
     import hashlib
-    import tempfile
 
     from gmx.geometry.bucketed import write_cell_index, write_centroid_index
 
     table = f"gmx_gate_{kind}_{hashlib.md5(sf_dir.encode()).hexdigest()[:6]}"
     key = app_scoped(spark, table)
     if key not in _GATE_INDEXES:
-        path = tempfile.mkdtemp(prefix=f"gmx_gate_{kind}_")
+        path = f"{_gate_root()}/{table}"
         if kind == "cell":
-            write_cell_index(_extents(spark, sf_dir), table, f"{path}/{kind}")
+            write_cell_index(_extents(spark, sf_dir), table, path)
         else:
-            write_centroid_index(_extents(spark, sf_dir), table, f"{path}/{kind}")
+            write_centroid_index(_extents(spark, sf_dir), table, path)
         _GATE_INDEXES.add(key)
     return table
 
@@ -634,16 +662,16 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 
 def dedup_minhash_lsh(spark, sf_dir):
-    """Portable-hash mode so the ENTIRE banding/candidate/verify dataflow is
-    DuckDB-reproducible and hash-gated (production default stays xxhash64 —
-    same shapes and shuffles, faster hash primitive)."""
-    return minhash_pairs(_docs(spark, sf_dir), threshold=0.1, hash_mode="poly")
+    """MinHash-LSH near-dup pairs on the production xxhash64 path: the DuckDB
+    twin computes the same xxhash64, so the ENTIRE banding/candidate/verify
+    dataflow is hash-gated."""
+    return minhash_pairs(_docs(spark, sf_dir), threshold=0.1)
 
 
 def dedup_simhash(spark, sf_dir):
-    """Portable-hash mode (two 32-bit codepoint polynomials) — full 64-bit
-    simhash + prefix bucket hash-gated against the DuckDB twin."""
-    return simhash_buckets(_docs(spark, sf_dir), hash_mode="poly")
+    """Full 64-bit xxhash64 simhash + prefix bucket, hash-gated against the
+    DuckDB twin."""
+    return simhash_buckets(_docs(spark, sf_dir))
 
 
 def dedup_simhash_pairs(spark, sf_dir):
@@ -652,7 +680,7 @@ def dedup_simhash_pairs(spark, sf_dir):
     pair-producing half of the SimHash dedup story, fully hash-gated."""
     from gmx.textops import simhash_pairs
 
-    return simhash_pairs(_docs(spark, sf_dir), hash_mode="poly")
+    return simhash_pairs(_docs(spark, sf_dir))
 
 
 def ann_cosine_topk(spark, sf_dir):
@@ -668,34 +696,30 @@ def dedup_embedding_cosine(spark, sf_dir):
 
 def dedup_embedding_lsh(spark, sf_dir):
     """The sub-quadratic LSH blocking path for embedding near-dups, gated
-    end to end: portable plane family (hash_mode='poly') so the DuckDB twin
+    end to end: the DuckDB twin builds the same xxhash64 planes and
     reproduces candidate generation + the exact integer verify.  Same
     threshold as the grid-exact gate so the emitted pairs are the
     LSH-recalled subset of dedup_embedding_cosine's."""
     from gmx.textops.similarity import embedding_near_dup_lsh
 
     return embedding_near_dup_lsh(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        threshold_hundredths=35,
-        hash_mode="poly",
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold_hundredths=35
     )
 
 
 def ann_lsh_topk(spark, sf_dir):
     """LSH-bucketed approximate top-k (the scale path; recall vs exact
-    asserted in tests).  Portable plane family (hash_mode='poly') so the
-    DuckDB twin reproduces candidate generation + ranking exactly and the
-    gate hash-checks the full approximate dataflow."""
+    asserted in tests).  The DuckDB twin builds the same xxhash64 planes and
+    reproduces candidate generation + ranking exactly, so the gate
+    hash-checks the full approximate dataflow."""
     from gmx.textops.similarity import ann_lsh_topk as _lsh
 
-    return _lsh(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=KNN_K, hash_mode="poly"
-    )
+    return _lsh(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=KNN_K)
 
 
 # per-process memo of the near-dup pair set the two clustering twins share:
-# both gates consume the IDENTICAL minhash band join (same docs, threshold,
-# poly hash), so pay its shuffle once and let both iterative bodies read the
+# both gates consume the IDENTICAL minhash band join (same docs and
+# threshold), so pay its shuffle once and let both iterative bodies read the
 # persisted pairs — the same amortization _GATE_INDEXES gives the spatial
 # *_indexed gates (r4 verdict #1: keeps all 54 contract queries cheap under
 # the driver gate).  Honesty note (r5 review): the standalone
@@ -714,7 +738,7 @@ _GATE_PAIRS: dict[tuple[str, str], DataFrame] = {}
 def _gate_near_dup_pairs(spark, sf_dir) -> DataFrame:
     key = app_scoped(spark, sf_dir)
     if key not in _GATE_PAIRS:
-        p = minhash_pairs(_docs(spark, sf_dir), threshold=0.1, hash_mode="poly").persist()
+        p = minhash_pairs(_docs(spark, sf_dir), threshold=0.1).persist()
         p.count()
         _GATE_PAIRS[key] = p
     return _GATE_PAIRS[key]
@@ -724,7 +748,7 @@ def dedup_clusters(spark, sf_dir):
     """Connected components over MinHash-LSH near-dup pairs -> cluster
     assignment (doc_id, cluster_rep) — iterative min-label propagation;
     the DuckDB twin computes the same components via a recursive-CTE
-    transitive closure over the identical pair set (portable poly hash)."""
+    transitive closure over the identical pair set."""
     from gmx.textops.dedup import dup_clusters
 
     return dup_clusters(_gate_near_dup_pairs(spark, sf_dir))
@@ -750,17 +774,12 @@ def sample_stratified(spark, sf_dir):
 
 def ann_ivf_topk(spark, sf_dir):
     """IVF approximate top-k (second scale path: inverted lists from coarse
-    centroids), gated WITH one exact-integer Lloyd training iteration (r4
-    verdict #6): the driver-gated path and the recall-bearing trained path
-    are the same code, and the DuckDB twin unrolls the iteration into CTEs
-    with bit-identical integer centroid updates.  Integer assign_mode so
-    the whole dataflow is hash-gated (production default stays the numpy
-    matmul; recall vs exact and int==float agreement asserted in tests)."""
+    centroids), gated WITH one exact-integer Lloyd training iteration: the
+    DuckDB twin unrolls the iteration into CTEs with bit-identical integer
+    centroid updates and the same exact-integer coarse assignment, so the
+    whole dataflow is hash-gated (recall vs exact asserted in tests)."""
     from gmx.textops.similarity import ann_ivf_topk as _ivf
 
     return _ivf(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        k=KNN_K,
-        assign_mode="int",
-        train_iters=1,
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=KNN_K, train_iters=1
     )

@@ -8,9 +8,10 @@ Scale shapes:
   buckets are the shuffle keys (salt-able if a bucket explodes).
 - SimHash: 64-bit sign-aggregated token hashes; near-dups share prefix
   buckets.
-All hashing is built-in JVM expressions (xxhash64 by default, or the
-portable polynomial ``hash_mode='poly'``) so results are deterministic and
-reproducible without Python in the loop.
+All hashing is the built-in JVM xxhash64, so results are deterministic and
+reproducible without Python in the loop; the DuckDB twins in gmx.oracles
+compute the same xxhash64 and gate the whole banding/bucketing/verify
+dataflow.
 """
 
 from __future__ import annotations
@@ -25,35 +26,6 @@ MINHASH_PRIME = (1 << 31) - 1
 # diagnostics: rounds the most recent _dup_clusters_star call took to
 # converge (tests assert the warm-started auto fallback beats scratch)
 _LAST_STAR_ROUNDS = 0
-
-# ``hash_mode`` on the hash-based dedup ops:
-# - "xxhash64" (default): JVM-native, fastest — the production path
-# - "poly": polynomial codepoint hash computable in plain integer SQL, so the
-#   DuckDB oracle reproduces the ENTIRE banding/bucketing/verify dataflow and
-#   the driver gate can hash-check it (the round-1 nit: xxhash64-based ops
-#   were rows-only).  Same shapes, same shuffles — only the hash primitive
-#   differs.
-
-
-def _poly_hash(col, mod: int, base: int = 1000003):
-    """fold(codepoints): (acc*base + cp) mod ``mod`` — exact twin of the
-    DuckDB list_reduce in gmx.oracles; mod must keep acc*base within int64."""
-
-    return F.aggregate(
-        F.split(col, ""),
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(
-            acc * F.lit(base).cast("long") + F.coalesce(F.ascii(c).cast("long"), F.lit(0)),
-            F.lit(mod).cast("long"),
-        ),
-    )
-
-
-def _shingle_hash(col, hash_mode: str):
-    if hash_mode == "poly":
-        return _poly_hash(col, MINHASH_PRIME)
-    return F.pmod(F.xxhash64(col), F.lit(MINHASH_PRIME).cast("long"))
-
 
 def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: (text_md5, n_docs, min_doc_id)."""
@@ -160,7 +132,6 @@ def minhash_pairs(
     bands: int = 4,
     shingle: int = 3,
     threshold: float = 0.5,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """LSH candidate generation + exact Jaccard verification.
 
@@ -182,7 +153,9 @@ def minhash_pairs(
         docs.select("doc_id", _shingles(text_col, shingle).alias("shingles"))
         .withColumn(
             "hashes",
-            F.transform("shingles", lambda s: _shingle_hash(s, hash_mode)),
+            F.transform(
+                "shingles", lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME).cast("long"))
+            ),
         )
         .withColumn(
             "sig",
@@ -201,22 +174,10 @@ def minhash_pairs(
         )
     )
 
-    if hash_mode == "poly":
-        band_keys = F.array(*[
-            F.aggregate(
-                F.slice("sig", b * rows + 1, rows),
-                F.lit(b).cast("long"),
-                lambda acc, v: F.pmod(
-                    acc * F.lit(1000003).cast("long") + v, F.lit(1 << 40).cast("long")
-                ),
-            )
-            for b in range(bands)
-        ])
-    else:
-        band_keys = F.array(*[
-            F.xxhash64(F.lit(b), *[F.element_at("sig", b * rows + r + 1) for r in range(rows)])
-            for b in range(bands)
-        ])
+    band_keys = F.array(*[
+        F.xxhash64(F.lit(b), *[F.element_at("sig", b * rows + r + 1) for r in range(rows)])
+        for b in range(bands)
+    ])
     keys = d.select("doc_id", F.explode(band_keys).alias("key"))
     return _jaccard_pairs(keys, d, threshold)
 
@@ -507,7 +468,6 @@ def simhash_pairs(
     docs: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-duplicate PAIRS: (a_id, b_id, hamming) with
     popcount(simhash_a XOR simhash_b) <= ``max_hamming``.
@@ -522,7 +482,7 @@ def simhash_pairs(
     all JVM expressions; the 8-byte simhash rides the band explode
     (join-back would move more bytes than it saves here)."""
 
-    sh = simhash_buckets(docs, text_col, hash_mode=hash_mode).select("doc_id", "simhash")
+    sh = simhash_buckets(docs, text_col).select("doc_id", "simhash")
     bands = F.array(*[
         F.lit(b << 16).cast("long")
         + F.shiftrightunsigned("simhash", 16 * b).bitwiseAND(F.lit(0xFFFF).cast("long"))
@@ -544,38 +504,22 @@ def simhash_pairs(
 
 
 def simhash_buckets(
-    docs: DataFrame, text_col: str = "text", prefix_bits: int = 16,
-    hash_mode: str = "xxhash64",
+    docs: DataFrame, text_col: str = "text", prefix_bits: int = 16
 ) -> DataFrame:
     """64-bit SimHash per doc + a prefix bucket for near-dup blocking.
 
     Bit b of the simhash is the sign of sum over tokens of (+1/-1) depending
-    on bit b of hash(token) — computed with aggregate() over the token
-    array, entirely JVM-side.  ``hash_mode='poly'`` draws bits 0-31 / 32-63
-    from two independent 32-bit codepoint polynomials (base 1000003 /
-    999983) so the DuckDB oracle reproduces the full simhash; the default
-    draws all 64 bits from xxhash64.  Returns (doc_id, simhash, bucket)."""
+    on bit b of xxhash64(token) — computed with aggregate() over the token
+    array, entirely JVM-side.  Returns (doc_id, simhash, bucket)."""
 
-    toks = F.split(F.col(text_col), " ")
-    if hash_mode == "poly":
-        def _lane(base: int):
-            # factory (not a comprehension lambda): pyspark treats a 2-arg
-            # lambda as (element, index), and late binding would alias base
-            return F.transform(toks, lambda t: _poly_hash(t, 1 << 32, base))
-
-        lanes = [_lane(1000003), _lane(999983)]
-        lane_for = lambda b: (lanes[b // 32], b % 32)
-    else:
-        th = F.transform(toks, lambda t: F.xxhash64(t))
-        lane_for = lambda b: (th, b)
+    th = F.transform(F.split(F.col(text_col), " "), lambda t: F.xxhash64(t))
 
     def bit_sum(b: int):
-        arr, bit = lane_for(b)
         return F.aggregate(
-            arr,
+            th,
             F.lit(0).cast("long"),
             lambda acc, h: acc
-            + F.when(F.shiftright(h, bit).bitwiseAND(F.lit(1).cast("long")) == 1, F.lit(1)).otherwise(F.lit(-1)),
+            + F.when(F.shiftright(h, b).bitwiseAND(F.lit(1).cast("long")) == 1, F.lit(1)).otherwise(F.lit(-1)),
         )
 
     sim = F.lit(0).cast("long")

@@ -90,6 +90,20 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.select("doc_id", guess.alias("lang_guess"))
 
 
+def _poly_hash(col, mod: int, base: int = 1000003):
+    """fold(codepoints): (acc*base + cp) mod ``mod`` — exact twin of the
+    DuckDB list_reduce in gmx.oracles; mod must keep acc*base within int64."""
+
+    return F.aggregate(
+        F.split(col, ""),
+        F.lit(0).cast("long"),
+        lambda acc, c: F.pmod(
+            acc * F.lit(base).cast("long") + F.coalesce(F.ascii(c).cast("long"), F.lit(0)),
+            F.lit(mod).cast("long"),
+        ),
+    )
+
+
 def stratified_sample(
     docs: DataFrame,
     rates_per_mille: dict[str, int] | None = None,
@@ -105,10 +119,8 @@ def stratified_sample(
     under re-partitioning, and joinable (the same doc is always in or always
     out).  Per-stratum rates are how real pipelines rebalance a corpus (e.g.
     upweight low-resource languages).  Everything is codegen'd expressions;
-    the codepoint-polynomial hash is the oracle-portable one used by the
-    dedup ops.  Returns (doc_id, lang_guess, sample_bucket)."""
-
-    from gmx.textops.dedup import _poly_hash
+    the codepoint-polynomial hash is the one :func:`rolling_fingerprint`
+    uses.  Returns (doc_id, lang_guess, sample_bucket)."""
 
     rates = {"en": 500} if rates_per_mille is None else rates_per_mille
     lang = lang_id(docs, text_col)
@@ -206,14 +218,7 @@ def rolling_fingerprint(docs: DataFrame, text_col: str = "text", mod: int = 1 <<
     fully hash-gated query.  ``mod`` is capped so acc*base + cp never
     overflows int64 (ANSI mode)."""
 
-    chars = F.split(F.col(text_col), "")
-    fp = F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(
-            acc * F.lit(1000003).cast("long") + F.coalesce(F.ascii(c).cast("long"), F.lit(0)),
-            F.lit(mod).cast("long"),
-        ),
+    fp = F.when(F.length(text_col) == 0, F.lit(0).cast("long")).otherwise(
+        _poly_hash(F.col(text_col), mod)
     )
-    fp = F.when(F.length(text_col) == 0, F.lit(0).cast("long")).otherwise(fp)
     return docs.select("doc_id", fp.alias("fingerprint"))

@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k as a broadcast join + window — exact, and
-the yardstick for any approximate path.  Scale path: LSH bucketing via
+the yardstick for any approximate path.  Scale paths: LSH bucketing via
 random-hyperplane signs (sign bits of dot products with fixed pseudo-random
-planes), which turns the all-pairs comparison into an equi-join on bucket.
+planes, plane p's sign on dimension i the parity of xxhash64(p, i)), which
+turns the all-pairs comparison into an equi-join on bucket, and an IVF
+index whose coarse assignment is exact integer arithmetic.
 
 Cross-engine determinism: embeddings are quantized to integers
 (floor(x*1000 + 0.5), exact for float32 inputs), so dot products and norms
 are exact integer arithmetic and the final score sqrt/divide are correctly
 rounded IEEE ops — bit-identical between Spark and the DuckDB oracle, which
-makes top-k ranking (score desc, id asc) reproducible.
+makes top-k ranking (score desc, id asc) reproducible.  The DuckDB twins
+compute the same xxhash64 planes and the same IVF assignment, so the oracle
+gates check the production path of every operator here.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -143,7 +149,6 @@ def embedding_near_dup_lsh(
     vec_col: str = "embedding",
     bands: int = 8,
     band_bits: int = 8,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs via multi-band hyperplane LSH blocking — the
     sub-quadratic scale path: ``bands`` independent signatures of
@@ -162,7 +167,7 @@ def embedding_near_dup_lsh(
     base = embeddings.select(
         F.col(id_col).alias("vid"), q.alias("v")
     ).withColumn("nrm", _dot(F.col("v"), F.col("v")))
-    keys = _band_keys(F.col("v"), bands, band_bits, hash_mode)
+    keys = _band_keys(F.col("v"), bands, band_bits)
     exploded = base.select("vid", "v", "nrm", F.explode(keys).alias("band_key"))
     a, b = exploded.alias("a"), exploded.alias("b")
     cand = (
@@ -193,7 +198,6 @@ def ann_lsh_topk(
     band_bits: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-k via multi-band (OR-amplified) hyperplane LSH:
     corpus and queries each explode into ``bands`` band keys; a neighbor is a
@@ -220,7 +224,7 @@ def ann_lsh_topk(
     w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
 
     keys = base.select(
-        "nid", F.explode(_band_keys(F.col("nvec"), bands, band_bits, hash_mode)).alias("band_key")
+        "nid", F.explode(_band_keys(F.col("nvec"), bands, band_bits)).alias("band_key")
     )
     qkeys = keys.filter(F.pmod(F.col("nid"), F.lit(query_mod)) == 0).select(
         F.col("nid").alias("qid"), F.col("band_key").alias("qkey")
@@ -256,7 +260,6 @@ def ann_ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_mode: str = "float",
     train_iters: int = 0,
 ) -> DataFrame:
     """Approximate top-k via an inverted-file (IVF) index — the second scale
@@ -266,35 +269,25 @@ def ann_ivf_topk(
     a corpus-side fan-out of 1 (each vector lives in exactly one list — no
     candidate dedup needed, unlike multi-band LSH).
 
+    Coarse assignment ranks centroids by sign(dot) * dot^2 / max(|c|^2, 1)
+    over the QUANTIZED integer vectors (the monotone image of cosine — |v|
+    cancels across centroids): one exact int64 matmul per Arrow batch
+    (:func:`_probes_udf`, vectorized) plus a
+    correctly-rounded IEEE divide, ties broken on centroid index.  The
+    DuckDB twin computes the same numbers, so the whole IVF dataflow is
+    hash-gated.
+
     Centroids start as a deterministic stride sample of the corpus (a
     driver-side collect of ``lists`` rows); ``train_iters`` > 0 refines
     them with that many distributed Lloyd iterations (spherical k-means:
-    Arrow-batched nearest-centroid assignment -> posexplode ->
-    per-(list, dim) mean — one matmul stage + one map-side-combined agg per
-    iteration, with only lists x dim aggregate rows ever collected).
-    Training balances the inverted lists on clustered real embeddings, so
-    a probe visits fewer off-target lists; recall >= the untrained baseline
-    is asserted in tests ON BOTH MODES.  In float mode, assignment is an
-    Arrow-batched pandas UDF doing one numpy matmul per batch — vectorized,
-    no per-row Python — and trained centroids are float means.  In int mode
-    (r4 verdict #6) the SAME Lloyd loop runs with the exact-integer
-    quantizer: per-(list, dim) SUM/COUNT are exact BIGINTs and each trained
-    coordinate is floor(double(sum)/count + 0.5) — one correctly-rounded
-    IEEE divide on exact inputs — so the trained centroids, and therefore
-    the whole trained dataflow, stay bit-identical in DuckDB and the driver
-    gate runs WITH training.  Recall vs the exact ``cosine_topk`` is
-    asserted in tests.
-
-    ``assign_mode`` (like the dedup ops' hash_mode):
-    - "float" (default, production): numpy matmul over unit-normalized
-      float64 — fast, but the summation order is not reproducible in SQL.
-    - "int": coarse assignment ranks centroids by
-      sign(dot) * dot^2 / |c|^2 over the QUANTIZED integer vectors (the
-      monotone image of cosine — |v| cancels across centroids), evaluated as
-      one exact-integer dot per centroid plus a correctly-rounded IEEE
-      divide; ties break on centroid index.  Bit-identical in DuckDB, so
-      the whole IVF dataflow is oracle-gatable.  Both modes pick the same
-      lists except when two centroids tie to double precision."""
+    batched nearest-centroid assignment -> posexplode -> per-(list, dim)
+    SUM/COUNT — one matmul stage + one map-side-combined agg per iteration,
+    with only lists x dim aggregate rows ever collected).  The sums are
+    exact BIGINTs and each trained coordinate is floor(double(sum)/count +
+    0.5) — one correctly-rounded divide on exact inputs — so the trained
+    centroids stay bit-identical in DuckDB.  Training balances the inverted
+    lists on clustered real embeddings, so a probe visits fewer off-target
+    lists; recall >= the untrained baseline is asserted in tests."""
 
     from pyspark.sql import Window
 
@@ -320,101 +313,19 @@ def ann_ivf_topk(
             F.lit(1).cast("int").alias("rank"),
             F.col("nid").alias("neighbor_id"),
         ).limit(0)
-    if assign_mode == "int":
-        import math
-
-        def _int_probes_expr(cent_vecs, n_take):
-            ranked = []
-            for i, c in enumerate(cent_vecs):
-                nc = sum(x * x for x in c) or 1
-                cdot = F.aggregate(
-                    F.zip_with(
-                        F.col("nvec"),
-                        F.array(*[F.lit(x).cast("long") for x in c]),
-                        lambda a, b: a * b,
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                # sign(dot) * dot^2 / |c|^2: exact integer numerator (bounded
-                # by (dim * QUANT^2)^2 << 2^63), one IEEE divide; negated so
-                # the lexicographic struct sort is (best-first, then centroid
-                # index)
-                neg = -(
-                    F.signum(cdot.cast("double"))
-                    * (cdot * cdot).cast("double")
-                    / F.lit(float(nc))
-                )
-                ranked.append(F.struct(neg.alias("nis"), F.lit(i).alias("idx")))
-            return F.transform(
-                F.slice(F.array_sort(F.array(*ranked)), 1, n_take), lambda s: s["idx"]
-            )
-
-        cent_vecs = [[int(x) for x in r["nvec"]] for r in cents]
-        # Lloyd refinement stays exact-integer reproducible (r4 verdict #6 —
-        # the gated path and the recall-bearing path are now the same code):
-        # assignment uses the integer quantizer above; the per-(list, dim)
-        # SUM/COUNT are exact BIGINTs, and the new centroid coordinate is
-        # floor(double(sum)/count + 0.5) — a single correctly-rounded IEEE
-        # divide on exact inputs, so DuckDB's twin computes bit-identical
-        # trained centroids.  Lists that captured no vectors keep their seed.
-        for _ in range(train_iters):
-            stats = (
-                base.withColumn("lid", _int_probes_expr(cent_vecs, 1)[0])
-                .select("lid", F.posexplode("nvec").alias("pos", "val"))
-                .groupBy("lid", "pos")
-                .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-                .collect()
-            )
-            new_vecs = [list(c) for c in cent_vecs]
-            for r in stats:
-                new_vecs[r["lid"]][r["pos"]] = int(
-                    math.floor(float(r["s"]) / float(r["c"]) + 0.5)
-                )
-            cent_vecs = new_vecs
-        assigned = base.withColumn("probes", _int_probes_expr(cent_vecs, nprobe))
-    else:
-        C = np.asarray([r["nvec"] for r in cents], dtype=np.float64)
-        def _nearest_list_udf(Cn_cap):
-            # factory (not a default arg): pandas_udf infers types from the
-            # signature, so the captured centroid matrix must ride a closure
-            @F.pandas_udf("int")
-            def nearest_list(vecs: pd.Series) -> pd.Series:
-                if len(vecs) == 0:
-                    return pd.Series([], dtype="int32")
-                V = np.stack(vecs.to_numpy()).astype(np.float64)
-                Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-                return pd.Series(np.argmax(Vn @ Cn_cap.T, axis=1).astype(np.int32))
-
-            return nearest_list
-
-        for _ in range(train_iters):
-            Cn_it = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-            nearest_list = _nearest_list_udf(Cn_it)
-            # per-(list, dim) means: lists x dim aggregate rows — tiny collect
-            sums = (
-                base.withColumn("lid", nearest_list("nvec"))
-                .select("lid", F.posexplode("nvec").alias("pos", "val"))
-                .groupBy("lid", "pos")
-                .agg(F.avg("val").alias("mean"))
-                .collect()
-            )
-            newC = C.copy()  # lists that captured no vectors keep their seed
-            for r in sums:
-                newC[r["lid"], r["pos"]] = r["mean"]
-            C = newC
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-        @F.pandas_udf("array<int>")
-        def probe_lists(vecs: pd.Series) -> pd.Series:
-            if len(vecs) == 0:  # empty Arrow batch: np.stack would raise
-                return pd.Series([], dtype=object)
-            V = np.stack(vecs.to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            order = np.argsort(-(Vn @ Cn.T), kind="stable", axis=1)[:, :nprobe]
-            return pd.Series([row.astype(np.int32).tolist() for row in order])
-
-        assigned = base.withColumn("probes", probe_lists("nvec"))
+    C = np.asarray([r["nvec"] for r in cents], dtype=np.int64)
+    for _ in range(train_iters):
+        stats = (
+            base.withColumn("lid", _probes_udf(C, 1)("nvec")[0])
+            .select("lid", F.posexplode("nvec").alias("pos", "val"))
+            .groupBy("lid", "pos")
+            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
+            .collect()
+        )
+        C = C.copy()  # lists that captured no vectors keep their seed
+        for r in stats:
+            C[r["lid"], r["pos"]] = math.floor(float(r["s"]) / float(r["c"]) + 0.5)
+    assigned = base.withColumn("probes", _probes_udf(C, nprobe)("nvec"))
     corpus = assigned.withColumn("list_id", F.col("probes")[0]).drop("probes")
     queries = (
         assigned.filter(F.pmod(F.col("nid"), F.lit(query_mod)) == 0)
@@ -438,34 +349,41 @@ def ann_ivf_topk(
     )
 
 
-# xor-multiply mixing constants for the portable plane family (hash_mode
-# 'poly'): sign(p, dim) = bit 8 of (p*73856093 XOR dim*19349663) — exact
-# integer arithmetic DuckDB reproduces, so LSH candidate generation can be
-# oracle-gated end to end
-_PLANE_MIX_P = 73856093
-_PLANE_MIX_I = 19349663
+def _probes_udf(C: np.ndarray, n_take: int):
+    """Arrow-batched UDF: the indexes of the ``n_take`` centroids (rows of
+    the int64 matrix ``C``) nearest each quantized vector, best first, by
+    sign(dot) * dot^2 / max(|c|^2, 1) with ties on centroid index.  dot is
+    exact int64 (bounded by dim * QUANT^2), so the one float divide per
+    (vector, centroid) is correctly rounded and matches the DuckDB twin."""
+
+    cn = np.maximum((C * C).sum(axis=1), 1).astype(np.float64)
+
+    # a closure, not a default argument: pandas_udf infers types from the
+    # signature
+    @F.pandas_udf("array<int>")
+    def probes(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:  # empty Arrow batch: np.stack would raise
+            return pd.Series([], dtype=object)
+        d = np.stack(vecs.to_numpy()).astype(np.int64) @ C.T
+        neg = -(np.sign(d) * (d * d).astype(np.float64) / cn)
+        order = np.argsort(neg, kind="stable", axis=1)[:, :n_take]
+        return pd.Series([row.astype(np.int32).tolist() for row in order])
+
+    return probes
 
 
-def _plane_dot(qcol, p: int, hash_mode: str = "xxhash64"):
+def _plane_dot(qcol, p: int):
     """Dot with pseudo-random +/-1 hyperplane p: component (p, dim) sign
-    from xxhash64(p, dim) parity (default, JVM-native) or the portable
-    xor-multiply bit (``hash_mode='poly'``); the whole thing is one JVM
-    aggregate over the quantized array."""
+    from xxhash64(p, dim) parity; the whole thing is one JVM aggregate over
+    the quantized array."""
 
     idx = F.sequence(F.lit(0), F.size(qcol) - 1)
-    if hash_mode == "poly":
-        def sign(x, i):
-            mixed = F.lit(p * _PLANE_MIX_P).cast("long").bitwiseXOR(
-                i.cast("long") * F.lit(_PLANE_MIX_I).cast("long")
-            )
-            return F.when(
-                F.shiftright(mixed, 8).bitwiseAND(F.lit(1).cast("long")) == 0, x
-            ).otherwise(-x)
-    else:
-        def sign(x, i):
-            return F.when(
-                F.pmod(F.xxhash64(F.lit(p), i), F.lit(2)) == 0, x
-            ).otherwise(-x)
+
+    def sign(x, i):
+        return F.when(
+            F.pmod(F.xxhash64(F.lit(p), i), F.lit(2)) == 0, x
+        ).otherwise(-x)
+
     return F.aggregate(
         F.zip_with(qcol, idx, sign),
         F.lit(0).cast("long"),
@@ -473,7 +391,7 @@ def _plane_dot(qcol, p: int, hash_mode: str = "xxhash64"):
     )
 
 
-def _band_keys(qcol, bands: int, band_bits: int, hash_mode: str = "xxhash64"):
+def _band_keys(qcol, bands: int, band_bits: int):
     """Array of ``bands`` OR-amplified LSH keys over a quantized vector:
     band b packs sign bits of planes [b*band_bits, (b+1)*band_bits) plus the
     band index (so keys never collide across bands)."""
@@ -484,7 +402,7 @@ def _band_keys(qcol, bands: int, band_bits: int, hash_mode: str = "xxhash64"):
         for r in range(band_bits):
             p = b * band_bits + r
             sig = sig + F.when(
-                _plane_dot(qcol, p, hash_mode) > 0, F.lit(1 << r).cast("long")
+                _plane_dot(qcol, p) > 0, F.lit(1 << r).cast("long")
             ).otherwise(F.lit(0).cast("long"))
         keys.append(sig)
     return F.array(*keys)

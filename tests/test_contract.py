@@ -25,10 +25,49 @@ def test_oracle_keys_subset_of_queries():
     assert set(entry.oracle_sql()) == set(entry.queries())
 
 
-def test_oracle_sql_is_runnable_duckdb(duck):
-    for name, sql in entry.oracle_sql().items():
-        n = duck.sql(f"SELECT count(*) FROM ({sql})").fetchone()[0]
-        assert n >= 0, name
+def test_xxhash64_twin_matches_spark(spark, duck):
+    """The oracles' xxhash64 SQL equals Spark's xxhash64 on seeded strings
+    of UTF-8 byte length 0-100 (multi-byte characters included, so every
+    tail path of XXH64 and the 32-byte stripes run) and on chained
+    (int, long, long) rows at the type extremes."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from gmx.oracles import xxhash64_sql
+
+    rng = random.Random(14)
+    alphabet = "ab z09é日本語"
+    strs = [""]
+    for n in range(101):
+        s = ""
+        while len((s + "日").encode()) <= n:
+            s += rng.choice(alphabet)
+        strs.append(s + "a" * (n - len(s.encode())))
+    assert sorted({len(s.encode()) for s in strs}) == list(range(101))
+    want = spark.createDataFrame([(s,) for s in strs], "s string").select(
+        "s", F.xxhash64("s").alias("h")
+    )
+    got = duck.sql(
+        f"SELECT s, {xxhash64_sql(('s', 'string'))} AS h FROM (SELECT unnest($1) AS s)",
+        params=[strs],
+    ).fetchall()
+    assert dict(got) == {r.s: r.h for r in want.collect()}
+
+    i32, i64 = (-(2**31), 2**31 - 1), (-(2**63), 2**63 - 1)
+    rows = [(i32[0], i64[0], i64[1]), (i32[1], 0, -1), (0, 0, 0)] + [
+        (rng.randint(*i32), rng.randint(*i64), rng.randint(*i64)) for _ in range(100)
+    ]
+    want = spark.createDataFrame(rows, "a int, b long, c long").select(
+        "a", "b", "c", F.xxhash64("a", "b", "c").alias("h")
+    )
+    hashed = xxhash64_sql(("a", "int"), ("b", "long"), ("c", "long"))
+    got = duck.sql(
+        f"SELECT a, b, c, {hashed} FROM (SELECT r[1]::INT AS a, r[2]::BIGINT AS b, "
+        "r[3]::BIGINT AS c FROM (SELECT unnest($1) AS r))",
+        params=[[list(r) for r in rows]],
+    ).fetchall()
+    assert set(got) == {tuple(r) for r in want.collect()}
 
 
 def test_gate_memos_scoped_to_application(spark, sf_dir, monkeypatch):
@@ -53,6 +92,26 @@ def test_gate_memos_scoped_to_application(spark, sf_dir, monkeypatch):
     pairs = queries._gate_near_dup_pairs(spark, sf_dir)
     assert pairs != "stale" and pairs.count() == 3
     pairs.unpersist()
+
+
+def test_gate_index_rebuild_leaves_no_directory(spark, sf_dir, tmp_path, monkeypatch):
+    """A rebuilt gate index overwrites its own files: the process keeps ONE
+    gmx_gate_* directory, however often an index is rebuilt."""
+    import tempfile
+
+    from gmx import queries
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    queries._gate_root.cache_clear()
+    own = f"{sf_dir}/"  # same data, a table of its own: other tests' stay put
+    try:
+        for _ in range(2):
+            monkeypatch.setattr(queries, "_GATE_INDEXES", set())
+            table = queries._gate_index(spark, own, "cell")
+            assert spark.table(table).count() > 0
+        assert [str(p) for p in tmp_path.glob("gmx_gate_*")] == [queries._gate_root()]
+    finally:
+        queries._gate_root.cache_clear()
 
 
 def _assert_matches_oracle(duck, df, name):
